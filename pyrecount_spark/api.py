@@ -17,6 +17,9 @@ Differences from the reference, by design (SURVEY §1.3):
   tests/test_accessor.py:11);
 - count matrices come back long ``(feature_id, sample_id, count)``;
   ``operators.matrix.pivot_wide`` produces the wide view on demand;
+- counts are read string-first and ``count`` is cast to long after the melt;
+- a ``Project`` memoizes its project -> samples map (one collect) and its
+  metadata frame, shared by every load and both scalers;
 - junction matrices stay COO — ``(mm_coo, coords)``, never densified;
 - a failed read raises; no silent ``None``/empty fallbacks
   (accessor.py:327-335 quirks intentionally not replicated).
@@ -31,7 +34,8 @@ from __future__ import annotations
 
 import glob as _glob
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,6 +46,7 @@ from pyrecount_spark.operators import matrix as M
 from pyrecount_spark.operators.relational import align_union, multi_join
 from pyrecount_spark.sources.catalog import Annotation, Dtype, Tags
 from pyrecount_spark.sources.readers import (
+    matrix_market_dims,
     read_gtf,
     read_id_list,
     read_matrix_market_coo,
@@ -113,16 +118,22 @@ class Project:
     dbase: str
     annotation: Annotation | None = None
     jxn_format: str = "all"
-    _md_cache: DataFrame | None = field(default=None, repr=False)
 
     # ---- derived coordinates (A3, accessor.py:56-57) ----
+    @cached_property
+    def samples_by_project(self) -> dict[str, list[str]]:
+        """Project -> sorted distinct samples: the one driver collect every
+        per-project loop below iterates."""
+        grouped = self.metadata.groupBy("project").agg(F.sort_array(F.collect_set("external_id")))
+        return dict(sorted((pid, list(samples)) for pid, samples in grouped.collect()))
+
     @property
     def project_ids(self) -> list[str]:
-        return [r[0] for r in self.metadata.select("project").distinct().collect()]
+        return list(self.samples_by_project)
 
     @property
     def samples(self) -> list[str]:
-        return [r[0] for r in self.metadata.select("external_id").distinct().collect()]
+        return sorted({s for ss in self.samples_by_project.values() for s in ss})
 
     # ---- reference-parity ingest (accessor.py:76-87) ----
     def cache(
@@ -143,14 +154,7 @@ class Project:
         if isinstance(dtypes, Dtype):
             dtypes = (dtypes,)
         rows = []
-        for pid in self.project_ids:
-            samples = [
-                r[0]
-                for r in self.metadata.filter(F.col("project") == pid)
-                .select("external_id")
-                .distinct()
-                .collect()
-            ]
+        for pid, samples in self.samples_by_project.items():
             loc = ProjectLocator(
                 root=root,
                 organism=organism,
@@ -182,7 +186,7 @@ class Project:
     # ---- loader registry (Q10, accessor.py:63-74) ----
     def load(self, dtype: Dtype):
         loader = {
-            Dtype.METADATA: self._load_metadata,
+            Dtype.METADATA: self.load_metadata,
             Dtype.GENE: self._load_counts,
             Dtype.EXON: self._load_exon,
             Dtype.JXN: self._load_junctions,
@@ -195,13 +199,17 @@ class Project:
     def _project_dir(self, dtype: Dtype, project_id: str) -> str:
         return os.path.join(self.lake_dir, self.dbase, dtype.value, project_id)
 
-    # ---- Q2: per-tag join -> cross-project align-union ----
-    def _load_metadata(self) -> DataFrame:
+    # ---- Q2 + Q11: per-tag join -> cross-project align-union, memoized ----
+    def load_metadata(self) -> DataFrame:
+        return self._project_metadata
+
+    @cached_property
+    def _project_metadata(self) -> DataFrame:
         tags = [self.dbase] + [t.value for t in Tags]
         if self.dbase in ("gtex", "tcga"):  # accessor.py:288-289
             tags.remove(Tags.RECOUNT_PRED.value)
         per_project = []
-        for pid in self.project_ids:
+        for pid, samples in self.samples_by_project.items():
             pdir = self._project_dir(Dtype.METADATA, pid)
             frames = []
             for tag in tags:
@@ -211,20 +219,13 @@ class Project:
             if not frames:
                 raise FileNotFoundError(f"no metadata files in {pdir}")
             joined = multi_join(frames, on=METADATA_JOIN_KEY, how="inner")
-            samples = [
-                r[0]
-                for r in self.metadata.filter(F.col("project") == pid)
-                .select("external_id")
-                .distinct()
-                .collect()
-            ]
             per_project.append(joined.filter(F.col("external_id").isin(samples)))
         out = align_union(per_project)
         if "organism" in out.columns:
             out = out.withColumn(
                 "organism", value_remap(F.col("organism"), ORGANISM_REMAP)
             )
-        return out.distinct()
+        return out.distinct().cache()
 
     # ---- Q3: shared GTF + per-project counts -> long union ----
     def _load_counts(self, dtype: Dtype) -> tuple[DataFrame, DataFrame]:
@@ -238,7 +239,7 @@ class Project:
         annotation = with_gtf_attributes(read_gtf(self.spark, anno_hits[0]))
 
         longs = []
-        for pid in self.project_ids:
+        for pid, samples in self.samples_by_project.items():
             hits = sorted(
                 _glob.glob(
                     os.path.join(
@@ -250,27 +251,19 @@ class Project:
                 raise FileNotFoundError(f"no {dtype.value} counts for {pid}")
             wide = read_tsv_counts(self.spark, hits)
             feature_col = wide.columns[0]
-            samples = [
-                r[0]
-                for r in self.metadata.filter(F.col("project") == pid)
-                .select("external_id")
-                .distinct()
-                .collect()
-            ]
-            keep = [c for c in wide.columns[1:] if c in samples]
-            missing = set(samples) - set(keep)
+            missing = set(samples) - set(wide.columns[1:])
             if missing:  # P1 raise semantics (accessor.py:276-278)
                 raise KeyError(f"samples missing from counts for {pid}: {sorted(missing)}")
             long = M.melt(
-                wide.select(feature_col, *keep),
+                wide.select(feature_col, *samples),
                 [feature_col],
-                keep,
+                samples,
                 var_name="sample_id",
                 value_name="count",
             ).withColumnRenamed(feature_col, "feature_id")
             longs.append(long)
         # J2 align-merge degenerates to a union in long form (SURVEY §2.3)
-        return annotation, align_union(longs)
+        return annotation, align_union(longs).withColumn("count", F.col("count").cast("long"))
 
     # ---- Q4: exon = counts + composite-key split (F2) + reorder (P2) ----
     def _load_exon(self, dtype: Dtype) -> tuple[DataFrame, DataFrame]:
@@ -298,8 +291,6 @@ class Project:
             if not (id_hits and mm_hits and rr_hits):
                 raise FileNotFoundError(f"incomplete junction triplet in {pdir}")
             ids = read_id_list(self.spark, id_hits[0])
-            from pyrecount_spark.sources.readers import matrix_market_dims
-
             _, n_cols, _ = matrix_market_dims(self.spark, mm_hits[0])
             n_ids = ids.count()
             if n_cols != n_ids:  # accessor.py:434-435, loud
@@ -327,12 +318,6 @@ class Project:
             ):
                 rows.append((pid, "file://" + path, path))
         return self.spark.createDataFrame(rows, ["project_id", "url", "path"])
-
-    # ---- Q11: memoized project metadata ----
-    def load_metadata(self) -> DataFrame:
-        if self._md_cache is None:
-            self._md_cache = self._load_metadata().cache()
-        return self._md_cache
 
     # ---- Q7/Q8: scaling as broadcast joins (no dict round-trip) ----
     def scale_mapped_reads(

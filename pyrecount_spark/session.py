@@ -20,10 +20,9 @@ The settings below are the scale story, not just local conveniences:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
-
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
 def get_spark(
@@ -35,15 +34,13 @@ def get_spark(
     """Create (or get) a SparkSession with scale-appropriate defaults.
 
     On a real cluster, ``master`` comes from spark-submit; locally we default
-    to ``local[$SPARK_GRAFT_CPUS]``.
+    to ``local[$SPARK_GRAFT_CPUS]``, or one thread per CPU this process may
+    run on. The same count is the default shuffle-partition number.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     builder = (
         SparkSession.builder.appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -146,8 +143,8 @@ def _ship_package(spark: SparkSession) -> None:
                     zf.write(py, f"pyrecount_spark/{py.relative_to(pkg_dir)}")
             tmp.replace(zip_path)
         spark.sparkContext.addPyFile(str(zip_path))
-    except Exception:  # noqa: BLE001 - best-effort; self-contained closures still work
-        pass
+    except Exception as e:  # noqa: BLE001 - best-effort; self-contained closures still work
+        warnings.warn(f"pyrecount_spark not shipped to executors: {e!r}", stacklevel=2)
 
 
 def read_events(spark: SparkSession, sf_dir: str):

@@ -13,7 +13,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
-    IntegerType,
     LongType,
     StringType,
     StructField,
@@ -31,16 +30,12 @@ def read_tsv_strings(spark: SparkSession, paths: str | Sequence[str]) -> DataFra
     return spark.read.options(sep="\t", header=True, inferSchema=False).csv(paths)
 
 
-def read_tsv_counts(
-    spark: SparkSession, paths: str | Sequence[str], schema: StructType | None = None
-) -> DataFrame:
+def read_tsv_counts(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
     """S8 (accessor.py:261-265): counts TSV, ``#`` comment rows skipped.
-    Pass an explicit schema at scale — inference runs an extra full scan."""
+    String-first like ``read_tsv_strings`` (no inference scan): callers cast
+    the count column after the melt."""
     paths = [paths] if isinstance(paths, str) else list(paths)
-    reader = spark.read.options(sep="\t", header=True, comment="#")
-    if schema is not None:
-        return reader.schema(schema).csv(paths)
-    return reader.option("inferSchema", True).csv(paths)
+    return spark.read.options(sep="\t", header=True, inferSchema=False, comment="#").csv(paths)
 
 
 GTF_SCHEMA = StructType(
@@ -97,7 +92,9 @@ def read_matrix_market_coo(spark: SparkSession, path: str) -> DataFrame:
     return body.select(
         parts.getItem(0).cast("long").alias("row_idx"),
         parts.getItem(1).cast("long").alias("col_idx"),
-        F.coalesce(parts.getItem(2).cast("double"), F.lit(1.0)).alias("value"),
+        # pattern matrices have no value field; get() yields NULL where an
+        # index read would raise under ANSI mode
+        F.coalesce(F.get(parts, 2).cast("double"), F.lit(1.0)).alias("value"),
     )
 
 

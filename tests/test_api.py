@@ -12,6 +12,7 @@ import textwrap
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from pyrecount_spark.api import Metadata, Project
 from pyrecount_spark.operators.matrix import pivot_wide
@@ -165,17 +166,35 @@ def test_project_metadata_join_and_union(project):
     assert set(rows) == {"s1", "s2", "s3"}
     assert rows["s1"].pred == "x" and rows["s1"].seq_stat == "ok"
     assert rows["s1"].project == "P1" and rows["s3"].project == "P2"
+    # one memoized path serves the loader registry and both scalers
+    assert md is project.load_metadata()
 
 
 def test_gene_load_long_and_wide_view(project):
     anno, counts = project.load(Dtype.GENE)
     assert anno.filter(F.col("gene_name") == "G_ONE").count() == 1
+    assert counts.schema["count"].dataType == LongType()  # string-first, cast after melt
     got = {(r.feature_id, r.sample_id): r["count"] for r in counts.collect()}
     assert got[("g1", "s1")] == 10 and got[("g2", "s3")] == 7
     assert ("g3", "s3") in got and ("g3", "s1") not in got
     wide = pivot_wide(counts, "feature_id", "sample_id", "count", ["s1", "s2", "s3"])
     g2 = {r.feature_id: (r.s1, r.s2, r.s3) for r in wide.collect()}["g2"]
     assert g2 == (20, 200, 7)  # align-merge semantics in long form
+
+
+def test_gene_load_sample_absent_from_counts_raises(spark, lake, catalog_df):
+    """A catalog sample missing from the gene_sums header makes load() itself
+    raise, so no counts frame with a silently dropped sample is returned."""
+    extra = spark.createDataFrame([("r9", "s9", "st2", "P2", "human")], catalog_df.columns)
+    proj = Project(
+        spark,
+        metadata=catalog_df.filter(F.col("project") == "P2").unionByName(extra),
+        lake_dir=lake,
+        dbase="sra",
+        annotation=Annotation.GENCODE_V29,
+    )
+    with pytest.raises(KeyError, match=r"P2.*s9"):
+        proj.load(Dtype.GENE)
 
 
 @pytest.fixture(scope="module")

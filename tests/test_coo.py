@@ -7,6 +7,7 @@ an anti-join orphan check.
 
 from __future__ import annotations
 
+import gzip
 import textwrap
 
 import pytest
@@ -51,6 +52,16 @@ def test_coo_parse(spark, mm_path):
     coo = read_matrix_market_coo(spark, mm_path)
     rows = {(r.row_idx, r.col_idx): r.value for r in coo.collect()}
     assert rows == {(1, 1): 7.0, (2, 1): 3.0, (2, 3): 1.0, (4, 2): 9.0, (3, 3): 2.0}
+
+
+def test_coo_parse_gz_pattern(spark, tmp_path):
+    """recount3 ships junction matrices as ``MM.gz``; pattern entries (no
+    value column) read as 1.0."""
+    p = tmp_path / "p.mtx.gz"
+    with gzip.open(p, "wt") as fh:
+        fh.write("%%MatrixMarket matrix coordinate pattern general\n2 2 2\n1 2\n2 1\n")
+    coo = read_matrix_market_coo(spark, str(p))
+    assert {(r.row_idx, r.col_idx): r.value for r in coo.collect()} == {(1, 2): 1.0, (2, 1): 1.0}
 
 
 def test_mm_dims(spark, mm_path):
