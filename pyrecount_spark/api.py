@@ -17,12 +17,15 @@ Differences from the reference, by design (SURVEY §1.3):
   tests/test_accessor.py:11);
 - count matrices come back long ``(feature_id, sample_id, count)``;
   ``operators.matrix.pivot_wide`` produces the wide view on demand;
-- counts are read string-first and ``count`` is cast to long after the melt;
+- every TSV is read string-first with its header taken on the driver, so
+  loads start no Spark job; ``count`` is cast to long after the melt;
+- each metadata tag is read once across projects (drift unions by name);
 - a ``Project`` memoizes its project -> samples map (one collect) and its
   metadata frame, shared by every load and both scalers;
 - junction matrices stay COO — ``(mm_coo, coords)``, never densified;
 - a failed read raises; no silent ``None``/empty fallbacks
-  (accessor.py:327-335 quirks intentionally not replicated).
+  (accessor.py:327-335 quirks intentionally not replicated); a missing
+  metadata tag, counts or junction file raises naming its project.
 
 File layout consumed (mirrors the reference's cache tree, FIXTURES.md):
 ``{lake}/{dbase}/{dtype}/{project}/<files>`` with the reference's file
@@ -50,7 +53,6 @@ from pyrecount_spark.sources.readers import (
     read_gtf,
     read_id_list,
     read_matrix_market_coo,
-    read_tsv_counts,
     read_tsv_strings,
 )
 
@@ -98,8 +100,7 @@ class Metadata:
             raise FileNotFoundError(
                 f"no catalog files under {self.lake_dir}/*/metadata/"
             )
-        frames = [read_tsv_strings(self.spark, p) for p in paths]
-        out = align_union(frames)
+        out = read_tsv_strings(self.spark, paths)
         if "organism" in out.columns:
             out = out.withColumn(
                 "organism", value_remap(F.col("organism"), ORGANISM_REMAP)
@@ -123,7 +124,7 @@ class Project:
     @cached_property
     def samples_by_project(self) -> dict[str, list[str]]:
         """Project -> sorted distinct samples: the one driver collect every
-        per-project loop below iterates."""
+        per-project lookup below iterates."""
         grouped = self.metadata.groupBy("project").agg(F.sort_array(F.collect_set("external_id")))
         return dict(sorted((pid, list(samples)) for pid, samples in grouped.collect()))
 
@@ -199,7 +200,19 @@ class Project:
     def _project_dir(self, dtype: Dtype, project_id: str) -> str:
         return os.path.join(self.lake_dir, self.dbase, dtype.value, project_id)
 
-    # ---- Q2 + Q11: per-tag join -> cross-project align-union, memoized ----
+    def _project_files(self, dtype: Dtype, pattern: str) -> dict[str, list[str]]:
+        """Project -> its sorted files matching ``pattern``; raises naming
+        every selected project with no match."""
+        hits = {
+            pid: sorted(_glob.glob(os.path.join(self._project_dir(dtype, pid), pattern)))
+            for pid in self.samples_by_project
+        }
+        missing = [pid for pid, files in hits.items() if not files]
+        if missing:
+            raise FileNotFoundError(f"no {dtype.value} files matching {pattern!r} for {missing}")
+        return hits
+
+    # ---- Q2 + Q11: one cross-project read per tag -> join, memoized ----
     def load_metadata(self) -> DataFrame:
         return self._project_metadata
 
@@ -208,19 +221,15 @@ class Project:
         tags = [self.dbase] + [t.value for t in Tags]
         if self.dbase in ("gtex", "tcga"):  # accessor.py:288-289
             tags.remove(Tags.RECOUNT_PRED.value)
-        per_project = []
-        for pid, samples in self.samples_by_project.items():
-            pdir = self._project_dir(Dtype.METADATA, pid)
-            frames = []
-            for tag in tags:
-                hits = sorted(_glob.glob(os.path.join(pdir, f"*.{tag}.*")))
-                if hits:
-                    frames.append(read_tsv_strings(self.spark, hits))
-            if not frames:
-                raise FileNotFoundError(f"no metadata files in {pdir}")
-            joined = multi_join(frames, on=METADATA_JOIN_KEY, how="inner")
-            per_project.append(joined.filter(F.col("external_id").isin(samples)))
-        out = align_union(per_project)
+        frames = [
+            read_tsv_strings(
+                self.spark, sum(self._project_files(Dtype.METADATA, f"*.{tag}.*").values(), [])
+            )
+            for tag in tags
+        ]
+        out = multi_join(frames, on=METADATA_JOIN_KEY, how="inner").filter(
+            F.col("external_id").isin(self.samples)
+        )
         if "organism" in out.columns:
             out = out.withColumn(
                 "organism", value_remap(F.col("organism"), ORGANISM_REMAP)
@@ -239,17 +248,9 @@ class Project:
         annotation = with_gtf_attributes(read_gtf(self.spark, anno_hits[0]))
 
         longs = []
-        for pid, samples in self.samples_by_project.items():
-            hits = sorted(
-                _glob.glob(
-                    os.path.join(
-                        self._project_dir(dtype, pid), f"*{self.annotation.value}*"
-                    )
-                )
-            )
-            if not hits:
-                raise FileNotFoundError(f"no {dtype.value} counts for {pid}")
-            wide = read_tsv_counts(self.spark, hits)
+        for pid, files in self._project_files(dtype, f"*{self.annotation.value}*").items():
+            samples = self.samples_by_project[pid]
+            wide = read_tsv_strings(self.spark, files)
             feature_col = wide.columns[0]
             missing = set(samples) - set(wide.columns[1:])
             if missing:  # P1 raise semantics (accessor.py:276-278)
@@ -282,28 +283,24 @@ class Project:
 
     # ---- Q5: junctions stay COO; width check vs the id dim table ----
     def _load_junctions(self) -> tuple[DataFrame, DataFrame]:
+        id_files, mm_files, rr_files = (
+            self._project_files(Dtype.JXN, pattern) for pattern in ("*ID*", "*MM*", "*RR*")
+        )
         coos, coords = [], []
         for pid in self.project_ids:
-            pdir = self._project_dir(Dtype.JXN, pid)
-            id_hits = sorted(_glob.glob(os.path.join(pdir, "*ID*")))
-            mm_hits = sorted(_glob.glob(os.path.join(pdir, "*MM*")))
-            rr_hits = sorted(_glob.glob(os.path.join(pdir, "*RR*")))
-            if not (id_hits and mm_hits and rr_hits):
-                raise FileNotFoundError(f"incomplete junction triplet in {pdir}")
-            ids = read_id_list(self.spark, id_hits[0])
-            _, n_cols, _ = matrix_market_dims(self.spark, mm_hits[0])
-            n_ids = ids.count()
+            _, n_cols, _ = matrix_market_dims(self.spark, mm_files[pid][0])
+            n_ids = read_id_list(self.spark, id_files[pid][0]).count()
             if n_cols != n_ids:  # accessor.py:434-435, loud
                 raise ValueError(
                     f"junction width mismatch for {pid}: MM has {n_cols} cols, "
                     f"ID list has {n_ids}"
                 )
-            coo = read_matrix_market_coo(self.spark, mm_hits[0]).withColumn(
+            coo = read_matrix_market_coo(self.spark, mm_files[pid][0]).withColumn(
                 "project_id", F.lit(pid)
             )
             coos.append(coo)
             coords.append(
-                read_tsv_strings(self.spark, rr_hits[0]).withColumn(
+                read_tsv_strings(self.spark, rr_files[pid][0]).withColumn(
                     "project_id", F.lit(pid)  # P8 provenance
                 )
             )

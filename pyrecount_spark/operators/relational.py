@@ -41,11 +41,6 @@ def isin_filter(df: DataFrame, col: str, values: Sequence) -> DataFrame:
     return df.filter(F.col(col).isin(list(values)))
 
 
-def with_provenance(df: DataFrame, col: str, value) -> DataFrame:
-    """P8 (accessor.py:441-443): tag rows with their source partition."""
-    return df.withColumn(col, F.lit(value))
-
-
 def multi_join(
     dfs: Sequence[DataFrame],
     on: Sequence[str],
@@ -81,11 +76,6 @@ def align_union(dfs: Sequence[DataFrame]) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)
 
 
-def union_same_schema(dfs: Sequence[DataFrame]) -> DataFrame:
-    """U1 (accessor.py:337): plain vertical union by name."""
-    return reduce(DataFrame.unionByName, dfs)
-
-
 def group_count(df: DataFrame, keys: Sequence[str], count_name: str = "cnt") -> DataFrame:
     """A1 (example.py:21-23): hash aggregate with map-side partial combine
     (Catalyst plans partial_count → exchange → final_count automatically)."""
@@ -95,12 +85,6 @@ def group_count(df: DataFrame, keys: Sequence[str], count_name: str = "cnt") -> 
 def distinct_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
     """A2 (accessor.py:339, 512)."""
     return df.select(*subset).distinct() if subset else df.distinct()
-
-
-def distinct_values(df: DataFrame, col: str) -> list:
-    """A3 (accessor.py:56-57): distinct column to a driver list. Only for
-    genuinely small key domains (project ids) — never a fact column."""
-    return [r[0] for r in df.select(col).distinct().collect()]
 
 
 def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:

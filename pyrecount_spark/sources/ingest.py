@@ -17,22 +17,14 @@ reference pre-filters URL lists (accessor.py:320-323 → SURVEY §4).
 from __future__ import annotations
 
 import os
-import posixpath
 from collections.abc import Callable, Iterator
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # Fetcher signature: (url, dest_path) -> None. Injected so offline harnesses
 # and tests use file copies; production uses urllib. No aiohttp dependency.
 Fetcher = Callable[[str, str], None]
-
-
-def default_fetcher(url: str, dest: str) -> None:
-    from urllib.request import urlretrieve
-
-    urlretrieve(url, dest)  # noqa: S310
 
 
 def mirror_path(cache_dir: str, url: str) -> str:
@@ -144,16 +136,3 @@ def land_parquet(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(lake_path)
-
-
-def bigwig_manifest(
-    spark: SparkSession,
-    rows: Sequence[tuple[str, str]],
-    cache_dir: str,
-) -> DataFrame:
-    """Q6 (accessor.py:585-610): the BigWig catalog — (project_id, url, path)
-    per sample file; payloads are never parsed, only cataloged. The
-    multimodal binary read path is ``multimodal.binary.read_binary_files``.
-    """
-    data = [(pid, url, mirror_path(cache_dir, url)) for pid, url in rows]
-    return spark.createDataFrame(data, ["project_id", "url", "path"])

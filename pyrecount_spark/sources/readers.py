@@ -3,10 +3,16 @@
 All readers return lazy DataFrames; gzip inputs decompress transparently
 (S13 — but .gz is non-splittable, so the ingest layer re-lands everything as
 partitioned Parquet; see sources/ingest.py).
+
+Header lines are read on the driver, which already globs these paths, so no
+reader starts a Spark job to learn a TSV header or a MatrixMarket dims line.
 """
 
 from __future__ import annotations
 
+import csv
+import gzip
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -20,22 +26,45 @@ from pyspark.sql.types import (
 )
 
 
+def _first_line(path: str, comment: str) -> str:
+    """First line of ``path`` that is neither blank nor starts with
+    ``comment`` — the line Spark's CSV reader takes as the header. ``.gz``
+    is decompressed by suffix, Spark's own codec rule."""
+    with (gzip.open if path.endswith(".gz") else open)(path, "rt", encoding="utf-8") as fh:
+        for line in fh:
+            if line.strip() and not line.startswith(comment):
+                return line.rstrip("\r\n")
+    raise ValueError(f"no header line in {path}")
+
+
+def _string_schema(header: str) -> StructType:
+    """All-string schema named as Spark names a CSV header: blank names
+    become ``_c<i>``, case-insensitive duplicates get their index appended."""
+    names = next(csv.reader([header], delimiter="\t"))
+    lower = [n.lower() for n in names]
+    return StructType([
+        StructField(n if n and lower.count(n.lower()) == 1 else f"{n or '_c'}{i}", StringType())
+        for i, n in enumerate(names)
+    ])
+
+
 def read_tsv_strings(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
-    """S7 (accessor.py:326, 480): tab-separated, header, **no inference** —
-    every column lands as string; numeric semantics applied by explicit casts
-    at use sites, exactly the reference's string-first metadata discipline
-    (SURVEY §1.2). At scale this dodges schema-drift union failures across
-    thousands of drifting metadata files."""
-    paths = [paths] if isinstance(paths, str) else list(paths)
-    return spark.read.options(sep="\t", header=True, inferSchema=False).csv(paths)
-
-
-def read_tsv_counts(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
-    """S8 (accessor.py:261-265): counts TSV, ``#`` comment rows skipped.
-    String-first like ``read_tsv_strings`` (no inference scan): callers cast
-    the count column after the melt."""
-    paths = [paths] if isinstance(paths, str) else list(paths)
-    return spark.read.options(sep="\t", header=True, inferSchema=False, comment="#").csv(paths)
+    """S7/S8 (accessor.py:261-265, 326, 480) — the one TSV reader: tab-
+    separated, header, ``#`` comment rows skipped, **no inference**: every
+    column is a string, cast at use sites (SURVEY §1.2). Files are grouped
+    by header line, each group read with its header as the schema (no
+    header job), and the groups unioned by name, so drifting columns line
+    up by name with nulls. An empty file raises ``ValueError`` naming it."""
+    groups: dict[str, list[str]] = {}
+    for p in [paths] if isinstance(paths, str) else paths:
+        groups.setdefault(_first_line(p, "#"), []).append(p)
+    frames = [
+        spark.read.options(sep="\t", header=True, comment="#")
+        .schema(_string_schema(header))
+        .csv(group)
+        for header, group in groups.items()
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
 GTF_SCHEMA = StructType(
@@ -82,12 +111,13 @@ def read_matrix_market_coo(spark: SparkSession, path: str) -> DataFrame:
     base); ``%``-prefixed comment lines and the dims line are dropped.
 
     Distributed parse: ``spark.read.text`` splits the file across tasks; the
-    dims line is identified as the first non-comment line and removed by an
-    anti-condition on its exact content (cheap: one ``limit(1)`` driver
-    lookup), so no single-node bottleneck."""
-    lines = spark.read.text(path).filter(~F.col("value").startswith("%"))
-    dims_line = lines.limit(1).collect()[0][0]
-    body = lines.filter(F.col("value") != dims_line)
+    dims line (the first non-comment line, read on the driver by
+    ``_first_line``) is removed by an anti-condition on its exact content,
+    so no job runs before the scan and no single-node bottleneck."""
+    dims_line = _first_line(path, "%")
+    body = spark.read.text(path).filter(
+        ~F.col("value").startswith("%") & (F.col("value") != dims_line)
+    )
     parts = F.split(F.trim(F.col("value")), r"\s+")
     return body.select(
         parts.getItem(0).cast("long").alias("row_idx"),
@@ -99,14 +129,8 @@ def read_matrix_market_coo(spark: SparkSession, path: str) -> DataFrame:
 
 
 def matrix_market_dims(spark: SparkSession, path: str) -> tuple[int, int, int]:
-    """Header dims of an MM file: (n_rows, n_cols, nnz)."""
-    first = (
-        spark.read.text(path)
-        .filter(~F.col("value").startswith("%"))
-        .limit(1)
-        .collect()[0][0]
-    )
-    r, c, n = first.split()
+    """Header dims of an MM file: (n_rows, n_cols, nnz), read on the driver."""
+    r, c, n = _first_line(path, "%").split()
     return int(r), int(c), int(n)
 
 
@@ -114,5 +138,4 @@ def read_id_list(spark: SparkSession, path: str, col: str = "rail_id") -> DataFr
     """S11 (accessor.py:419): sample-id dimension table, ids cast to string.
     Stays a DataFrame (joined to COO col_idx) — never a driver list unless
     genuinely tiny."""
-    df = spark.read.options(header=True, inferSchema=False).csv(path)
-    return df.select(F.col(col).cast("string").alias(col))
+    return read_tsv_strings(spark, path).select(col)

@@ -8,7 +8,10 @@ Project(...).load(dtype) for every Dtype -> scale_auc — value-exact.
 from __future__ import annotations
 
 import gzip
+import re
+import shutil
 import textwrap
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -365,3 +368,51 @@ def test_project_cache_gene_roundtrip(spark, lake, catalog_df, tmp_path):
     assert anno.filter(F.col("gene_name") == "G_ONE").count() == 1
     got = {(r.feature_id, r.sample_id): r["count"] for r in counts.collect()}
     assert got[("g1", "s1")] == 10 and got[("g3", "s3")] == 9
+
+
+@pytest.fixture
+def lake_copy(lake, tmp_path):
+    """A per-test copy of the fixture lake that a test may damage."""
+    return Path(shutil.copytree(lake, tmp_path / "lake"))
+
+
+def test_missing_tag_file_raises_naming_project(spark, lake_copy, catalog_df):
+    """A project without one metadata tag file fails the load instead of
+    returning that tag's columns as nulls."""
+    (lake_copy / "sra/metadata/P2/sra.recount_seq_qc.P2.MD").unlink()
+    proj = Project(spark, metadata=catalog_df, lake_dir=str(lake_copy), dbase="sra")
+    with pytest.raises(FileNotFoundError, match=r"recount_seq_qc.*\['P2'\]"):
+        proj.load(Dtype.METADATA)
+
+
+def test_empty_tsv_raises_naming_file(spark, lake_copy, catalog_df):
+    empty = lake_copy / "sra/metadata/P1/sra.recount_pred.P1.MD"
+    empty.write_text("")
+    proj = Project(spark, metadata=catalog_df, lake_dir=str(lake_copy), dbase="sra")
+    with pytest.raises(ValueError, match=re.escape(str(empty))):
+        proj.load(Dtype.METADATA)
+
+
+def test_loads_start_no_spark_job(spark, lake, catalog_df):
+    """Headers are read on the driver: once the project -> samples map is
+    memoized, building the catalog, metadata and gene frames runs no job."""
+    sc = spark.sparkContext
+    proj = Project(
+        spark, metadata=catalog_df, lake_dir=lake, dbase="sra",
+        annotation=Annotation.GENCODE_V29,
+    )
+    assert proj.samples_by_project  # the one driver collect, memoized
+    loads = {
+        "catalog": Metadata(spark, lake).load,
+        "metadata": lambda: proj.load(Dtype.METADATA),
+        "gene": lambda: proj.load(Dtype.GENE),
+    }
+    for name, load in loads.items():
+        group = f"test-api-no-job-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            load()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are recorded
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name

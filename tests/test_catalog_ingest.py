@@ -16,7 +16,6 @@ from pyrecount_spark.sources.catalog import (
     shard2,
 )
 from pyrecount_spark.sources.ingest import (
-    bigwig_manifest,
     build_manifest,
     fetch_manifest,
     land_parquet,
@@ -66,15 +65,6 @@ def test_junction_urls_triplet():
     urls = _locator().junction_urls()
     assert len(urls) == 3
     assert [u.rsplit(".", 2)[-2] for u in urls] == ["ID", "MM", "RR"]
-
-
-def test_bigwig_manifest_rows(spark):
-    loc = _locator(samples_by_project={"SRP009615": ["S1", "S2"]})
-    rows = loc.bigwig_urls()
-    assert len(rows) == 2  # one per sample (test_accessor.py:313 semantics)
-    mf = bigwig_manifest(spark, rows, "/tmp/lake-cache")
-    assert mf.columns == ["project_id", "url", "path"]
-    assert mf.count() == 2
 
 
 def test_catalog_locator_and_discovery():
@@ -200,7 +190,7 @@ def test_fetch_manifest_df_is_distributed(spark, tmp_path):
 def test_live_http_ingest_end_to_end(spark, tmp_path):
     """The reference's tests drive the full cache->load pipeline against the
     live recount3 service (test_accessor.py:14-353). Offline equivalent: a
-    localhost http.server exercises the REAL default_fetcher (urllib) path
+    localhost http.server exercises the REAL default fetch (urllib) path
     through fetch_manifest -> read -> land_parquet, including a 404 error row."""
     import http.server
     import socketserver
@@ -228,7 +218,7 @@ def test_live_http_ingest_end_to_end(spark, tmp_path):
                 f"http://127.0.0.1:{port}/missing.MD",  # 404 path
             ]
             manifest = build_manifest(spark, urls, cache)
-            statuses = {u: s for u, _, s in fetch_manifest(manifest)}  # default_fetcher
+            statuses = {u: s for u, _, s in fetch_manifest(manifest)}  # default urllib fetch
             assert statuses[urls[0]] == "fetched"
             assert statuses[urls[1]].startswith("error") and "404" in statuses[urls[1]]
 
