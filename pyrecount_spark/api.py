@@ -49,9 +49,9 @@ from pyrecount_spark.operators import matrix as M
 from pyrecount_spark.operators.relational import align_union, multi_join
 from pyrecount_spark.sources.catalog import Annotation, Dtype, Tags
 from pyrecount_spark.sources.readers import (
+    id_list_length,
     matrix_market_dims,
     read_gtf,
-    read_id_list,
     read_matrix_market_coo,
     read_tsv_strings,
 )
@@ -288,8 +288,8 @@ class Project:
         )
         coos, coords = [], []
         for pid in self.project_ids:
-            _, n_cols, _ = matrix_market_dims(self.spark, mm_files[pid][0])
-            n_ids = read_id_list(self.spark, id_files[pid][0]).count()
+            _, n_cols, _ = matrix_market_dims(mm_files[pid][0])
+            n_ids = id_list_length(id_files[pid][0])
             if n_cols != n_ids:  # accessor.py:434-435, loud
                 raise ValueError(
                     f"junction width mismatch for {pid}: MM has {n_cols} cols, "

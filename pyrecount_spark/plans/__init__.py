@@ -44,6 +44,11 @@ def register(name: str, oracle: str | None = None, group: str = "default"):
     return deco
 
 
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The lake table ``name``: ``<sf_dir>/<name>.parquet``."""
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
 def load_all() -> None:
     """Import every plan module for its registration side effects."""
     from pyrecount_spark.plans import (  # noqa: F401

@@ -12,12 +12,9 @@ from pyrecount_spark.operators.analytics import (
     funnel_stages,
     triangle_count,
 )
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
 from pyrecount_spark.session import read_events
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -9,12 +9,9 @@ from pyspark.sql import functions as F
 
 from pyrecount_spark.functions.scalars import value_remap
 from pyrecount_spark.operators.relational import align_union, multi_join
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
 from pyrecount_spark.session import read_events
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -18,11 +18,8 @@ from pyrecount_spark.operators.corpus import (
     weighted_mix,
 )
 from pyrecount_spark.functions.scalars import round_ratio_half_up
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _split_bucket_sql(col: str = "doc_id", salt: str = "") -> str:

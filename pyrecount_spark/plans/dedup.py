@@ -17,11 +17,8 @@ from pyrecount_spark.operators.dedup import (
     minhash_candidate_pairs,
     simhash_bits,
 )
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # 3-word shingles, distinct per doc — DuckDB twin of word_shingles(n=3).

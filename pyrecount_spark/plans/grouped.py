@@ -8,11 +8,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyrecount_spark.operators.grouped import group_zscore
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -6,12 +6,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyrecount_spark.functions.scalars import split_to_columns, value_remap
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
 from pyrecount_spark.session import read_events
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -10,11 +10,8 @@ from pyrecount_spark.operators.similarity import (
     cosine_pairs,
     lsh_bucketed_topk,
 )
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

@@ -6,11 +6,17 @@ These carry FULL oracles: with ``complete`` output mode and an
 ``availableNow`` trigger over a finite source, the final materialized
 result is deterministic and batch-equal (the watermark never evicts state
 in complete mode), so DuckDB can check values, not just row counts.
+
+Every query drains through `_run_event_time`, every events query reads
+through `_read_events_stream`, and the windowed counts and sessions come
+from ``streaming.pipeline``; the click→purchase sides and the keyed dedup
+within the watermark are each written once below.
 """
 
 from __future__ import annotations
 
 import contextlib
+import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,8 +72,6 @@ def _source_bytes(sf_dir: str) -> int:
     arrival-batch directory when present, else events.parquet (the
     documents stream is the same size class in every driver corpus, so one
     events-derived figure sizes all drains of a corpus)."""
-    import os
-
     stream_dir = f"{sf_dir}/events_stream"
     try:
         if os.path.isdir(stream_dir):
@@ -116,28 +120,18 @@ def _stream_shuffle_parts(
     parts 8 → [16.2, 13.4] s, 16 → [9.3, 8.4] s, 32 → [6.9, 6.2] s
     (the opposite slope of the JVM drains above).
 
-    ``SPARK_GRAFT_STREAM_PARTS`` overrides for production tuning (e.g.
-    sizing state partitions to match a cluster's executor count). Values,
-    not partitioning, determine every registered streaming result, so
-    outputs are byte-identical — the oracle re-verifies that.
+    Values, not partitioning, determine every registered streaming result,
+    so outputs are byte-identical — the oracle re-verifies that.
     """
     import math
-    import os
 
     key = "spark.sql.shuffle.partitions"
     prior = spark.conf.get(key)
-    override = os.environ.get("SPARK_GRAFT_STREAM_PARTS")
     try:
         session_parts = int(prior)
     except (TypeError, ValueError):
         session_parts = spark.sparkContext.defaultParallelism
-    if override:
-        parts = max(1, int(override))
-    else:
-        src = _source_bytes(sf_dir)
-        parts = min(
-            session_parts, max(4, math.ceil(src / bytes_per_part))
-        )
+    parts = min(session_parts, max(4, math.ceil(_source_bytes(sf_dir) / bytes_per_part)))
     spark.conf.set(key, str(parts))
     try:
         yield
@@ -146,7 +140,10 @@ def _stream_shuffle_parts(
 
 
 def _read_events_stream(
-    spark: SparkSession, sf_dir: str, event_time: bool = False
+    spark: SparkSession,
+    sf_dir: str,
+    event_time: bool = False,
+    arrival_batches: bool = False,
 ) -> DataFrame:
     """File-source stream over events.parquet (file streams need a dir, so
     glob-filter the sf dir down to the one file).
@@ -157,6 +154,19 @@ def _read_events_stream(
     both sides, same strings under date_format) — callers wrap the whole
     build+drain in `_utc_session`; fail loudly if they didn't, rather than
     silently producing shifted event times.
+
+    ``arrival_batches=True`` (the late-data family, round-12) reads the
+    corpus's ``events_stream/`` directory instead where it exists: one file
+    per ARRIVAL batch (ascending mtimes — part-00000 on-time, part-00001
+    late), taken with ``maxFilesPerTrigger=1`` so an availableNow drain
+    processes them as separate micro-batches. The event-time watermark
+    then ADVANCES between them and stateful operators actually exercise the
+    late-row drop / state-eviction path (a single-batch drain is
+    structurally unable to: the watermark only moves between batches).
+    Corpora without the directory fall back to the single-file read — one
+    batch, no drops — and the late-aware oracles degenerate to the plain
+    aggregate (their drop filter keys on event_id < 0, which only late
+    corpora contain).
     """
     if event_time:
         tz = spark.conf.get("spark.sql.session.timeZone")
@@ -165,56 +175,16 @@ def _read_events_stream(
                 "event-time streaming reads require the session timezone to "
                 f"be UTC (got {tz!r}); wrap the build+drain in _utc_session"
             )
-    stream = (
-        spark.readStream.schema(_EVENTS_SCHEMA)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    reader = spark.readStream.schema(_EVENTS_SCHEMA)
+    if arrival_batches and os.path.isdir(f"{sf_dir}/events_stream"):
+        stream = reader.option("maxFilesPerTrigger", "1").parquet(
+            f"{sf_dir}/events_stream"
+        )
+    else:
+        stream = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
     if event_time:
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return stream
-
-
-
-def _read_events_stream_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-micro-batch event-time stream (round-12, VERDICT r11 #2).
-
-    Late-data corpora (gen_corpus ``--late-events``) carry an
-    ``events_stream/`` directory: one file per ARRIVAL batch (ascending
-    mtimes — part-00000 on-time, part-00001 late). Reading it with
-    ``maxFilesPerTrigger=1`` under an availableNow trigger makes the drain
-    process arrival batches as separate micro-batches, so the event-time
-    watermark ADVANCES between them and stateful operators actually
-    exercise the late-row drop / state-eviction path (a single-batch drain
-    is structurally unable to: the watermark only moves between batches).
-    Corpora without the directory fall back to the single-file read — one
-    batch, no drops — and the late-aware oracles degenerate to the plain
-    aggregate (their drop filter keys on event_id < 0, which only late
-    corpora contain).
-    """
-    import os
-
-    # same UTC guard as _read_events_stream: the ntz->timestamp cast below
-    # is only value-preserving under a UTC-pinned session
-    tz = spark.conf.get("spark.sql.session.timeZone")
-    if tz != "UTC":
-        raise RuntimeError(
-            "event-time streaming reads require the session timezone to "
-            f"be UTC (got {tz!r}); wrap the build+drain in _utc_session"
-        )
-    if os.path.isdir(f"{sf_dir}/events_stream"):
-        stream = (
-            spark.readStream.schema(_EVENTS_SCHEMA)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(f"{sf_dir}/events_stream")
-        )
-    else:
-        stream = (
-            spark.readStream.schema(_EVENTS_SCHEMA)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def _drain(q, timeout_s: int) -> None:
@@ -235,28 +205,22 @@ def _drain(q, timeout_s: int) -> None:
 
 
 def _run_event_time(
-    spark, build, prefix: str, output_mode: str, timeout_s: int,
-    sf_dir: str | None = None,
+    spark, build, prefix: str, output_mode: str, timeout_s: int, sf_dir: str,
     bytes_per_part: int = 256 << 10,
 ):
-    """Build an event-time streaming DataFrame and drain it to a memory
-    sink under a UTC-pinned session (restored afterwards). ``build`` runs
-    inside the pin so analysis and runtime both see UTC; the drained
-    memory table holds final row VALUES, so reading it after the restore
-    is timezone-insensitive provided the query formatted / integer-encoded
-    every timestamp it returns while still in-stream.
+    """Build a streaming DataFrame and drain it to a memory sink under a
+    UTC-pinned session (restored afterwards) — the one drain every
+    registered streaming query goes through. ``build`` runs inside the pin
+    so analysis and runtime both see UTC; the drained memory table holds
+    final row VALUES, so reading it after the restore is
+    timezone-insensitive provided the query formatted / integer-encoded
+    every timestamp it returns while still in-stream. Queries that read no
+    event time are unaffected by the pin.
 
-    ``sf_dir`` opts the drain into scale-adaptive shuffle/state
-    partitioning (``_stream_shuffle_parts``); the conf stays pinned through
-    the drain because MicroBatchExecution clones the session at start."""
-    import contextlib as _ctx
-
-    parts_ctx = (
-        _stream_shuffle_parts(spark, sf_dir, bytes_per_part)
-        if sf_dir is not None
-        else _ctx.nullcontext()
-    )
-    with _utc_session(spark), parts_ctx:
+    Shuffle/state partitioning derives from ``sf_dir``'s source size
+    (``_stream_shuffle_parts``); the conf stays pinned through the drain
+    because MicroBatchExecution clones the session at start."""
+    with _utc_session(spark), _stream_shuffle_parts(spark, sf_dir, bytes_per_part):
         name = f"{prefix}_{uuid.uuid4().hex[:8]}"
         q = (
             build()
@@ -268,6 +232,63 @@ def _run_event_time(
         )
         _drain(q, timeout_s)
     return spark.table(name)
+
+
+def _fmt(col: str, name: str):
+    """In-stream (UTC-pinned) rendering of an event-time column."""
+    return F.date_format(col, "yyyy-MM-dd HH:mm:ss").alias(name)
+
+
+def _hourly_counts(events: DataFrame, start_name: str) -> DataFrame:
+    """``pipeline.streaming_tumbling_counts`` (1 h windows, 2 h watermark)
+    with the window start formatted in-stream as ``start_name``."""
+    from pyrecount_spark.streaming.pipeline import streaming_tumbling_counts
+
+    return streaming_tumbling_counts(events).select(
+        _fmt("window_start", start_name), "event_type", "n_events"
+    )
+
+
+def _dedup_within_watermark(events: DataFrame, delay: str) -> DataFrame:
+    """Distinct (user_id, event_type) keys held only until the watermark
+    passes (dropDuplicatesWithinWatermark)."""
+    return (
+        events.withWatermark("ts", delay)
+        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
+        .select("user_id", "event_type")
+    )
+
+
+def _watermarked(events: DataFrame, event_type: str) -> DataFrame:
+    """One side of the click/purchase joins: ``<type>_id``, ``<t>_user``
+    and ``<t>_ts`` (t = the type's initial) under a 2 h watermark."""
+    t = event_type[0]
+    return (
+        events.filter(F.col("event_type") == event_type)
+        .select(
+            F.col("event_id").alias(f"{event_type}_id"),
+            F.col("user_id").alias(f"{t}_user"),
+            F.col("ts").alias(f"{t}_ts"),
+        )
+        .withWatermark(f"{t}_ts", "2 hours")
+    )
+
+
+def _click_purchase_pairs(read) -> DataFrame:
+    """Every purchase joined to the same user's clicks in the preceding
+    hour; ``read()`` returns a fresh event-time stream for each side."""
+    purchases = _watermarked(read(), "purchase")
+    clicks = _watermarked(read(), "click")
+    return purchases.join(
+        clicks,
+        F.expr("p_user = c_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"),
+    ).select(
+        "purchase_id",
+        "click_id",
+        F.col("p_user").alias("user_id"),
+        _fmt("p_ts", "purchase_ts"),
+        _fmt("c_ts", "click_ts"),
+    )
 
 
 @register(
@@ -282,20 +303,9 @@ def _run_event_time(
 def streaming_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         stream = _read_events_stream(spark, sf_dir, event_time=True)
-        return (
-            stream.withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "window_start"
-                ),
-                "event_type",
-                "n_events",
-            )
-        )
+        return _hourly_counts(stream, "window_start")
 
-    return _run_event_time(spark, build, "stream_q", "complete", 120, sf_dir=sf_dir)
+    return _run_event_time(spark, build, "stream_q", "complete", 120, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -315,29 +325,21 @@ def streaming_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_dim_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _read_events_stream(spark, sf_dir)
-    dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
-        "c_custkey", "c_mktsegment"
-    )
-    agg = (
-        stream.join(dim, stream.user_id == dim.c_custkey)
-        .groupBy("c_mktsegment", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
+    def build():
+        stream = _read_events_stream(spark, sf_dir)
+        dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+            "c_custkey", "c_mktsegment"
         )
-    )
-    name = f"stream_j_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_parts(spark, sf_dir):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+        return (
+            stream.join(dim, stream.user_id == dim.c_custkey)
+            .groupBy("c_mktsegment", "event_type")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.round(F.col("value") * 100).cast("long")).alias("sum_cents"),
+            )
         )
-        _drain(q, 120)
-    return spark.table(name)
+
+    return _run_event_time(spark, build, "stream_j", "complete", 120, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -354,17 +356,12 @@ def streaming_dim_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrecount_spark.streaming.pipeline import (
-        run_stream_to_memory,
-        streaming_running_totals,
-    )
+    from pyrecount_spark.streaming.pipeline import streaming_running_totals
 
-    stream = _read_events_stream(spark, sf_dir)
-    totals = streaming_running_totals(stream)
-    name = f"stream_s_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_parts(spark, sf_dir):
-        run_stream_to_memory(totals, name, output_mode="update", timeout_s=120)
-    return spark.table(name)
+    def build():
+        return streaming_running_totals(_read_events_stream(spark, sf_dir))
+
+    return _run_event_time(spark, build, "stream_s", "update", 120, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -384,21 +381,14 @@ def streaming_stateful_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    stream = _read_events_stream(spark, sf_dir)
-    deduped = stream.select("user_id", "event_type").dropDuplicates(
-        ["user_id", "event_type"]
-    )
-    name = f"stream_d_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_parts(spark, sf_dir):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+    def build():
+        return (
+            _read_events_stream(spark, sf_dir)
+            .select("user_id", "event_type")
+            .dropDuplicates(["user_id", "event_type"])
         )
-        _drain(q, 120)
-    return spark.table(name)
+
+    return _run_event_time(spark, build, "stream_d", "append", 120, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -424,42 +414,8 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build():
-        def _stream():
-            return _read_events_stream(spark, sf_dir, event_time=True)
-
-        purchases = (
-            _stream()
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                "user_id",
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "2 hours")
-        )
-        clicks = (
-            _stream()
-            .filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", "2 hours")
-        )
-        return purchases.join(
-            clicks,
-            F.expr(
-                "user_id = c_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"
-            ),
-        ).select(
-            "purchase_id",
-            "click_id",
-            "user_id",
-            F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
-            F.date_format("c_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-        )
+    def read():
+        return _read_events_stream(spark, sf_dir, event_time=True)
 
     # 420 s loud-timeout guard (round-14): the stream-stream joins are the
     # slowest drains in the suite and measured 142-169 s at the latesf1
@@ -468,7 +424,9 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
     # margin and tripped once under host load. The guard only bounds
     # how long a drain may take before failing LOUDLY; results are
     # byte-identical whenever the drain completes.
-    return _run_event_time(spark, build, "stream_ss", "append", 420, sf_dir=sf_dir)
+    return _run_event_time(
+        spark, lambda: _click_purchase_pairs(read), "stream_ss", "append", 420, sf_dir
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -488,13 +446,9 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
 def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         stream = _read_events_stream(spark, sf_dir, event_time=True)
-        return (
-            stream.withWatermark("ts", "1 hour")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-            .select("user_id", "event_type")
-        )
+        return _dedup_within_watermark(stream, "1 hour")
 
-    return _run_event_time(spark, build, "stream_w", "append", 120, sf_dir=sf_dir)
+    return _run_event_time(spark, build, "stream_w", "append", 120, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -537,23 +491,18 @@ def streaming_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFr
     """,
 )
 def streaming_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyrecount_spark.streaming.pipeline import streaming_sessionize
+
     def build():
         stream = _read_events_stream(spark, sf_dir, event_time=True)
-        return (
-            stream.withWatermark("ts", "2 hours")
-            .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                "user_id",
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "session_start"
-                ),
-                F.date_format("w.end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
-                "n_events",
-            )
+        return streaming_sessionize(stream, watermark="2 hours").select(
+            "user_id",
+            _fmt("session_start", "session_start"),
+            _fmt("session_end", "session_end"),
+            "n_events",
         )
 
-    return _run_event_time(spark, build, "stream_sw", "complete", 180, sf_dir=sf_dir)
+    return _run_event_time(spark, build, "stream_sw", "complete", 180, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -596,28 +545,9 @@ def streaming_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     from pyrecount_spark.session import read_events
 
     def build():
-        def _stream():
-            return _read_events_stream(spark, sf_dir, event_time=True)
-
-        clicks = (
-            _stream()
-            .filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", "2 hours")
-        )
-        purchases = (
-            _stream()
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                F.col("user_id").alias("p_user"),
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "2 hours")
+        clicks = _watermarked(_read_events_stream(spark, sf_dir, event_time=True), "click")
+        purchases = _watermarked(
+            _read_events_stream(spark, sf_dir, event_time=True), "purchase"
         )
         # Finalize EVERY timestamp while still in-stream (UTC-pinned):
         # formatted strings for output, integer epoch-µs for the post-drain
@@ -625,21 +555,19 @@ def streaming_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFr
         # timezone restore is tz-insensitive.
         return clicks.join(
             purchases,
-            F.expr(
-                "c_user = p_user AND p_ts BETWEEN c_ts AND c_ts + INTERVAL 1 HOUR"
-            ),
+            F.expr("c_user = p_user AND p_ts BETWEEN c_ts AND c_ts + INTERVAL 1 HOUR"),
             "leftOuter",
         ).select(
             "click_id",
             F.col("c_user").alias("user_id"),
             "purchase_id",
-            F.date_format("c_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-            F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
+            _fmt("c_ts", "click_ts"),
+            _fmt("p_ts", "purchase_ts"),
             F.unix_micros(F.col("c_ts")).alias("c_us"),
         )
 
     # 420 s: stream-stream join guard — see streaming_click_purchase_join
-    result = _run_event_time(spark, build, "stream_lo", "append", 420, sf_dir=sf_dir)
+    result = _run_event_time(spark, build, "stream_lo", "append", 420, sf_dir)
 
     e = read_events(spark, sf_dir)
     mx = e.groupBy().agg(
@@ -709,12 +637,8 @@ def streaming_timeout_sessions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         # strings, not instants re-rendered under the restored timezone
         return streaming_timeout_sessions(stream, gap_minutes=30).select(
             "user_id",
-            F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias(
-                "session_start"
-            ),
-            F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias(
-                "session_end"
-            ),
+            _fmt("session_start", "session_start"),
+            _fmt("session_end", "session_end"),
             "n_events",
         )
 
@@ -723,8 +647,7 @@ def streaming_timeout_sessions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (8 KiB/part — 32 parts at sf0.1 measured 2.3× faster than the JVM
     # class's 8; still 4 at sf0.001, still capped at the session default)
     return _run_event_time(
-        spark, build, "stream_to", "append", 300, sf_dir=sf_dir,
-        bytes_per_part=8 << 10,
+        spark, build, "stream_to", "append", 300, sf_dir, bytes_per_part=8 << 10
     )
 
 
@@ -783,10 +706,7 @@ def _register_tws():
 
 @(_register_tws() if _has_protobuf() else (lambda f: f))
 def streaming_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrecount_spark.streaming.pipeline import (
-        run_stream_to_memory,
-        streaming_user_stats_tws,
-    )
+    from pyrecount_spark.streaming.pipeline import streaming_user_stats_tws
     from pyrecount_spark.streaming.proto_compat import ensure_protobuf
 
     if not ensure_protobuf(spark):
@@ -794,12 +714,12 @@ def streaming_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transformWithStateInPandas needs google.protobuf on driver and "
             "workers; neither an install nor the vendored runtime is available"
         )
-    with _rocksdb_state_store(spark), _stream_shuffle_parts(spark, sf_dir):
-        stream = _read_events_stream(spark, sf_dir)
-        stats = streaming_user_stats_tws(stream)
-        name = f"stream_tws_{uuid.uuid4().hex[:8]}"
-        run_stream_to_memory(stats, name, output_mode="update", timeout_s=300)
-    return spark.table(name)
+
+    def build():
+        return streaming_user_stats_tws(_read_events_stream(spark, sf_dir))
+
+    with _rocksdb_state_store(spark):
+        return _run_event_time(spark, build, "stream_tws", "update", 300, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -837,32 +757,24 @@ _DOCS_SCHEMA = StructType(
 def streaming_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyrecount_spark.operators.text import normalized_fingerprint
 
-    stream = (
-        spark.readStream.schema(_DOCS_SCHEMA)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-    agg = (
-        stream.select(
-            normalized_fingerprint(F.col("text")).alias("fingerprint"), "doc_id"
+    def build():
+        stream = (
+            spark.readStream.schema(_DOCS_SCHEMA)
+            .option("pathGlobFilter", "documents.parquet")
+            .parquet(sf_dir)
         )
-        .groupBy("fingerprint")
-        .agg(
-            F.min("doc_id").alias("canonical_id"),
-            F.count(F.lit(1)).alias("n_docs"),
+        return (
+            stream.select(
+                normalized_fingerprint(F.col("text")).alias("fingerprint"), "doc_id"
+            )
+            .groupBy("fingerprint")
+            .agg(
+                F.min("doc_id").alias("canonical_id"),
+                F.count(F.lit(1)).alias("n_docs"),
+            )
         )
-    )
-    name = f"stream_fp_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle_parts(spark, sf_dir):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain(q, 120)
-    return spark.table(name)
+
+    return _run_event_time(spark, build, "stream_fp", "complete", 120, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -887,22 +799,11 @@ def streaming_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         stream = _read_events_stream(spark, sf_dir, event_time=True)
-        return (
-            stream.withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "bucket_start"
-                ),
-                "event_type",
-                "n_events",
-            )
-        )
+        return _hourly_counts(stream, "bucket_start")
 
     # post-drain sort/limit touches only strings and longs — tz-insensitive
     return (
-        _run_event_time(spark, build, "stream_tk", "complete", 120, sf_dir=sf_dir)
+        _run_event_time(spark, build, "stream_tk", "complete", 120, sf_dir)
         .orderBy(F.desc("n_events"), F.asc("bucket_start"), F.asc("event_type"))
         .limit(10)
     )
@@ -911,10 +812,10 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # LATE-DATA family (round-12, VERDICT r11 #2): the watermark-eviction path,
 # exercised by data. These four read the multi-batch arrival stream
-# (_read_events_stream_batched) so on late-data corpora the watermark
-# advances between micro-batches and rows arriving after their window /
-# key-epoch expired are DROPPED (numRowsDroppedByWatermark > 0 — CI-gated
-# in tests/test_artifacts.py on the latesf decade).
+# (`_read_events_stream(..., arrival_batches=True)`) so on late-data corpora
+# the watermark advances between micro-batches and rows arriving after
+# their window / key-epoch expired are DROPPED (numRowsDroppedByWatermark >
+# 0 — CI-gated in tests/test_artifacts.py on the latesf decade).
 #
 # Oracle design: late rows carry event_id < 0 (gen_corpus --late-events)
 # and event times bounded 4 h under max(on-time ts) — strictly below every
@@ -924,8 +825,6 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DEGENERATES to a no-op on corpora without late rows (all ids >= 0, one
 # batch, nothing dropped) — one oracle string serves both corpus families.
 # ---------------------------------------------------------------------------
-
-
 # Watermarked tumbling aggregation, APPEND mode: only FINALIZED windows
 # (window end <= final watermark = max ts - 2 h) are emitted; late rows'
 # windows expired before they arrived, so they are dropped and never
@@ -947,22 +846,11 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def streaming_late_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
-        stream = _read_events_stream_batched(spark, sf_dir)
-        return (
-            stream.withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "window_start"
-                ),
-                "event_type",
-                "n_events",
-            )
-        )
+        stream = _read_events_stream(spark, sf_dir, event_time=True, arrival_batches=True)
+        return _hourly_counts(stream, "window_start")
 
     # 420 s: stream-stream join guard — see streaming_click_purchase_join
-    return _run_event_time(spark, build, "stream_la", "append", 420, sf_dir=sf_dir)
+    return _run_event_time(spark, build, "stream_la", "append", 420, sf_dir)
 
 
 # Same aggregation in UPDATE mode: every window updated in a batch emits
@@ -988,24 +876,13 @@ def streaming_late_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFram
 )
 def streaming_late_totals_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
-        stream = _read_events_stream_batched(spark, sf_dir)
-        return (
-            stream.withWatermark("ts", "2 hours")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(
-                F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias(
-                    "window_start"
-                ),
-                "event_type",
-                "n_events",
-            )
-        )
+        stream = _read_events_stream(spark, sf_dir, event_time=True, arrival_batches=True)
+        return _hourly_counts(stream, "window_start")
 
     # upsert-by-key over the accumulated update rows (tz-insensitive:
     # strings and longs only)
     return (
-        _run_event_time(spark, build, "stream_lu", "update", 180, sf_dir=sf_dir)
+        _run_event_time(spark, build, "stream_lu", "update", 180, sf_dir)
         .groupBy("window_start", "event_type")
         .agg(F.max("n_events").alias("n_events"))
     )
@@ -1031,14 +908,10 @@ def streaming_late_dedup_within_watermark(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     def build():
-        stream = _read_events_stream_batched(spark, sf_dir)
-        return (
-            stream.withWatermark("ts", "2 hours")
-            .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-            .select("user_id", "event_type")
-        )
+        stream = _read_events_stream(spark, sf_dir, event_time=True, arrival_batches=True)
+        return _dedup_within_watermark(stream, "2 hours")
 
-    return _run_event_time(spark, build, "stream_ld", "append", 180, sf_dir=sf_dir)
+    return _run_event_time(spark, build, "stream_ld", "append", 180, sf_dir)
 
 
 # Stream-stream inner join under late arrival: the late batch's clicks and
@@ -1070,41 +943,9 @@ def streaming_late_dedup_within_watermark(
 def streaming_late_click_purchase_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    def build():
-        def _stream():
-            return _read_events_stream_batched(spark, sf_dir)
+    def read():
+        return _read_events_stream(spark, sf_dir, event_time=True, arrival_batches=True)
 
-        purchases = (
-            _stream()
-            .filter(F.col("event_type") == "purchase")
-            .select(
-                F.col("event_id").alias("purchase_id"),
-                "user_id",
-                F.col("ts").alias("p_ts"),
-            )
-            .withWatermark("p_ts", "2 hours")
-        )
-        clicks = (
-            _stream()
-            .filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("c_ts"),
-            )
-            .withWatermark("c_ts", "2 hours")
-        )
-        return purchases.join(
-            clicks,
-            F.expr(
-                "user_id = c_user AND c_ts BETWEEN p_ts - INTERVAL 1 HOUR AND p_ts"
-            ),
-        ).select(
-            "purchase_id",
-            "click_id",
-            "user_id",
-            F.date_format("p_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
-            F.date_format("c_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-        )
-
-    return _run_event_time(spark, build, "stream_lj", "append", 240, sf_dir=sf_dir)
+    return _run_event_time(
+        spark, lambda: _click_purchase_pairs(read), "stream_lj", "append", 240, sf_dir
+    )

@@ -11,12 +11,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from pyrecount_spark.operators.windows import sessionize, sliding_agg, tumbling_agg
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
 from pyrecount_spark.session import read_events
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 # ---------------------------------------------------------------------------

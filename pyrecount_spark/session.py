@@ -148,24 +148,17 @@ def _ship_package(spark: SparkSession) -> None:
 
 
 def read_events(spark: SparkSession, sf_dir: str):
-    """Read the events table, tolerating nanosecond parquet timestamps.
+    """Read the events table.
 
-    Spark 4.1 reads parquet TIMESTAMP(NANOS) natively as ``timestamp_ntz``
+    Spark 4 reads parquet TIMESTAMP(NANOS) natively as ``timestamp_ntz``
     (microsecond-truncated — the same µs semantics DuckDB/Arrow surface for
-    this column), so no conf or conversion is needed. The ``bigint`` guard
-    keeps older runtimes working where a legacy nanos-as-long read could
-    still surface raw nanos; integer ``div`` keeps full precision (a double
-    division would lose bits past 2^53). Never set
+    this column), so no conf or conversion is needed; the year-2024 canary
+    in tests/test_streaming_queries.py pins that. Never set
     ``spark.sql.legacy.parquet.nanosAsLong`` here: under Spark 4.1 that
-    path yields µs-valued longs and the div-1000 shim would collapse event
+    path yields µs-valued longs, and any div-1000 shim would collapse event
     times into 1970.
     """
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
+    return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):

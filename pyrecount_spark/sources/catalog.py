@@ -17,6 +17,8 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Sequence
 
+from pyrecount_spark.functions.scalars import ORGANISM_REMAP
+
 
 class Annotation(str, Enum):
     """Annotation sources (models.py:7-14)."""
@@ -58,12 +60,9 @@ class Extensions(str, Enum):
     RR = "RR.gz"
 
 
-ORGANISM_LATIN = {"Homo sapiens": "human", "Mus musculus": "mouse"}
-
-
 def normalize_organism(name: str) -> str:
     """utils.py:6-9 — pass through unmatched values."""
-    return ORGANISM_LATIN.get(name, name)
+    return ORGANISM_REMAP.get(name, name)
 
 
 def shard2(ident: str) -> str:

@@ -13,7 +13,7 @@ from __future__ import annotations
 import csv
 import gzip
 from functools import reduce
-from typing import Sequence
+from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,14 +26,20 @@ from pyspark.sql.types import (
 )
 
 
-def _first_line(path: str, comment: str) -> str:
-    """First line of ``path`` that is neither blank nor starts with
-    ``comment`` — the line Spark's CSV reader takes as the header. ``.gz``
-    is decompressed by suffix, Spark's own codec rule."""
+def _lines(path: str, comment: str) -> Iterator[str]:
+    """Lines of ``path`` that are neither blank nor start with ``comment``
+    — the lines Spark's CSV reader parses, header first. ``.gz`` is
+    decompressed by suffix, Spark's own codec rule."""
     with (gzip.open if path.endswith(".gz") else open)(path, "rt", encoding="utf-8") as fh:
         for line in fh:
             if line.strip() and not line.startswith(comment):
-                return line.rstrip("\r\n")
+                yield line.rstrip("\r\n")
+
+
+def _first_line(path: str, comment: str) -> str:
+    """The header line of ``path`` as Spark's CSV reader takes it."""
+    for line in _lines(path, comment):
+        return line
     raise ValueError(f"no header line in {path}")
 
 
@@ -110,25 +116,20 @@ def read_matrix_market_coo(spark: SparkSession, path: str) -> DataFrame:
     sparse**. 1-based MM indices are kept as-is (dim tables use the same
     base); ``%``-prefixed comment lines and the dims line are dropped.
 
-    Distributed parse: ``spark.read.text`` splits the file across tasks; the
-    dims line (the first non-comment line, read on the driver by
-    ``_first_line``) is removed by an anti-condition on its exact content,
-    so no job runs before the scan and no single-node bottleneck."""
-    dims_line = _first_line(path, "%")
-    body = spark.read.text(path).filter(
-        ~F.col("value").startswith("%") & (F.col("value") != dims_line)
+    Distributed parse: Spark's CSV reader splits the file across tasks with
+    ``%`` as the comment prefix and the dims line as the header, so the dims
+    line is dropped by position (the first non-comment line of the file,
+    the one ``_first_line`` reads) — a body entry with the same text stays.
+    Pattern matrices have no value field; their entries read as 1.0."""
+    coo = (
+        spark.read.options(sep=" ", header=True, comment="%")
+        .schema(COO_SCHEMA)
+        .csv(path)
     )
-    parts = F.split(F.trim(F.col("value")), r"\s+")
-    return body.select(
-        parts.getItem(0).cast("long").alias("row_idx"),
-        parts.getItem(1).cast("long").alias("col_idx"),
-        # pattern matrices have no value field; get() yields NULL where an
-        # index read would raise under ANSI mode
-        F.coalesce(F.get(parts, 2).cast("double"), F.lit(1.0)).alias("value"),
-    )
+    return coo.withColumn("value", F.coalesce("value", F.lit(1.0)))
 
 
-def matrix_market_dims(spark: SparkSession, path: str) -> tuple[int, int, int]:
+def matrix_market_dims(path: str) -> tuple[int, int, int]:
     """Header dims of an MM file: (n_rows, n_cols, nnz), read on the driver."""
     r, c, n = _first_line(path, "%").split()
     return int(r), int(c), int(n)
@@ -139,3 +140,11 @@ def read_id_list(spark: SparkSession, path: str, col: str = "rail_id") -> DataFr
     Stays a DataFrame (joined to COO col_idx) — never a driver list unless
     genuinely tiny."""
     return read_tsv_strings(spark, path).select(col)
+
+
+def id_list_length(path: str) -> int:
+    """Rows ``read_id_list`` returns for ``path``, counted on the driver."""
+    n = sum(1 for _ in _lines(path, "#"))
+    if not n:
+        raise ValueError(f"no header line in {path}")
+    return n - 1

@@ -394,18 +394,22 @@ def test_empty_tsv_raises_naming_file(spark, lake_copy, catalog_df):
 
 
 def test_loads_start_no_spark_job(spark, lake, catalog_df):
-    """Headers are read on the driver: once the project -> samples map is
-    memoized, building the catalog, metadata and gene frames runs no job."""
+    """Headers, MM dims and ID-list lengths are read on the driver: once
+    the project -> samples map is memoized, building the catalog, metadata,
+    gene and junction frames runs no job."""
     sc = spark.sparkContext
     proj = Project(
         spark, metadata=catalog_df, lake_dir=lake, dbase="sra",
         annotation=Annotation.GENCODE_V29,
     )
-    assert proj.samples_by_project  # the one driver collect, memoized
+    p1 = Project(spark, metadata=catalog_df.filter(F.col("project") == "P1"),
+                 lake_dir=lake, dbase="sra")
+    assert proj.samples_by_project and p1.samples_by_project  # memoized collects
     loads = {
         "catalog": Metadata(spark, lake).load,
         "metadata": lambda: proj.load(Dtype.METADATA),
         "gene": lambda: proj.load(Dtype.GENE),
+        "junctions": lambda: p1.load(Dtype.JXN),
     }
     for name, load in loads.items():
         group = f"test-api-no-job-{name}"

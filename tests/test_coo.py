@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from pyrecount_spark.operators.relational import anti_join
 from pyrecount_spark.sources.readers import (
+    id_list_length,
     matrix_market_dims,
     read_id_list,
     read_matrix_market_coo,
@@ -64,15 +65,25 @@ def test_coo_parse_gz_pattern(spark, tmp_path):
     assert {(r.row_idx, r.col_idx): r.value for r in coo.collect()} == {(1, 2): 1.0, (2, 1): 1.0}
 
 
-def test_mm_dims(spark, mm_path):
-    assert matrix_market_dims(spark, mm_path) == (4, 3, 5)
+def test_coo_keeps_entry_equal_to_dims_line(spark, tmp_path):
+    """The dims line is dropped by position, not by text: a body entry
+    that reads like the dims line (``3 2 3`` in a 3x2 matrix with 3
+    entries) is data."""
+    p = tmp_path / "same.mtx"
+    p.write_text("%%MatrixMarket matrix coordinate integer general\n3 2 3\n1 1 4\n3 2 3\n2 1 5\n")
+    coo = read_matrix_market_coo(spark, str(p))
+    assert sorted(map(tuple, coo.collect())) == [(1, 1, 4.0), (2, 1, 5.0), (3, 2, 3.0)]
+
+
+def test_mm_dims(mm_path):
+    assert matrix_market_dims(mm_path) == (4, 3, 5)
 
 
 def test_width_validation_positive(spark, mm_path, ids_path):
     # accessor.py:434-435: MM column count must equal the id-list length
-    _, n_cols, _ = matrix_market_dims(spark, mm_path)
+    _, n_cols, _ = matrix_market_dims(mm_path)
     ids = read_id_list(spark, ids_path)
-    assert ids.count() == n_cols
+    assert ids.count() == n_cols == id_list_length(ids_path)
 
 
 def test_orphan_check_anti_join(spark, mm_path, ids_path):
@@ -88,9 +99,9 @@ def test_orphan_check_anti_join(spark, mm_path, ids_path):
     assert orphans.count() == 0
 
 
-def test_width_validation_negative(spark, mm_path):
+def test_width_validation_negative(mm_path):
     """A mismatched id list (FIXTURES.md F6 negative case) is detected."""
-    _, n_cols, _ = matrix_market_dims(spark, mm_path)
+    _, n_cols, _ = matrix_market_dims(mm_path)
     assert n_cols != 2  # an id list of 2 would fail the check
 
 

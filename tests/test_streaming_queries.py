@@ -18,16 +18,23 @@ timestamps. These tests pin both layers:
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
-from pyrecount_spark.plans import QUERIES, load_all
+from pyrecount_spark.plans import ORACLES, QUERIES, load_all
 from pyrecount_spark.plans.streaming_q import _read_events_stream
 from pyrecount_spark.session import read_events
 
 SF_DIR = "/root/testdata/sf0.001"
 
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+from check_oracle import compare  # noqa: E402
+
 load_all()
+STREAMING = sorted(n for n in QUERIES if n.startswith("streaming_"))
 
 
 def test_event_time_canary_streamed(spark):
@@ -112,6 +119,25 @@ def test_streaming_query_matches_batch_twin(spark, name):
     expected = _batch_counts(spark)[name]
     got = QUERIES[name](spark, SF_DIR).count()
     assert got == expected, f"{name}: stream={got} batch={expected}"
+
+
+@pytest.fixture(scope="module")
+def duck():
+    import duckdb
+
+    con = duckdb.connect()
+    for t in ("customer", "documents", "events"):
+        con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{SF_DIR}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", STREAMING)
+def test_streaming_query_matches_oracle(spark, duck, name):
+    """Every registered streaming query equals its DuckDB oracle, value for
+    value and without regard to row order (the harness's own compare)."""
+    got = QUERIES[name](spark, SF_DIR).toPandas()
+    assert compare(name, got, duck.sql(ORACLES[name]).df()) == []
 
 
 def test_streaming_session_window_rows(spark):
