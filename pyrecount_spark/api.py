@@ -25,7 +25,11 @@ Differences from the reference, by design (SURVEY §1.3):
 - junction matrices stay COO — ``(mm_coo, coords)``, never densified;
 - a failed read raises; no silent ``None``/empty fallbacks
   (accessor.py:327-335 quirks intentionally not replicated); a missing
-  metadata tag, counts or junction file raises naming its project.
+  metadata tag, counts, junction or bigwig file raises naming its project;
+- ``cache`` fetches the whole manifest, then raises ``FetchError`` naming
+  every URL that failed;
+- driver-sized frames (manifests) are built from Arrow as JVM local
+  relations, so they start no Python worker task.
 
 File layout consumed (mirrors the reference's cache tree, FIXTURES.md):
 ``{lake}/{dbase}/{dtype}/{project}/<files>`` with the reference's file
@@ -47,7 +51,9 @@ from pyrecount_spark.functions.gtf import with_gtf_attributes
 from pyrecount_spark.functions.scalars import ORGANISM_REMAP, value_remap
 from pyrecount_spark.operators import matrix as M
 from pyrecount_spark.operators.relational import align_union, multi_join
-from pyrecount_spark.sources.catalog import Annotation, Dtype, Tags
+from pyrecount_spark.session import local_frame
+from pyrecount_spark.sources.catalog import Annotation, CatalogLocator, Dtype, ProjectLocator, Tags
+from pyrecount_spark.sources.ingest import FetchError, fetch_manifest
 from pyrecount_spark.sources.readers import (
     id_list_length,
     matrix_market_dims,
@@ -57,6 +63,19 @@ from pyrecount_spark.sources.readers import (
 )
 
 METADATA_JOIN_KEY = ["rail_id", "external_id", "study"]  # accessor.py:470
+
+
+def _fetch_all(spark: SparkSession, rows, fetcher, num_tasks) -> list[tuple[str, str, str]]:
+    """Fetch every (url, path) row, then raise :class:`FetchError` naming
+    each URL that failed; fetched files stay, so a rerun reports them
+    "cached" and fetches only the rest."""
+    statuses = fetch_manifest(
+        local_frame(spark, rows, ["url", "path"]), fetcher=fetcher, num_tasks=num_tasks
+    )
+    errors = {url: status for url, _, status in statuses if status.startswith("error")}
+    if errors:
+        raise FetchError(errors)
+    return statuses
 
 
 class Metadata:
@@ -80,17 +99,13 @@ class Metadata:
         synthesize the per-data-source catalog URLs and fetch the missing
         files into the lake layout ``{lake}/{dbase}/metadata/`` on executors
         (idempotent — existing files report "cached"). Returns per-file
-        (url, path, status)."""
-        from pyrecount_spark.sources.catalog import CatalogLocator
-        from pyrecount_spark.sources.ingest import fetch_manifest
-
+        (url, path, status); raises :class:`FetchError` if any fetch failed."""
         loc = CatalogLocator(root=root, organism=self.organism, dbases=self.dbases)
         rows = [
             (url, os.path.join(self.lake_dir, db, "metadata", os.path.basename(url)))
             for db, url in zip(self.dbases, loc.urls())
         ]
-        manifest = self.spark.createDataFrame(rows, ["url", "path"])
-        return fetch_manifest(manifest, fetcher=fetcher, num_tasks=num_tasks)
+        return _fetch_all(self.spark, rows, fetcher, num_tasks)
 
     def load(self) -> DataFrame:
         paths = sorted(
@@ -148,10 +163,8 @@ class Project:
         """``Project.cache(dtypes)``: synthesize every project's URLs for
         the requested dtypes and fetch the missing files into
         ``{lake}/{dbase}/{dtype}/{project}/`` on executors. Idempotent;
-        returns per-file (url, path, status)."""
-        from pyrecount_spark.sources.catalog import ProjectLocator
-        from pyrecount_spark.sources.ingest import fetch_manifest
-
+        returns per-file (url, path, status); raises :class:`FetchError` if
+        any fetch failed."""
         if isinstance(dtypes, Dtype):
             dtypes = (dtypes,)
         rows = []
@@ -181,8 +194,7 @@ class Project:
                         )
                     rows.append((url, dest))
         rows = list(dict.fromkeys(rows))  # dedup shared-annotation fetches
-        manifest = self.spark.createDataFrame(rows, ["url", "path"])
-        return fetch_manifest(manifest, fetcher=fetcher, num_tasks=num_tasks)
+        return _fetch_all(self.spark, rows, fetcher, num_tasks)
 
     # ---- loader registry (Q10, accessor.py:63-74) ----
     def load(self, dtype: Dtype):
@@ -308,13 +320,12 @@ class Project:
 
     # ---- Q6: manifest only, payloads never parsed ----
     def _load_bigwig_manifest(self) -> DataFrame:
-        rows = []
-        for pid in self.project_ids:
-            for path in sorted(
-                _glob.glob(os.path.join(self._project_dir(Dtype.BW, pid), "*"))
-            ):
-                rows.append((pid, "file://" + path, path))
-        return self.spark.createDataFrame(rows, ["project_id", "url", "path"])
+        rows = [
+            (pid, "file://" + path, path)
+            for pid, paths in self._project_files(Dtype.BW, "*").items()
+            for path in paths
+        ]
+        return local_frame(self.spark, rows, ["project_id", "url", "path"])
 
     # ---- Q7/Q8: scaling as broadcast joins (no dict round-trip) ----
     def scale_mapped_reads(

@@ -21,8 +21,10 @@ from __future__ import annotations
 
 import os
 import warnings
+from collections.abc import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -145,6 +147,18 @@ def _ship_package(spark: SparkSession) -> None:
         spark.sparkContext.addPyFile(str(zip_path))
     except Exception as e:  # noqa: BLE001 - best-effort; self-contained closures still work
         warnings.warn(f"pyrecount_spark not shipped to executors: {e!r}", stacklevel=2)
+
+
+def local_frame(spark: SparkSession, rows: Sequence[tuple], names: Sequence[str]) -> DataFrame:
+    """A driver-sized all-string frame of ``rows``, built from Arrow.
+
+    Spark plans an Arrow table as a JVM ``LocalRelation``, so building or
+    scanning the frame starts no Python worker task (``createDataFrame`` on
+    a list re-serializes it through Python tasks). An empty ``rows`` still
+    gets its string schema.
+    """
+    columns = {name: pa.array([r[i] for r in rows], pa.string()) for i, name in enumerate(names)}
+    return spark.createDataFrame(pa.table(columns))
 
 
 def read_events(spark: SparkSession, sf_dir: str):

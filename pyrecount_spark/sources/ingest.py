@@ -3,11 +3,11 @@
 Replaces the reference's download layer (SURVEY §2.1 S5/S6): an asyncio
 event loop with *unbounded* concurrency on one machine (accessor.py:107-120,
 the in-code TODO at :118) and a sequential ``urlretrieve`` loop
-(accessor.py:302-312). Here the manifest is a DataFrame and the fetch runs
-as a Spark job — concurrency is bounded by task slots, retries come from
-``spark.task.maxFailures`` (S2's hand-rolled backoff, api.py:38-56, for
-free), and idempotence is a per-file exists check (accessor.py:112-113
-semantics) or Parquet partition overwrite.
+(accessor.py:302-312). Here the manifest is an Arrow-built DataFrame and the
+fetch is one ``mapInArrow`` stage over it — concurrency is bounded by task
+slots, retries come from ``spark.task.maxFailures`` (S2's hand-rolled
+backoff, api.py:38-56, for free), and idempotence is a per-file exists
+check (accessor.py:112-113 semantics) or Parquet partition overwrite.
 
 100 TB stance: the lake is partitioned by the catalog coordinates
 (organism/dbase/project) so Catalyst prunes partitions the way the
@@ -17,14 +17,28 @@ reference pre-filters URL lists (accessor.py:320-323 → SURVEY §4).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pyrecount_spark.session import local_frame
+
 # Fetcher signature: (url, dest_path) -> None. Injected so offline harnesses
 # and tests use file copies; production uses urllib. No aiohttp dependency.
 Fetcher = Callable[[str, str], None]
+
+
+class FetchError(OSError):
+    """Some manifest entries failed to fetch; ``errors`` maps each failed URL
+    to its ``"error: ..."`` status. Files that did fetch stay in place."""
+
+    def __init__(self, errors: dict[str, str]):
+        self.errors = errors
+        super().__init__(
+            f"{len(errors)} file(s) failed to fetch: "
+            + "; ".join(f"{url} ({status})" for url, status in errors.items())
+        )
 
 
 def mirror_path(cache_dir: str, url: str) -> str:
@@ -39,8 +53,7 @@ def mirror_path(cache_dir: str, url: str) -> str:
 
 def build_manifest(spark: SparkSession, urls: Sequence[str], cache_dir: str) -> DataFrame:
     """Manifest DataFrame (url, path) — the unit of ingest work."""
-    rows = [(u, mirror_path(cache_dir, u)) for u in urls]
-    return spark.createDataFrame(rows, ["url", "path"])
+    return local_frame(spark, [(u, mirror_path(cache_dir, u)) for u in urls], ["url", "path"])
 
 
 def fetch_manifest_df(
@@ -50,12 +63,15 @@ def fetch_manifest_df(
 ) -> DataFrame:
     """Fetch every missing manifest entry on executors; statuses as a DataFrame.
 
-    ``foreachPartition``-style via mapPartitions so each task reports
-    (url, path, status); existing files are skipped (idempotent re-run,
-    accessor.py:112-113). The status frame is returned *distributed* — at
-    lake scale (10⁷ files) callers persist it next to the data instead of
-    pulling it through the driver; only the convenience facade
-    (``fetch_manifest`` / ``api.Project.cache``) collects.
+    One ``mapInArrow`` stage over the manifest: each task fetches its rows
+    and reports (url, path, status); existing files are skipped as
+    "cached" (idempotent re-run, accessor.py:112-113) and a failed fetch is
+    an ``"error: ..."`` status, not a failed job. ``num_tasks`` repartitions
+    the manifest first; otherwise a small Arrow-built manifest runs one task
+    per row up to the default parallelism. The status frame is returned
+    *distributed* — at lake scale (10⁷ files) callers persist it next to the
+    data instead of pulling it through the driver; only the convenience
+    facade (``fetch_manifest`` / ``api.Project.cache``) collects.
 
     Fetches are atomic: bytes land in a same-directory temp file and are
     ``os.replace``d into place on success, so an interrupted fetch can never
@@ -66,9 +82,11 @@ def fetch_manifest_df(
     don't have this package on PYTHONPATH.
     """
 
-    def fetch_partition(rows: Iterator) -> Iterator[tuple[str, str, str]]:
+    def fetch_batches(batches):
         import os as _os
         import tempfile as _tempfile
+
+        import pyarrow as _pa
 
         def _default(url: str, dest: str) -> None:
             from urllib.request import urlretrieve
@@ -76,11 +94,10 @@ def fetch_manifest_df(
             urlretrieve(url, dest)  # noqa: S310
 
         fetch = fetcher or _default
-        for r in rows:
-            url, path = r["url"], r["path"]
+
+        def status(url: str, path: str) -> str:
             if _os.path.exists(path):
-                yield (url, path, "cached")
-                continue
+                return "cached"
             dirname = _os.path.dirname(path)
             _os.makedirs(dirname, exist_ok=True)
             fd, tmp = _tempfile.mkstemp(
@@ -90,20 +107,24 @@ def fetch_manifest_df(
             try:
                 fetch(url, tmp)
                 _os.replace(tmp, path)  # atomic within the same directory
-                yield (url, path, "fetched")
+                return "fetched"
             except Exception as e:  # noqa: BLE001 - per-file status, job continues
-                yield (url, path, f"error: {e}")
+                return f"error: {e}"
             finally:
                 if _os.path.exists(tmp):
                     _os.remove(tmp)
 
-    rdd = manifest.select("url", "path").rdd
+        for batch in batches:
+            urls, paths = batch.column(0), batch.column(1)
+            statuses = [status(u, p) for u, p in zip(urls.to_pylist(), paths.to_pylist())]
+            yield _pa.RecordBatch.from_arrays(
+                [urls, paths, _pa.array(statuses, urls.type)], ["url", "path", "status"]
+            )
+
+    manifest = manifest.select("url", "path")
     if num_tasks:
-        rdd = rdd.repartition(num_tasks)
-    spark = manifest.sparkSession
-    return spark.createDataFrame(
-        rdd.mapPartitions(fetch_partition), "url string, path string, status string"
-    )
+        manifest = manifest.repartition(num_tasks)
+    return manifest.mapInArrow(fetch_batches, "url string, path string, status string")
 
 
 def fetch_manifest(

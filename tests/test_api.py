@@ -131,6 +131,9 @@ def lake(tmp_path_factory):
     bw.mkdir(parents=True)
     (bw / "sra.base_sums.P1_s1.ALL.bw").write_bytes(b"bw1")
     (bw / "sra.base_sums.P1_s2.ALL.bw").write_bytes(b"bw2")
+    bw2 = sra / "base_sums" / "P2"
+    bw2.mkdir(parents=True)
+    (bw2 / "sra.base_sums.P2_s3.ALL.bw").write_bytes(b"bw3")
 
     return str(root)
 
@@ -393,11 +396,11 @@ def test_empty_tsv_raises_naming_file(spark, lake_copy, catalog_df):
         proj.load(Dtype.METADATA)
 
 
-def test_loads_start_no_spark_job(spark, lake, catalog_df):
-    """Headers, MM dims and ID-list lengths are read on the driver: once
-    the project -> samples map is memoized, building the catalog, metadata,
-    gene and junction frames runs no job."""
-    sc = spark.sparkContext
+def test_loads_start_no_spark_job(spark, lake, catalog_df, job_group):
+    """Headers, MM dims and ID-list lengths are read on the driver and the
+    bigwig manifest is a local relation: once the project -> samples map is
+    memoized, building the catalog, metadata, gene, junction and bigwig
+    frames runs no job."""
     proj = Project(
         spark, metadata=catalog_df, lake_dir=lake, dbase="sra",
         annotation=Annotation.GENCODE_V29,
@@ -410,13 +413,64 @@ def test_loads_start_no_spark_job(spark, lake, catalog_df):
         "metadata": lambda: proj.load(Dtype.METADATA),
         "gene": lambda: proj.load(Dtype.GENE),
         "junctions": lambda: p1.load(Dtype.JXN),
+        "bigwig": lambda: proj.load(Dtype.BW),
     }
     for name, load in loads.items():
-        group = f"test-api-no-job-{name}"
-        sc.setJobGroup(group, name)
-        try:
-            load()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are recorded
-        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+        _, jobs, _ = job_group(f"test-api-no-job-{name}", load)
+        assert jobs == [], name
+
+
+def test_bigwig_manifest_is_local_relation(project):
+    """The manifest is built from Arrow: Spark plans a JVM LocalRelation,
+    not an RDD scan that needs Python worker tasks."""
+    plan = project.load(Dtype.BW)._jdf.queryExecution().optimizedPlan()
+    assert plan.nodeName() == "LocalRelation"
+
+
+def test_bigwig_missing_dir_raises_naming_project(spark, lake_copy, catalog_df):
+    """A project without bigwig files fails the load instead of silently
+    contributing no rows; with none anywhere it names every project."""
+    shutil.rmtree(lake_copy / "sra/base_sums/P2")
+    proj = Project(spark, metadata=catalog_df, lake_dir=str(lake_copy), dbase="sra")
+    with pytest.raises(FileNotFoundError, match=r"base_sums.*\['P2'\]"):
+        proj.load(Dtype.BW)
+    shutil.rmtree(lake_copy / "sra/base_sums")
+    with pytest.raises(FileNotFoundError, match=r"base_sums.*\['P1', 'P2'\]"):
+        proj.load(Dtype.BW)
+
+
+def test_project_cache_raises_on_failed_fetch_then_resumes(spark, catalog_df, tmp_path):
+    """Project.cache runs the whole manifest, then raises FetchError naming
+    the failed URL; the files that did fetch stay, so a rerun reports them
+    "cached" and fetches only the one that failed."""
+    from pyrecount_spark.sources.ingest import FetchError
+
+    proj = Project(
+        spark,
+        metadata=catalog_df.filter(F.col("project") == "P1"),
+        lake_dir=str(tmp_path / "flaky_lake"),
+        dbase="sra",
+    )
+    outage = tmp_path / "outage"  # the fetcher fails on recount_qc while this exists
+    outage.touch()
+
+    def flaky(url, dest):
+        import os as _os
+
+        if "recount_qc" in url and _os.path.exists(str(outage)):
+            raise OSError("503 service unavailable")
+        with open(dest, "w") as fh:
+            fh.write(url)
+
+    with pytest.raises(FetchError) as err:
+        proj.cache("https://example.org/release", fetcher=flaky)
+    assert isinstance(err.value, OSError)
+    [(failed_url, status)] = err.value.errors.items()
+    assert "recount_qc" in failed_url and status.startswith("error") and "503" in status
+    assert failed_url in str(err.value)
+
+    outage.unlink()
+    statuses = {u: s for u, _, s in proj.cache("https://example.org/release", fetcher=flaky)}
+    assert len(statuses) == 5
+    assert statuses.pop(failed_url) == "fetched"
+    assert set(statuses.values()) == {"cached"}

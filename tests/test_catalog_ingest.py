@@ -231,3 +231,36 @@ def test_live_http_ingest_end_to_end(spark, tmp_path):
             assert {r.external_id for r in back.collect()} == {"s1", "s2"}
         finally:
             httpd.shutdown()
+
+
+def test_fetch_runs_one_arrow_stage_sized_by_manifest(spark, tmp_path, job_group):
+    """The fetch is one mapInArrow stage over an Arrow-built manifest: a
+    1-URL manifest runs one job of one task, a 5-URL manifest one task per
+    URL up to the default parallelism (no Python re-serialization stages)."""
+    def fake(u: str, d: str) -> None:
+        open(d, "w").write(u)
+
+    one = build_manifest(spark, ["https://x/one"], str(tmp_path / "one"))
+    statuses, jobs, tasks = job_group("test-ingest-one-url", lambda: fetch_manifest(one, fake))
+    assert [s for _, _, s in statuses] == ["fetched"]
+    assert (len(jobs), tasks) == (1, 1)
+
+    five = build_manifest(spark, [f"https://x/f{i}" for i in range(5)], str(tmp_path / "five"))
+    statuses, jobs, tasks = job_group("test-ingest-five-urls", lambda: fetch_manifest(five, fake))
+    assert len(statuses) == 5
+    assert (len(jobs), tasks) == (1, min(5, spark.sparkContext.defaultParallelism))
+    # num_tasks repartitions the manifest first; the rerun finds every file
+    assert {s for _, _, s in fetch_manifest(five, fake, num_tasks=2)} == {"cached"}
+
+
+def test_manifest_is_local_relation(spark, tmp_path):
+    manifest = build_manifest(spark, ["https://x/a", "https://x/b"], str(tmp_path))
+    assert manifest._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+
+
+def test_empty_manifest(spark, tmp_path):
+    """An empty URL list keeps its (url, path) string schema and fetches
+    nothing."""
+    manifest = build_manifest(spark, [], str(tmp_path))
+    assert manifest.columns == ["url", "path"]
+    assert fetch_manifest(manifest) == []
