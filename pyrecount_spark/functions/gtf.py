@@ -37,9 +37,10 @@ def extract_attribute(attribute: Column, field: str) -> Column:
     return F.when(extracted == "", F.lit(None).cast("string")).otherwise(extracted)
 
 
-def with_gtf_attributes(df: DataFrame, attribute_col: str = "attribute") -> DataFrame:
-    """Append all 12 attribute fields as columns in one projection."""
+def with_gtf_attributes(df: DataFrame) -> DataFrame:
+    """Append all 12 fields of the ``attribute`` column as columns in one
+    projection."""
     return df.select(
         "*",
-        *[extract_attribute(F.col(attribute_col), f).alias(f) for f in GTF_ATTRIBUTE_FIELDS],
+        *[extract_attribute(F.col("attribute"), f).alias(f) for f in GTF_ATTRIBUTE_FIELDS],
     )

@@ -14,11 +14,10 @@ from pyspark.sql import functions as F
 ORGANISM_REMAP = {"Homo sapiens": "human", "Mus musculus": "mouse"}
 
 
-def value_remap(col: Column, mapping: Mapping[str, str], keep_unmatched: bool = True) -> Column:
+def value_remap(col: Column, mapping: Mapping[str, str]) -> Column:
     """F3: chained when/otherwise; unmatched values pass through (the
     reference's dict ``.get(x, x)`` semantics)."""
-    expr = F.lit(None).cast("string") if not keep_unmatched else col
-    out = expr
+    out = col
     for k, v in mapping.items():
         out = F.when(col == k, F.lit(v)).otherwise(out)
     return out
@@ -30,11 +29,10 @@ def split_to_columns(
     sep: str,
     names: Sequence[str],
     casts: Mapping[str, str] | None = None,
-    drop_source: bool = True,
 ) -> DataFrame:
     """F2 (accessor.py:548-560): split a composite key string (e.g. the exon
     key ``chrom|start|end|strand``) into typed columns. ``sep`` is a literal —
-    regex-escaped internally."""
+    regex-escaped internally. The source column is dropped."""
     import re as _re
 
     parts = F.split(F.col(col), _re.escape(sep))
@@ -45,18 +43,7 @@ def split_to_columns(
         F.get(parts, i).cast(casts.get(name, "string")).alias(name)
         for i, name in enumerate(names)
     ]
-    out = df.select("*", *exprs)
-    return out.drop(col) if drop_source else out
-
-
-def paired_end_factor(avg_mapped_len: Column, avg_read_len: Column) -> Column:
-    """F5 (accessor.py:132-134): round(mapped/read) == 2 → 2 else 1."""
-    return F.when(F.round(avg_mapped_len / avg_read_len) == 2, F.lit(2.0)).otherwise(F.lit(1.0))
-
-
-def round_to_long(col: Column) -> Column:
-    """F7 (accessor.py:170)."""
-    return F.round(col, 0).cast("long")
+    return df.select("*", *exprs).drop(col)
 
 
 def round_ratio_half_up(num: Column, den: Column, digits: int) -> Column:

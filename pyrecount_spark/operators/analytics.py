@@ -24,14 +24,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Column names of the events table and of ``cooccurrence_edges``' output.
+_USER, _TYPE, _TS = "user_id", "event_type", "ts"
+_A, _B = "item_a", "item_b"
 
-def funnel_stages(
-    events: DataFrame,
-    stages: list[str],
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
+
+def funnel_stages(events: DataFrame, stages: list[str]) -> DataFrame:
     """Ordered conversion funnel: users counted at stage k iff they did
     stage k strictly after their qualifying stage k-1 event.
 
@@ -39,17 +37,17 @@ def funnel_stages(
     output sorts in funnel order. Each step is a conditional min-timestamp
     aggregate joined back on the user key.
     """
-    reached = events.filter(F.col(type_col) == stages[0]).groupBy(user_col).agg(
-        F.min(ts_col).alias("_t")
+    reached = events.filter(F.col(_TYPE) == stages[0]).groupBy(_USER).agg(
+        F.min(_TS).alias("_t")
     )
     out_rows = [(f"1_{stages[0]}", reached)]
     for i, stage in enumerate(stages[1:], start=2):
         nxt = (
-            events.filter(F.col(type_col) == stage)
-            .join(reached.select(user_col, "_t"), on=user_col)
-            .filter(F.col(ts_col) > F.col("_t"))
-            .groupBy(user_col)
-            .agg(F.min(ts_col).alias("_t"))
+            events.filter(F.col(_TYPE) == stage)
+            .join(reached.select(_USER, "_t"), on=_USER)
+            .filter(F.col(_TS) > F.col("_t"))
+            .groupBy(_USER)
+            .agg(F.min(_TS).alias("_t"))
         )
         out_rows.append((f"{i}_{stage}", nxt))
         reached = nxt
@@ -65,32 +63,28 @@ def funnel_stages(
     return result
 
 
-def cohort_retention(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def cohort_retention(events: DataFrame) -> DataFrame:
     """Weekly retention cohorts: users grouped by first-touch week, counted
     as active per week offset. Returns (cohort_week, week_offset, n_users)
     with cohort_week formatted as the ISO Monday date string."""
-    first = events.groupBy(user_col).agg(
-        F.date_trunc("week", F.min(ts_col)).alias("_cw")
+    first = events.groupBy(_USER).agg(
+        F.date_trunc("week", F.min(_TS)).alias("_cw")
     )
     active = (
-        events.join(first, on=user_col)
+        events.join(first, on=_USER)
         .select(
-            user_col,
+            _USER,
             "_cw",
-            F.date_trunc("week", F.col(ts_col)).alias("_aw"),
+            F.date_trunc("week", F.col(_TS)).alias("_aw"),
         )
         .select(
-            user_col,
+            _USER,
             F.date_format("_cw", "yyyy-MM-dd").alias("cohort_week"),
             (F.datediff(F.col("_aw"), F.col("_cw")) / 7).cast("long").alias("week_offset"),
         )
     )
     return active.groupBy("cohort_week", "week_offset").agg(
-        F.countDistinct(user_col).alias("n_users")
+        F.countDistinct(_USER).alias("n_users")
     )
 
 
@@ -116,50 +110,13 @@ def cooccurrence_edges(
     )
 
 
-def triangle_count(edges: DataFrame, a_col: str = "item_a", b_col: str = "item_b") -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Count triangles in an (a < b)-oriented edge list.
 
     e1=(x,y), e2=(y,z), e3=(x,z) with the orientation guaranteeing each
     triangle counted once. Two equi-joins; fan-out bounded by max degree."""
-    e1 = edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("y"))
-    e2 = edges.select(F.col(a_col).alias("y"), F.col(b_col).alias("z"))
-    e3 = edges.select(F.col(a_col).alias("x"), F.col(b_col).alias("z"))
+    e1 = edges.select(F.col(_A).alias("x"), F.col(_B).alias("y"))
+    e2 = edges.select(F.col(_A).alias("y"), F.col(_B).alias("z"))
+    e3 = edges.select(F.col(_A).alias("x"), F.col(_B).alias("z"))
     tri = e1.join(e2, on="y").join(e3, on=["x", "z"])
     return tri.agg(F.count(F.lit(1)).alias("n_triangles"))
-
-
-def equi_width_histogram(
-    df: DataFrame, value: Column, buckets: int = 16
-) -> DataFrame:
-    """ANALYZE-style equi-width histogram over an integer-valued column.
-
-    min/max reduce in-plan (1-row aggregate, broadcast cross join — the
-    scalar-subquery pattern, no driver round trip), bucket assignment is
-    pure integer arithmetic (width = (max-min)//k + 1, so the max value
-    lands in bucket k-1), and the per-bucket rollup is one hash aggregate
-    keyed on ≤ k values. Everything integer → bit-identical in any
-    engine; no quantile interpolation to go float-flaky. Equi-DEPTH
-    boundaries would come from percentile() the same way, at the cost of
-    float boundary comparisons.
-
-    Returns (bucket, lo, hi, n_rows, n_distinct) for non-empty buckets.
-    """
-    c = df.select(value.cast("long").alias("v"))
-    mm = c.agg(F.min("v").alias("_mn"), F.max("v").alias("_mx"))
-    width = (F.col("_mx") - F.col("_mn")) / buckets
-    with_b = c.crossJoin(F.broadcast(mm)).withColumn(
-        "_w", F.floor(width).cast("long") + 1
-    )
-    return (
-        with_b.withColumn(
-            "bucket", F.expr("(v - _mn) div _w").cast("long")
-        )
-        .groupBy("bucket")
-        .agg(
-            F.min("v").alias("lo"),
-            F.max("v").alias("hi"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct(F.col("v")).cast("long").alias("n_distinct"),
-        )
-        .orderBy("bucket")
-    )

@@ -1,6 +1,6 @@
 """K-means (Lloyd) clustering over the embedding column — the iterative
-refinement that slots into the IVF coarse quantizer (similarity.py's
-``ivf_assign`` docstring points here).
+refinement behind the IVF coarse quantizer (similarity.py's
+``ivf_topk``).
 
 Scale design
 ------------
@@ -28,6 +28,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Decimals kept in distances before the argmin and in centroid components.
+_DIGITS = 6
+# Id and vector columns of the embeddings table.
+EMB_ID, EMB_VEC = "vec_id", "embedding"
 
 def sq_dist(vec_col: Column, lit_vec: Column) -> Column:
     """Sequential-fold squared-L2 distance (deterministic accumulation)."""
@@ -42,11 +46,7 @@ def sq_dist(vec_col: Column, lit_vec: Column) -> Column:
     )
 
 
-
-
-def nearest_centroid(
-    cents: list[tuple[int, list[float]]], vec_col: str, round_digits: int = 6
-) -> Column:
+def nearest_centroid(cents: list[tuple[int, list[float]]], vec_col: str) -> Column:
     """(cluster, dist) struct of the nearest literal centroid — narrow map.
 
     ``F.least`` over (rounded dist, cid) structs = argmin with the id
@@ -56,8 +56,8 @@ def nearest_centroid(
     # (advsf1 100 s -> 159 s; sf0.01 3.9 s -> 8.1 s): k structs multiply
     # the tree to ~15k nodes, past the janino 64 KB method envelope, so
     # codegen falls back / splits and compile time dominates. The HOF
-    # interpreter with k small trees wins here — the dot_unrolled trick
-    # pays only when ONE unrolled expression replaces ONE interpreted HOF,
+    # interpreter with k small trees wins here — unrolling pays only when
+    # ONE unrolled expression replaces ONE interpreted HOF,
     # not k of them side by side.
     #
     # Round-14: built as ONE SQL fragment via F.expr (operators/exprs.py)
@@ -70,7 +70,7 @@ def nearest_centroid(
     vc = qcol(vec_col)
     structs = [
         f"named_struct('dist', round({sq_dist_sql(vc, arr_sql(cvec))}, "
-        f"{int(round_digits)}), 'cluster', CAST({int(cid)} AS BIGINT))"
+        f"{_DIGITS}), 'cluster', CAST({int(cid)} AS BIGINT))"
         for cid, cvec in cents
     ]
     # k=1: least() requires >= 2 args; the single struct IS the argmin
@@ -82,7 +82,6 @@ def lloyd_update(
     cents: list[tuple[int, list[float]]],
     vec_col: str,
     dim: int,
-    round_digits: int = 6,
 ) -> list[tuple[int, list[float]]]:
     """One centroid update: per-cluster per-dimension mean, rounded.
 
@@ -93,7 +92,7 @@ def lloyd_update(
     means = assigned.groupBy("_cluster").agg(
         *[
             F.round(F.avg(F.element_at(F.col(vec_col), d + 1).cast("double")),
-                    round_digits).alias(f"m{d}")
+                    _DIGITS).alias(f"m{d}")
             for d in range(dim)
         ]
     )
@@ -109,8 +108,6 @@ def kmeans_lloyd(
     k: int = 4,
     iters: int = 2,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Lloyd's k-means: ``iters`` assignment/update rounds, then the final
     assignment. Init = the k lowest-id vectors (seedless, deterministic).
@@ -120,19 +117,19 @@ def kmeans_lloyd(
     the textbook distributed Lloyd, linear in corpus size.
     """
     init_rows = (
-        embeddings.orderBy(F.asc(id_col)).limit(k).select(id_col, vec_col).collect()
+        embeddings.orderBy(F.asc(EMB_ID)).limit(k).select(EMB_ID, EMB_VEC).collect()
     )
     cents = [
-        (int(r[id_col]), [float(v) for v in r[vec_col]]) for r in init_rows
+        (int(r[EMB_ID]), [float(v) for v in r[EMB_VEC]]) for r in init_rows
     ]
     for _ in range(iters):
         assigned = embeddings.withColumn(
-            "_cluster", nearest_centroid(cents, vec_col).getField("cluster")
+            "_cluster", nearest_centroid(cents, EMB_VEC).getField("cluster")
         )
-        cents = lloyd_update(assigned, cents, vec_col, dim)
-    final = nearest_centroid(cents, vec_col)
+        cents = lloyd_update(assigned, cents, EMB_VEC, dim)
+    final = nearest_centroid(cents, EMB_VEC)
     return embeddings.select(
-        id_col,
+        EMB_ID,
         final.getField("cluster").alias("cluster"),
         final.getField("dist").alias("dist"),
     )

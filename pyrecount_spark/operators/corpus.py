@@ -222,24 +222,6 @@ def weighted_mix(
     )
 
 
-def write_training_shards(
-    mixed: DataFrame, path: str, n_shards: int, key: str = "shuffle_key"
-) -> None:
-    """Land the mixed corpus as ``n_shards`` range-disjoint files ordered
-    by the content-hash shuffle key — the reproducible global training
-    order, materialized without any single-task sort.
-
-    ``repartitionByRange(key)`` gives each shard a disjoint hash range
-    (uniform by construction — the key is md5), ``sortWithinPartitions``
-    fixes the within-shard order; concatenating shards in range order IS
-    the global shuffle. A trainer streams shard files in name order and
-    sees the same example order on every run, on any cluster size.
-    """
-    from pyrecount_spark.sources.bucketing import write_range_sorted
-
-    write_range_sorted(mixed, path, [key], n_shards)
-
-
 def chunk_documents(
     df: DataFrame,
     text_col: str,

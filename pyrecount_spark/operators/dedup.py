@@ -120,12 +120,6 @@ def minhash_family_cols(shingle: Column | str, num_perm: int) -> list[Column]:
     ]
 
 
-def minhash_hash_expr(shingle: Column | str, num_perm: int) -> Column:
-    """Concatenated form of ``minhash_family_cols`` (oracle-shaped twin)."""
-    parts = minhash_family_cols(shingle, num_perm)
-    return parts[0] if len(parts) == 1 else F.concat(*parts)
-
-
 def minhash_band_buckets(
     df: DataFrame,
     text_col: str,
@@ -137,7 +131,7 @@ def minhash_band_buckets(
     """MinHash signatures + LSH banding, engine-portable.
 
     "Permutation" p is the p-th 8-hex-char slice of the concatenated
-    prefix-family sha256 string (``minhash_hash_expr``); the minhash is the
+    prefix-family sha256 strings (``minhash_family_cols``); the minhash is the
     lexicographic min per (doc, p) — deterministic, seedless, identical in
     any engine with sha256. Bands of ``band_size`` rows hash to a bucket
     id. Returns (doc id, band, bucket).
@@ -241,7 +235,6 @@ def minhash_candidate_pairs(
 def probe_restricted_candidate_pairs(
     buckets: DataFrame,
     id_col: str,
-    probe_col: str = "_probe",
     max_bucket_docs: int = 4096,
 ) -> DataFrame:
     """Candidate pairs restricted to those touching a PROBE member — the
@@ -278,7 +271,7 @@ def probe_restricted_candidate_pairs(
     grouped = buckets.groupBy("band", "bucket").agg(
         F.sort_array(F.collect_set(id_col)).alias("ids"),
         F.sort_array(
-            F.collect_set(F.when(F.col(probe_col), F.col(id_col)))
+            F.collect_set(F.when(F.col("_probe"), F.col(id_col)))
         ).alias("probes"),
     )
     pairs = F.flatten(
@@ -569,7 +562,6 @@ def connected_components(
     id_col: str = "id",
     a_col: str = "id_a",
     b_col: str = "id_b",
-    max_iter: int = 25,
 ) -> DataFrame:
     """Duplicate-cluster resolution: min-label propagation over the
     candidate-pair graph. Every node converges to the smallest id reachable
@@ -593,7 +585,7 @@ def connected_components(
     labels = nodes.select(
         F.col(id_col).alias("node"), F.col(id_col).alias("label")
     ).localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    for _ in range(25):
         nbr = sym.join(
             labels.withColumnRenamed("node", "dst"), on="dst"
         ).select(F.col("src").alias("node"), "label")
@@ -729,7 +721,7 @@ def prefix_filtered_jaccard(
     shape against the other obvious rewrite: on the small-vocabulary
     corpus (931 distinct shingles ⇒ 26-word bitsets) verifying via
     fixed-width bitmaps — unrolled ``bit_count(element_at(a,i) &
-    element_at(b,i))`` sums, the ``dot_unrolled`` trick — ran ~4x SLOWER
+    element_at(b,i))`` sums, an unrolled fixed-width fold — ran ~4x SLOWER
     than ``array_intersect`` over the same checkpointed 6.15M candidates
     (12.7-22.8 s vs 2.8-3.2 s warm at sf0.1): the 26-term chained
     element_at tree does not beat the codegen'd hash-set intersect even
@@ -1073,8 +1065,6 @@ def semantic_dedup(
     iters: int = 1,
     dim: int = 64,
     threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     target_per_cluster: int | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -1095,10 +1085,11 @@ def semantic_dedup(
     block size even when a cluster is huge or k is small — a single join
     key can't be split by AQE, this decomposition is what restores
     parallelism. Per-vector norms are computed ONCE before pairing and the
-    per-pair dot product is the codegen-unrolled form, not an interpreted
-    fold. No all-pairs scan anywhere. Vector payloads re-attach to the
-    enumerated pairs via SIZE-GATED broadcasts (``broadcast_if_small`` —
-    rows measured with one count over the checkpointed assignment, bytes
+    per-pair dot product is the sequential ``dot`` fold (an unrolled form
+    measured slower on this stage, see below). No all-pairs scan anywhere.
+    Vector payloads re-attach to the enumerated pairs via SIZE-GATED
+    broadcasts (``broadcast_if_small`` — rows measured with one count over
+    the checkpointed assignment, bytes
     = rows × (8·dim + overhead)): corpus-sized vector tables fall back to
     plain shuffle joins instead of an unbounded forced broadcast.
     Intermediates are lazily ``localCheckpoint``ed, not ``.cache()``d, so
@@ -1108,7 +1099,7 @@ def semantic_dedup(
     silently truncate the dot product (norms run over the full array), a
     longer one would null it out — so the width is probed up front (inside
     the single corpus-stats aggregate, kept OUT of the scoring path where a
-    per-row conditional would be inlined 64× into the unrolled dot by
+    per-row conditional would be inlined 64× into the dot by
     projection collapse) and mismatches raise instead of skewing cosines.
     ``target_per_cluster`` derives k = max(4, ceil(N / target)) from that
     same aggregate (the SemDeDup scaling contract) so callers don't pay a
@@ -1116,7 +1107,7 @@ def semantic_dedup(
 
     Returns one row per vector: (id, cluster, n_sem_dups, keep).
     """
-    from pyrecount_spark.operators.clustering import kmeans_lloyd
+    from pyrecount_spark.operators.clustering import EMB_ID, EMB_VEC, kmeans_lloyd
     from pyrecount_spark.operators.joins import broadcast_if_small
     from pyrecount_spark.operators.similarity import dot, norm
 
@@ -1132,13 +1123,13 @@ def semantic_dedup(
     stats = embeddings.agg(
         F.count(F.lit(1)).alias("n"),
         F.max(
-            F.when(F.size(F.col(vec_col)) != dim, F.size(F.col(vec_col)))
+            F.when(F.size(F.col(EMB_VEC)) != dim, F.size(F.col(EMB_VEC)))
         ).alias("bad_w"),
     ).collect()[0]
     n_vec = int(stats["n"])
     if stats["bad_w"] is not None:
         raise ValueError(
-            f"semantic_dedup: expected {dim}-dim vectors in {vec_col!r}, "
+            f"semantic_dedup: expected {dim}-dim vectors in {EMB_VEC!r}, "
             f"found width {stats['bad_w']}"
         )
     if target_per_cluster is not None:
@@ -1155,10 +1146,8 @@ def semantic_dedup(
     # now comes from the stats aggregate above), and a lazy checkpoint
     # with two downstream consumers would race-recompute Lloyd.
     assigned = (
-        kmeans_lloyd(
-            embeddings, k=k, iters=iters, dim=dim, id_col=id_col, vec_col=vec_col
-        )
-        .select(id_col, "cluster")
+        kmeans_lloyd(embeddings, k=k, iters=iters, dim=dim)
+        .select(EMB_ID, "cluster")
         .localCheckpoint(eager=True)
     )
     vec_est_bytes = n_vec * (8 * dim + 48)
@@ -1166,14 +1155,14 @@ def semantic_dedup(
     # the planner would pessimistically shuffle-join it everywhere; the
     # measured count restores the broadcast decision under the same gate
     v = (
-        embeddings.select(id_col, vec_col)
+        embeddings.select(EMB_ID, EMB_VEC)
         .join(
             broadcast_if_small(assigned, n_vec * 24, broadcast_limit_bytes),
-            on=id_col,
+            on=EMB_ID,
         )
-        .withColumn("_nrm", norm(F.col(vec_col)))
+        .withColumn("_nrm", norm(F.col(EMB_VEC)))
         .withColumn(
-            "_blk", F.pmod(F.xxhash64(F.col(id_col)), F.lit(pair_blocks))
+            "_blk", F.pmod(F.xxhash64(F.col(EMB_ID)), F.lit(pair_blocks))
         )
     )
     # candidate ID pairs are enumerated over NARROW rows (ids + block only
@@ -1183,12 +1172,12 @@ def semantic_dedup(
     # keeps Catalyst from folding the 64-term dot product into the
     # sort-merge join CONDITION, where it would run interpreted per pair.
     a = v.select(
-        F.col(id_col).alias("id_a"),
+        F.col(EMB_ID).alias("id_a"),
         "cluster",
         F.col("_blk").alias("_ba"),
     ).withColumn("_tb", F.explode(F.sequence(F.col("_ba"), F.lit(pair_blocks - 1))))
     b = v.select(
-        F.col(id_col).alias("id_b"),
+        F.col(EMB_ID).alias("id_b"),
         F.col("cluster").alias("_cb"),
         F.col("_blk").alias("_bb"),
     )
@@ -1220,12 +1209,12 @@ def semantic_dedup(
     except (TypeError, ValueError):
         score_parts = spark.sparkContext.defaultParallelism
     pairs = pairs.repartition(score_parts, "id_a", "id_b")
-    vecs = v.select(id_col, F.col(vec_col).alias("_v"), "_nrm")
+    vecs = v.select(EMB_ID, F.col(EMB_VEC).alias("_v"), "_nrm")
     edges = (
         pairs.join(
             broadcast_if_small(
                 vecs.select(
-                    F.col(id_col).alias("id_a"),
+                    F.col(EMB_ID).alias("id_a"),
                     F.col("_v").alias("_va"),
                     F.col("_nrm").alias("_na"),
                 ),
@@ -1237,7 +1226,7 @@ def semantic_dedup(
         .join(
             broadcast_if_small(
                 vecs.select(
-                    F.col(id_col).alias("id_b"),
+                    F.col(EMB_ID).alias("id_b"),
                     F.col("_v").alias("_vb"),
                     F.col("_nrm").alias("_nb"),
                 ),
@@ -1286,25 +1275,25 @@ def semantic_dedup(
             F.explode(
                 F.array(
                     F.struct(
-                        F.col("id_a").alias(id_col), F.lit(False).alias("_is_b")
+                        F.col("id_a").alias(EMB_ID), F.lit(False).alias("_is_b")
                     ),
                     F.struct(
-                        F.col("id_b").alias(id_col), F.lit(True).alias("_is_b")
+                        F.col("id_b").alias(EMB_ID), F.lit(True).alias("_is_b")
                     ),
                 )
             ).alias("_e")
         )
-        .select(F.col(f"_e.{id_col}").alias(id_col), F.col("_e._is_b").alias("_is_b"))
-        .groupBy(id_col)
+        .select(F.col(f"_e.{EMB_ID}").alias(EMB_ID), F.col("_e._is_b").alias("_is_b"))
+        .groupBy(EMB_ID)
         .agg(
             F.count(F.lit(1)).alias("n_sem_dups"),
             F.max("_is_b").alias("_drop"),
         )
     )
     return (
-        assigned.join(endpoint_stats, on=id_col, how="left")
+        assigned.join(endpoint_stats, on=EMB_ID, how="left")
         .select(
-            id_col,
+            EMB_ID,
             "cluster",
             F.coalesce(F.col("n_sem_dups"), F.lit(0)).cast("long").alias("n_sem_dups"),
             F.coalesce(~F.col("_drop"), F.lit(True)).alias("keep"),

@@ -1,7 +1,7 @@
 """Graph analytics over candidate-pair graphs (SURVEY §2.10 extension).
 
 ``pagerank_fixed`` runs a FIXED number of power iterations with the rank
-ROUNDED to ``sync_decimals`` after every step. The rounding is load-bearing
+ROUNDED to 9 decimals after every step. The rounding is load-bearing
 for portability: per-edge contributions are identical IEEE doubles in any
 engine, but their summation order is not — rounding each iteration's output
 collapses the ulp drift before it can compound, which is what lets a SQL
@@ -18,14 +18,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Edge endpoint columns of the candidate-pair graph.
+_A, _B = "id_a", "id_b"
+# Decimals every PageRank / HITS step rounds to.
+_DECIMALS = 9
+
 
 def pagerank_fixed(
     edges: DataFrame,
     iterations: int = 3,
     damping: float = 0.85,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    sync_decimals: int = 9,
 ) -> DataFrame:
     """PageRank over the undirected graph of ``edges`` (symmetrized), nodes
     = every endpoint. Returns (node, rank) after ``iterations`` steps.
@@ -33,15 +35,15 @@ def pagerank_fixed(
     Symmetrization means no dangling nodes (every node has out-degree ≥ 1),
     so no dangling-mass redistribution term is needed.
     """
-    sym = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst")).unionAll(
-        edges.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+    sym = edges.select(F.col(_A).alias("src"), F.col(_B).alias("dst")).unionAll(
+        edges.select(F.col(_B).alias("src"), F.col(_A).alias("dst"))
     )
     sym = sym.localCheckpoint(eager=True)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     deg = sym.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("outdeg"))
     n = nodes.count()
     teleport = (1.0 - damping) / n
-    ranks = nodes.select("node", F.round(F.lit(1.0 / n), sync_decimals).alias("r"))
+    ranks = nodes.select("node", F.round(F.lit(1.0 / n), _DECIMALS).alias("r"))
     for _ in range(iterations):
         contrib = (
             sym.join(ranks.withColumnRenamed("node", "src"), on="src")
@@ -53,7 +55,7 @@ def pagerank_fixed(
             "node",
             F.round(
                 F.lit(teleport) + damping * F.coalesce(F.col("m"), F.lit(0.0)),
-                sync_decimals,
+                _DECIMALS,
             ).alias("r"),
         )
         ranks = ranks.localCheckpoint(eager=True)
@@ -63,8 +65,6 @@ def pagerank_fixed(
 def label_propagation_fixed(
     edges: DataFrame,
     iterations: int = 3,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
 ) -> DataFrame:
     """Synchronous label propagation (community detection) over the
     symmetrized edge graph: each step every node adopts the most frequent
@@ -76,8 +76,8 @@ def label_propagation_fixed(
     labels on the neighbor key) + one count aggregation + one rank-1
     window, all partitioned by node id; lineage truncated per step.
     """
-    sym = edges.select(F.col(a_col).alias("a"), F.col(b_col).alias("b")).unionAll(
-        edges.select(F.col(b_col).alias("a"), F.col(a_col).alias("b"))
+    sym = edges.select(F.col(_A).alias("a"), F.col(_B).alias("b")).unionAll(
+        edges.select(F.col(_B).alias("a"), F.col(_A).alias("b"))
     )
     sym = sym.localCheckpoint(eager=True)
     labels = sym.select(F.col("a").alias("node")).distinct().select(
@@ -104,12 +104,9 @@ def label_propagation_fixed(
 def hits_fixed(
     edges: DataFrame,
     iterations: int = 2,
-    a_col: str = "id_a",
-    b_col: str = "id_b",
-    sync_decimals: int = 9,
 ) -> DataFrame:
     """HITS (Kleinberg) hub/authority scores over the DIRECTED edge set
-    (src = ``a_col``, dst = ``b_col``; the near-dup graph's id_a < id_b
+    (src = ``id_a``, dst = ``id_b``; the near-dup graph's id_a < id_b
     orientation makes hubs and authorities genuinely different roles:
     low-id canonical docs accumulate hub mass, high-id duplicates
     authority mass). Returns (node, hub, auth) after ``iterations``
@@ -125,7 +122,7 @@ def hits_fixed(
         # iterations=0 would leave auths unbound (None) and return
         # unnormalized hubs — make the contract explicit instead.
         raise ValueError(f"hits_fixed requires iterations >= 1, got {iterations}")
-    dir_edges = edges.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
+    dir_edges = edges.select(F.col(_A).alias("src"), F.col(_B).alias("dst"))
     dir_edges = dir_edges.localCheckpoint(eager=True)
     nodes = (
         dir_edges.select(F.col("src").alias("node"))
@@ -137,7 +134,7 @@ def hits_fixed(
     def _l1_normalized(df: DataFrame, col: str) -> DataFrame:
         total = df.agg(F.sum(col).alias("_t"))
         return df.crossJoin(F.broadcast(total)).select(
-            "node", F.round(F.col(col) / F.col("_t"), sync_decimals).alias(col)
+            "node", F.round(F.col(col) / F.col("_t"), _DECIMALS).alias(col)
         )
 
     auths = None
@@ -145,7 +142,7 @@ def hits_fixed(
         a_raw = (
             dir_edges.join(hubs.withColumnRenamed("node", "src"), on="src")
             .groupBy(F.col("dst").alias("node"))
-            .agg(F.round(F.sum("h"), sync_decimals).alias("a"))
+            .agg(F.round(F.sum("h"), _DECIMALS).alias("a"))
         )
         auths = _l1_normalized(
             nodes.join(a_raw, on="node", how="left").select(
@@ -156,7 +153,7 @@ def hits_fixed(
         h_raw = (
             dir_edges.join(auths.withColumnRenamed("node", "dst"), on="dst")
             .groupBy(F.col("src").alias("node"))
-            .agg(F.round(F.sum("a"), sync_decimals).alias("h"))
+            .agg(F.round(F.sum("a"), _DECIMALS).alias("h"))
         )
         hubs = _l1_normalized(
             nodes.join(h_raw, on="node", how="left").select(

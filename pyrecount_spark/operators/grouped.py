@@ -27,11 +27,11 @@ def group_zscore(
     group_cols: Sequence[str],
     value_col: str,
     keep_cols: Sequence[str] = (),
-    decimals: int = 4,
 ) -> DataFrame:
     """Per-group standardization: z = (x - mean) / stddev_samp, plus the
     exact integer deviation ``dev_scaled = n*x - sum(x)`` (exact when x is
-    integral — no float rounding ambiguity across engines).
+    integral — no float rounding ambiguity across engines). z is rounded to
+    4 decimals.
 
     The pandas function is defined inline so cloudpickle serializes it BY
     VALUE — executors never need this module importable (vanilla-session
@@ -50,8 +50,6 @@ def group_zscore(
         + ", _x double, dev_scaled long, z double"
     )
 
-    nd = decimals
-
     def standardize(pdf):
         x = pdf["_x"].astype("float64")
         n = len(x)
@@ -60,7 +58,7 @@ def group_zscore(
         pdf["dev_scaled"] = (n * x - x.sum()).round().astype("int64")
         sd = x.std(ddof=1)  # matches stddev_samp; NaN for n == 1
         if sd and sd == sd:
-            pdf["z"] = ((x - x.mean()) / sd).round(nd)
+            pdf["z"] = ((x - x.mean()) / sd).round(4)
         else:
             pdf["z"] = None
         return pdf

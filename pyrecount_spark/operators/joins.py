@@ -22,7 +22,6 @@ def range_join_binned(
     lo: str,
     hi: str,
     bin_width: float,
-    how: str = "inner",
 ) -> DataFrame:
     """Join rows of ``left`` to every ``right`` interval containing
     ``left_value`` (lo <= v < hi), via bin bucketing.
@@ -41,7 +40,7 @@ def range_join_binned(
         F.floor((F.col(hi) - 1e-9) / bin_width).cast("long"),
     )
     r_binned = right.withColumn("_bin", F.explode(bins))
-    joined = l_binned.join(r_binned, on="_bin", how=how).filter(
+    joined = l_binned.join(r_binned, on="_bin").filter(
         (v >= F.col(lo)) & (v < F.col(hi))
     )
     return joined.drop("_bin")
@@ -298,6 +297,7 @@ def broadcast_if_small(
 # Bloom-filter semi-join reduction ----------------------------------------
 
 BLOOM_K = 3  # hash functions per key
+BLOOM_M_BITS = 1 << 16  # filter width
 
 
 def _bloom_positions(key: Column, m_bits: int) -> list[Column]:
@@ -314,7 +314,7 @@ def _bloom_positions(key: Column, m_bits: int) -> list[Column]:
     ]
 
 
-def bloom_filter_build(df: DataFrame, key_col: str, m_bits: int = 1 << 16) -> list[int]:
+def bloom_filter_build(df: DataFrame, key_col: str, m_bits: int = BLOOM_M_BITS) -> list[int]:
     """Build a Bloom filter over ``df[key_col]`` as ``m_bits/64`` long words.
 
     Distributed build: each key contributes k (word, mask) pairs; ONE
@@ -396,7 +396,6 @@ def bloom_prefilter_join(
     dim: DataFrame,
     fact_key: str,
     dim_key: str,
-    m_bits: int = 1 << 16,
 ) -> DataFrame:
     """Equi-join with a Bloom semi-join reduction on the fact side.
 
@@ -410,6 +409,6 @@ def bloom_prefilter_join(
     the explicit form is deterministic, engine-portable, and applies even
     where the optimizer declines.
     """
-    filt = bloom_filter_build(dim, dim_key, m_bits)
-    pre = fact.filter(bloom_might_contain(filt, fact_key, m_bits))
+    filt = bloom_filter_build(dim, dim_key)
+    pre = fact.filter(bloom_might_contain(filt, fact_key, BLOOM_M_BITS))
     return pre.join(dim, pre[fact_key] == dim[dim_key])

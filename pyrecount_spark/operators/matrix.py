@@ -18,18 +18,10 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import NumericType
 
 MAX_PIVOT_COLUMNS = 10_000  # guard: wide views are presentation-only
-
-
-def numeric_columns(df: DataFrame, exclude: Sequence[str] = ()) -> list[str]:
-    """F8 (accessor.py:151, ``pl.selectors.numeric()``)."""
-    return [
-        f.name
-        for f in df.schema.fields
-        if isinstance(f.dataType, NumericType) and f.name not in exclude
-    ]
+# Sample key of the metadata tables, and the value column of a long count table.
+_SAMPLE, _COUNT = "external_id", "count"
 
 
 def melt(
@@ -79,64 +71,27 @@ def pivot_wide_chunk(
     var_values: Sequence[str],
     chunk: int,
     chunk_size: int,
-    agg: str = "sum",
 ) -> DataFrame:
     """One column-group of a wide view too wide for a single pivot.
 
     The fallback the ``MAX_PIVOT_COLUMNS`` guard points at (SURVEY §7 hard
     part (b)): a 100k-sample matrix is presented as ``ceil(100k/chunk_size)``
     wide frames of bounded width instead of one impossible pivot. The isin
-    filter on the chunk's columns reaches the parquet scan (PushedFilters) —
-    and when the long table was landed with ``write_wide_chunked`` the
-    filter is a partition prune, so each chunk pivot reads only its own
-    files. Rows absent from a chunk's columns are absent from that chunk
-    (sparse column groups); reassembly is the J2 align-merge (full-outer on
-    the id), which is exactly how the reference's align-concat composes
-    disjoint-column frames.
+    filter on the chunk's columns reaches the parquet scan (PushedFilters).
+    Rows absent from a chunk's columns are absent from that chunk
+    (sparse column groups); reassembly is a full-outer join on the id,
+    which is how the reference's align-concat composes disjoint-column
+    frames.
     """
     vals = column_chunks(var_values, chunk_size)[chunk]
     filtered = df.filter(F.col(var_col).isin(vals))
-    if "_chunk" in df.columns:
-        # the layout column from write_wide_chunked: the equality filter is
-        # what the planner turns into the partition prune (a filter on the
-        # var values alone cannot — Spark can't invert the value→chunk map)
-        filtered = filtered.filter(F.col("_chunk") == chunk)
-    return pivot_wide(filtered, id_col, var_col, value_col, vals, agg)
-
-
-def write_wide_chunked(
-    long_df: DataFrame,
-    path: str,
-    var_col: str,
-    var_values: Sequence[str],
-    chunk_size: int,
-) -> None:
-    """Land the long table hive-partitioned by column chunk.
-
-    The (var value → chunk) map is a broadcast join (bounded by the number
-    of wide columns — the same bound the reference's wide format already
-    accepts); the write is one pass. After this layout, every
-    ``pivot_wide_chunk`` is a partition-pruned scan: the 100 TB matrix is
-    never read whole to present one column group.
-    """
-    spark = long_df.sparkSession
-    mapping = spark.createDataFrame(
-        [(v, i // chunk_size) for i, v in enumerate(var_values)],
-        [var_col, "_chunk"],
-    )
-    (
-        long_df.join(F.broadcast(mapping), on=var_col)
-        .write.mode("overwrite")
-        .partitionBy("_chunk")
-        .parquet(path)
-    )
+    return pivot_wide(filtered, id_col, var_col, value_col, vals)
 
 
 def scale_factors_mapped_reads(
     metadata: DataFrame,
     target_size: float,
     read_length: int,
-    sample_col: str = "external_id",
 ) -> DataFrame:
     """Q7 factor computation (accessor.py:122-144), casts explicit because the
     metadata lake is string-typed (SURVEY §1.2). Paired-end detection F5:
@@ -148,16 +103,14 @@ def scale_factors_mapped_reads(
     sf = (F.lit(target_size) * F.lit(read_length) * paired) / (
         mapped_reads * F.pow(mapped_len, 2)
     )
-    return metadata.select(F.col(sample_col).alias("sample_id"), sf.alias("sf"))
+    return metadata.select(F.col(_SAMPLE).alias("sample_id"), sf.alias("sf"))
 
 
-def scale_factors_auc(
-    metadata: DataFrame, target_size: float, sample_col: str = "external_id"
-) -> DataFrame:
+def scale_factors_auc(metadata: DataFrame, target_size: float) -> DataFrame:
     """Q8 factor computation (accessor.py:155-164): ``target / auc``."""
     auc = F.col("`bc_auc.all_reads_all_bases`").cast("double")
     return metadata.select(
-        F.col(sample_col).alias("sample_id"), (F.lit(target_size) / auc).alias("sf")
+        F.col(_SAMPLE).alias("sample_id"), (F.lit(target_size) / auc).alias("sf")
     )
 
 
@@ -165,7 +118,6 @@ def scale_long(
     counts_long: DataFrame,
     factors: DataFrame,
     round_to_int: bool = False,
-    value_col: str = "count",
 ) -> DataFrame:
     """Apply per-sample scale factors to a long count table.
 
@@ -174,45 +126,17 @@ def scale_long(
     no driver boundary, no shuffle of the fact table, scales to any sample
     count. ``round_to_int`` reproduces Q8's ``round(0).cast(Int64)``
     (accessor.py:170)."""
-    scaled = F.col(value_col) * F.col("sf")
+    scaled = F.col(_COUNT) * F.col("sf")
     if round_to_int:
         scaled = F.round(scaled, 0).cast("long")
     return (
         counts_long.join(F.broadcast(factors), on="sample_id", how="inner")
-        .withColumn(value_col, scaled)
+        .withColumn(_COUNT, scaled)
         .drop("sf")
     )
 
 
-def scale_wide(
-    counts_wide: DataFrame,
-    factors: DataFrame,
-    id_cols: Sequence[str] = ("gene_id",),
-    round_to_int: bool = False,
-) -> DataFrame:
-    """Wide-format compatibility path for Q7/Q8: collects the (small,
-    per-sample) factor frame to a dict — explicitly bounded by the number of
-    sample *columns*, which the wide format already caps — and multiplies each
-    numeric column (reference semantics: skip id column, accessor.py:172)."""
-    sf_map = {r["sample_id"]: r["sf"] for r in factors.collect()}
-    out = counts_wide
-    for c in numeric_columns(counts_wide, exclude=id_cols):
-        if c not in sf_map:
-            continue
-        scaled = F.col(c) * F.lit(sf_map[c])
-        if round_to_int:
-            scaled = F.round(scaled, 0).cast("long")
-        out = out.withColumn(c, scaled)
-    return out
-
-
-def coo_matmul(
-    a: DataFrame,
-    b: DataFrame,
-    out_row: str = "row_idx",
-    out_col: str = "col_idx",
-    out_val: str = "value",
-) -> DataFrame:
+def coo_matmul(a: DataFrame, b: DataFrame) -> DataFrame:
     """Sparse matrix multiply in COO form: C = A · B without densifying.
 
     A as (row_idx, col_idx, value), B as (row_idx, col_idx, value);
@@ -235,8 +159,6 @@ def coo_matmul(
     return (
         aa.join(bb, on="_j")
         .groupBy("_i", "_k")
-        .agg(F.sum(F.col("_av") * F.col("_bv")).alias(out_val))
-        .select(
-            F.col("_i").alias(out_row), F.col("_k").alias(out_col), out_val
-        )
+        .agg(F.sum(F.col("_av") * F.col("_bv")).alias("value"))
+        .select(F.col("_i").alias("row_idx"), F.col("_k").alias("col_idx"), "value")
     )

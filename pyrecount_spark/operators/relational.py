@@ -55,21 +55,6 @@ def multi_join(
     return reduce(lambda left, right: left.join(hint(right), on=list(on), how=how), dfs)
 
 
-def align_merge(
-    left: DataFrame, right: DataFrame, on: Sequence[str], coalesce_cols: Sequence[str] = ()
-) -> DataFrame:
-    """J2 (accessor.py:388, ``pl.concat(how="align")``): full-outer join on a
-    shared key where non-key columns are disjoint; shared non-key columns are
-    coalesced left-first. In the long-format canonical design this operator
-    disappears into ``align_union`` — kept for wide-format compatibility."""
-    shared = [c for c in coalesce_cols if c in left.columns and c in right.columns]
-    l, r = left.alias("l"), right.alias("r")
-    out = l.join(r, on=list(on), how="full")
-    for c in shared:
-        out = out.withColumn(c, F.coalesce(F.col(f"l.{c}"), F.col(f"r.{c}")))
-    return out
-
-
 def align_union(dfs: Sequence[DataFrame]) -> DataFrame:
     """U2 (accessor.py:507-510 + 181-207): schema-aligning vertical union.
     Missing columns become typed nulls — subsumes P3 + P9 in one built-in."""
@@ -94,23 +79,10 @@ def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
     return df.orderBy(*order).limit(k)
 
 
-def semi_join(
-    left: DataFrame, right: DataFrame, on: Sequence[str], broadcast: bool = False
-) -> DataFrame:
-    """EXISTS — not in the reference (SURVEY §2.3 gap list). No hint by
-    default: the planner broadcasts the build side when its stats fit the
-    threshold (AQE re-checks at runtime); pass ``broadcast=True`` only for
-    sides that are provably bounded regardless of data scale."""
-    right = F.broadcast(right) if broadcast else right
-    return left.join(right, on=list(on), how="left_semi")
-
-
-def anti_join(
-    left: DataFrame, right: DataFrame, on: Sequence[str], broadcast: bool = False
-) -> DataFrame:
+def anti_join(left: DataFrame, right: DataFrame, on: Sequence[str]) -> DataFrame:
     """NOT EXISTS — reference gap list; used for COO dim validation (Q5).
-    Same broadcast policy as ``semi_join``."""
-    right = F.broadcast(right) if broadcast else right
+    No hint: the planner broadcasts the build side when its stats fit the
+    threshold (AQE re-checks at runtime)."""
     return left.join(right, on=list(on), how="left_anti")
 
 
@@ -130,9 +102,9 @@ def merge_upsert(target: DataFrame, updates: DataFrame, key_cols: Sequence[str])
     return updates.unionByName(survivors)
 
 
-def profile_table(df: DataFrame, columns: Sequence[str] | None = None) -> DataFrame:
-    """One-pass column profile: per column a row of (count, nulls, distinct,
-    min, max) — values stringified so heterogeneous columns stack.
+def profile_table(df: DataFrame) -> DataFrame:
+    """One-pass column profile: per column of ``df`` a row of (count, nulls,
+    distinct, min, max) — values stringified so heterogeneous columns stack.
 
     All stats for all columns aggregate in a SINGLE scan (one agg node, no
     shuffle beyond the final 1-row reduce); the per-column rows are a
@@ -140,7 +112,7 @@ def profile_table(df: DataFrame, columns: Sequence[str] | None = None) -> DataFr
     pass. approx_count_distinct would make `distinct` sketch-cheap; exact
     kept here for oracle parity.
     """
-    cols = list(columns) if columns is not None else list(df.columns)
+    cols = list(df.columns)
     aggs = []
     for c in cols:
         aggs += [
@@ -167,12 +139,12 @@ def profile_table(df: DataFrame, columns: Sequence[str] | None = None) -> DataFr
     return one.select(F.explode(per_col).alias("p")).select("p.*")
 
 
-def hex_to_long(hex_col_name: str, n_chars: int = 15) -> Column:
-    """First ``n_chars`` hex nibbles of the named column as a positive long
+def hex_to_long(hex_col_name: str) -> Column:
+    """First 15 hex nibbles of the named column as a positive long
     (Horner fold via ``locate`` — no conv(), so the identical expression
     runs in DuckDB). 15 nibbles = 60 bits, safely inside int64."""
     acc: Column = F.lit(0).cast("long")
-    for i in range(1, n_chars + 1):
+    for i in range(1, 16):
         nib = F.expr(
             f"locate(substring({hex_col_name}, {i}, 1), '0123456789abcdef') - 1"
         )

@@ -16,6 +16,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pyrecount_spark.operators.clustering import EMB_ID, EMB_VEC
+
+# ``mean_pool_vectors`` sums components as integer multiples of 1/_QUANT.
+_QUANT = 1_000_000
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two array<numeric> columns."""
@@ -24,30 +29,6 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-
-
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Dot product for KNOWN-dimension vectors as a chained sum of element
-    products — value-identical to ``dot`` (same left-to-right double
-    accumulation starting at 0.0; ``F.get`` yields null past the array end
-    exactly like ``zip_with`` padding) but an ordinary expression tree, so
-    it runs inside whole-stage codegen instead of an interpreted
-    higher-order fold (~10× per row). Use on quadratic hot paths where the
-    per-pair fold dominates; plain ``dot`` stays the general form.
-
-    Measured boundary (do NOT extend this to literal-centroid ranking):
-    unrolling the k-way nearest-centroid / cell-ranking expressions
-    (k centroids x dim terms inside one least/sort_array chain) overflows
-    janino's 64 KB generated-method limit at k=8, dim=64 — whole-stage
-    codegen is then DISABLED for the stage and the giant tree runs
-    interpreted, 3-5x slower than the fold it replaced (ivf_topk 2.7->15 s,
-    ivfpq 3.1->17 s, pq_adc 3.0->6.8 s at sf0.01; methodSplitThreshold
-    tuning does not rescue it). Unroll pays only where dim is the sole
-    factor (pairwise scoring of two column vectors, as here)."""
-    acc: Column = F.lit(0.0)
-    for i in range(dim):
-        acc = acc + F.get(a, i).cast("double") * F.get(b, i).cast("double")
-    return acc
 
 
 def norm(a: Column) -> Column:
@@ -64,26 +45,23 @@ def brute_force_topk(
     embeddings: DataFrame,
     query: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
 ) -> DataFrame:
     """Exact top-k by cosine against a single-row query frame.
 
     The one-row query side is broadcast (a literal cross join would also
     work); scoring is a narrow projection; top-k avoids any global sort.
     Score is rounded before ranking so rank boundaries are engine-stable;
-    ``id_col`` breaks remaining ties totally.
+    ``vec_id`` breaks remaining ties totally.
     """
-    q = query.select(F.col(vec_col).alias("_qvec"))
+    q = query.select(F.col(EMB_VEC).alias("_qvec"))
     scored = (
         embeddings.crossJoin(F.broadcast(q))
         .select(
-            id_col,
-            F.round(cosine(F.col(vec_col), F.col("_qvec")), round_digits).alias("cos_sim"),
+            EMB_ID,
+            F.round(cosine(F.col(EMB_VEC), F.col("_qvec")), 4).alias("cos_sim"),
         )
     )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cos_sim"), F.asc(EMB_ID)).limit(k)
 
 
 def hyperplane_sign_bits(vec_col: Column | str, num_planes: int, dim: int) -> Column:
@@ -184,8 +162,6 @@ def lsh_bucketed_topk(
     k: int,
     num_planes: int | None = 8,
     dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: score only vectors sharing the query's LSH bucket.
 
@@ -196,23 +172,21 @@ def lsh_bucketed_topk(
     """
     if num_planes is None:
         num_planes = auto_ann_planes(embeddings.count())
-    bucket = hyperplane_sign_bits(vec_col, num_planes, dim)
+    bucket = hyperplane_sign_bits(EMB_VEC, num_planes, dim)
     emb_b = embeddings.withColumn("_bucket", bucket)
-    q_b = query.select(F.col(vec_col).alias("_qvec")).withColumn(
+    q_b = query.select(F.col(EMB_VEC).alias("_qvec")).withColumn(
         "_bucket", hyperplane_sign_bits("_qvec", num_planes, dim)
     )
     candidates = emb_b.join(F.broadcast(q_b), on="_bucket")
     scored = candidates.select(
-        id_col, F.round(cosine(F.col(vec_col), F.col("_qvec")), 4).alias("cos_sim")
+        EMB_ID, F.round(cosine(F.col(EMB_VEC), F.col("_qvec")), 4).alias("cos_sim")
     )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cos_sim"), F.asc(EMB_ID)).limit(k)
 
 
 def cosine_pairs(
     embeddings: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Embedding near-dup pairs above a cosine threshold (id_a < id_b).
 
@@ -224,8 +198,8 @@ def cosine_pairs(
     verified-Jaccard graph for text. tests/test_plan_lint.py enforces that
     no other registered plan scans embeddings through a nested-loop join.
     """
-    a = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    a = embeddings.select(F.col(EMB_ID).alias("id_a"), F.col(EMB_VEC).alias("va"))
+    b = embeddings.select(F.col(EMB_ID).alias("id_b"), F.col(EMB_VEC).alias("vb"))
     pairs = a.join(b, F.col("id_a") < F.col("id_b"))
     return (
         pairs.select(
@@ -586,33 +560,6 @@ def lsh_verified_pairs(
     )
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    num_centroids: int | None = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """IVF coarse quantization: assign every vector to its nearest centroid.
-
-    Centroids are the ``num_centroids`` lowest-``id_col`` vectors —
-    deterministic and seedless (a k-means refinement would slot in here;
-    the flat-index plumbing is identical). They are collected to the driver
-    (bounded: num_centroids × dim floats) and embedded as LITERALS, so
-    assignment is a pure narrow projection — zero shuffles, full codegen,
-    scales linearly with the scan. Compare: a cross-join + window argmin
-    would shuffle num_centroids× the table.
-
-    Assignment = argmax of (rounded cosine, -centroid_id) via struct-ordered
-    ``F.greatest`` — the round + id tiebreak makes cell boundaries engine-
-    stable. Returns the input plus an ``_cell`` column.
-    """
-    cents = collect_centroids(embeddings, num_centroids, id_col, vec_col)
-    return embeddings.withColumn(
-        "_cell", cell_expr(cents, vec_col, round_digits)
-    )
-
-
 def collect_centroids(
     corpus: DataFrame, num_centroids: int | None, id_col: str, vec_col: str
 ) -> list[tuple[int, list[float]]]:
@@ -628,9 +575,7 @@ def collect_centroids(
     return [(row[id_col], [float(v) for v in row[vec_col]]) for row in rows]
 
 
-def cell_expr(
-    cents: list[tuple[int, list[float]]], vec_col: str, round_digits: int = 4
-) -> Column:
+def cell_expr(cents: list[tuple[int, list[float]]], vec_col: str) -> Column:
     """Nearest-centroid cell id as a pure projection over literal centroids.
 
     Round-14: one F.expr fragment (operators/exprs.py) — the per-centroid
@@ -642,7 +587,7 @@ def cell_expr(
     vc = qcol(vec_col)
     structs = [
         f"named_struct('s', round({cosine_sql(vc, arr_sql(cvec))}, "
-        f"{int(round_digits)}), 't', CAST({-int(cid)} AS BIGINT), "
+        f"4), 't', CAST({-int(cid)} AS BIGINT), "
         f"'cid', CAST({int(cid)} AS BIGINT))"
         for cid, cvec in cents
     ]
@@ -655,8 +600,6 @@ def ivf_topk(
     k: int,
     num_centroids: int | None = 8,
     nprobe: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF probe: score only vectors in the query's ``nprobe`` nearest cells.
 
@@ -664,8 +607,8 @@ def ivf_topk(
     to nprobe/num_centroids of the files before any compute (partition
     pruning on the literal cell ids); scoring stays a narrow map + top-k.
     """
-    cents = collect_centroids(embeddings, num_centroids, id_col, vec_col)
-    cell = cell_expr(cents, vec_col)
+    cents = collect_centroids(embeddings, num_centroids, EMB_ID, EMB_VEC)
+    cell = cell_expr(cents, EMB_VEC)
     assigned = embeddings.withColumn("_cell", cell)
     # Multi-probe: rank ALL cells by the query→centroid cosine (the same
     # rounded score + cid tiebreak the assignment uses) and probe the top
@@ -674,7 +617,7 @@ def ivf_topk(
     # still a pure projection over literal centroids, zero extra shuffles.
     from pyrecount_spark.operators.exprs import arr_sql, cosine_sql, qcol
 
-    _vc = qcol(vec_col)
+    _vc = qcol(EMB_VEC)
     ranked = F.expr(
         "sort_array(array("
         + ",".join(
@@ -687,7 +630,7 @@ def ivf_topk(
     q_cells = (
         query.select(
             F.explode(F.slice(ranked, 1, nprobe)).alias("_probe"),
-            F.col(vec_col).alias("_qvec"),
+            F.col(EMB_VEC).alias("_qvec"),
         )
         .select(F.col("_probe.cid").alias("_qcell"), "_qvec")
     )
@@ -695,14 +638,12 @@ def ivf_topk(
         F.broadcast(q_cells), on=assigned["_cell"] == q_cells["_qcell"]
     )
     scored = candidates.select(
-        id_col, F.round(cosine(F.col(vec_col), F.col("_qvec")), 4).alias("cos_sim")
+        EMB_ID, F.round(cosine(F.col(EMB_VEC), F.col("_qvec")), 4).alias("cos_sim")
     )
-    return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
+    return scored.orderBy(F.desc("cos_sim"), F.asc(EMB_ID)).limit(k)
 
 
-def quantize_int8_stats(
-    embeddings: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def quantize_int8_stats(embeddings: DataFrame) -> DataFrame:
     """Symmetric int8 quantization of the embedding column, summarized.
 
     scale = max|component| / 127; q_i = round(v_i / scale) ∈ [-127, 127].
@@ -712,8 +653,8 @@ def quantize_int8_stats(
     expressions — the ANN-index prep pass is a narrow scan at any scale;
     at 100 TB the int8 vectors cut index memory 4× before IVF/LSH builds.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    l2 = norm(F.col(vec_col))
+    v = F.transform(F.col(EMB_VEC), lambda x: x.cast("double"))
+    l2 = norm(F.col(EMB_VEC))
     max_abs = F.array_max(F.transform(v, F.abs))
     scale = max_abs / F.lit(127.0)
     q = F.transform(v, lambda x: F.round(x / scale).cast("long"))
@@ -721,7 +662,7 @@ def quantize_int8_stats(
         F.zip_with(q, v, lambda qi, xi: F.abs(qi.cast("double") * scale - xi))
     )
     return embeddings.select(
-        id_col,
+        EMB_ID,
         F.round(l2, 6).alias("l2_norm"),
         F.round(max_abs, 6).alias("max_abs"),
         F.aggregate(q, F.lit(0).cast("long"), lambda a, x: a + x).alias("q_sum"),
@@ -731,57 +672,11 @@ def quantize_int8_stats(
     )
 
 
-def cosine_scores_pandas(
-    embeddings: DataFrame,
-    query_vec: list[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 4,
-) -> DataFrame:
-    """Vectorized Pandas-UDF cosine scoring — the Arrow-batched alternative
-    to the native ``F.aggregate`` fold (``cosine``).
-
-    Whole Arrow batches hit numpy (np.stack → one matmul per batch), so the
-    per-row Python overhead of a classic UDF disappears; still ~2-5× the
-    native expression's cost on the JVM, which is why the native fold is
-    the registered/default path and this exists for when the scoring math
-    outgrows SQL expressions (learned metrics, custom kernels). Defined
-    inline ⇒ cloudpickle by-value (vanilla executors). Kept out of the
-    registry: tests/test_plan_lint.py bans Python row-paths from
-    registered plans; parity with the native scorer is pytest-enforced
-    instead.
-    """
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    q = list(map(float, query_vec))
-
-    def score_impl(col: "pd.Series") -> "pd.Series":
-        import numpy as np
-        import pandas as _pd
-
-        qv = np.asarray(q, dtype=np.float64)
-        qn = np.sqrt((qv * qv).sum())
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in col])
-        dots = mat @ qv
-        norms = np.sqrt((mat * mat).sum(axis=1))
-        return _pd.Series(np.round(dots / (norms * qn), round_digits))
-
-    # annotations must resolve for pyspark's type-hint check; set them to
-    # the real classes rather than strings evaluated in module globals
-    score_impl.__annotations__ = {"col": pd.Series, "return": pd.Series}
-    score = pandas_udf(score_impl, "double")
-
-    return embeddings.select(id_col, score(F.col(vec_col)).alias("cos_sim"))
-
-
-def mean_pool_vectors(
-    df: DataFrame, vec_col: str, group_col: str, quant: int = 1_000_000
-) -> DataFrame:
+def mean_pool_vectors(df: DataFrame, vec_col: str, group_col: str) -> DataFrame:
     """Elementwise mean of an ``array<float>`` column per group, reassembled
     as an array — the class-centroid / chunk→document pooling primitive.
 
-    Vectors are quantized to integer ``quant``-units before summing (exact
+    Vectors are quantized to integer millionths before summing (exact
     integer partials — no float-order nondeterminism across partitions),
     averaged in one (group, dim) hash aggregate with map-side combine, then
     reassembled via sort_array(collect_list(struct(dim, val))): the struct
@@ -799,10 +694,10 @@ def mean_pool_vectors(
     ).select(
         group_col,
         "dim",
-        F.round(F.col("v") * quant).cast("long").alias("q"),
+        F.round(F.col("v") * _QUANT).cast("long").alias("q"),
     )
     per_dim = dims.groupBy(group_col, "dim").agg(
-        (F.sum("q").cast("double") / F.count(F.lit(1)) / float(quant)).alias("c"),
+        (F.sum("q").cast("double") / F.count(F.lit(1)) / float(_QUANT)).alias("c"),
         F.count(F.lit(1)).alias("n"),
     )
     return per_dim.groupBy(group_col).agg(
@@ -829,8 +724,6 @@ def pq_codebooks(
     subdim: int = 16,
     k: int = 4,
     iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> list[list[tuple[int, list[float]]]]:
     """Train one codebook per subspace: seedless init (k lowest-id
     sub-vectors) + ``iters`` Lloyd rounds, all rounded like kmeans_lloyd so
@@ -847,11 +740,11 @@ def pq_codebooks(
     summation-order noise, the same contract that makes the trajectory
     engine-portable."""
     init_rows = (
-        embeddings.orderBy(F.asc(id_col)).limit(k).select(id_col, vec_col).collect()
+        embeddings.orderBy(F.asc(EMB_ID)).limit(k).select(EMB_ID, EMB_VEC).collect()
     )
     books: list[list[tuple[int, list[float]]]] = [
         [
-            (i, [float(v) for v in r[vec_col][s * subdim : (s + 1) * subdim]])
+            (i, [float(v) for v in r[EMB_VEC][s * subdim : (s + 1) * subdim]])
             for i, r in enumerate(init_rows)
         ]
         for s in range(m)
@@ -869,11 +762,11 @@ def pq_codebooks(
             F.struct(
                 F.lit(s).cast("int").alias("s"),
                 nearest_centroid_col(
-                    books[s], f"slice({_q(vec_col)}, {s * subdim + 1}, {subdim})"
+                    books[s], f"slice({_q(EMB_VEC)}, {s * subdim + 1}, {subdim})"
                 )
                 .getField("cluster")
                 .alias("cl"),
-                F.slice(F.col(vec_col), s * subdim + 1, subdim).alias("sub"),
+                F.slice(F.col(EMB_VEC), s * subdim + 1, subdim).alias("sub"),
             )
             for s in range(m)
         ]
@@ -903,25 +796,21 @@ def pq_encode(
     embeddings: DataFrame,
     books: list[list[tuple[int, list[float]]]],
     subdim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Encode every vector as m code ids — ONE narrow projection (codebook
     centroids are literals), zero shuffles at any corpus size."""
     from pyrecount_spark.operators.exprs import qcol as _q
 
-    cols = [F.col(id_col)]
+    cols = [F.col(EMB_ID)]
     for s, cents in enumerate(books):
-        sub_sql = f"slice({_q(vec_col)}, {s * subdim + 1}, {subdim})"
+        sub_sql = f"slice({_q(EMB_VEC)}, {s * subdim + 1}, {subdim})"
         cols.append(
             nearest_centroid_col(cents, sub_sql).getField("cluster").alias(f"code_{s}")
         )
     return embeddings.select(*cols)
 
 
-def nearest_centroid_col(
-    cents: list[tuple[int, list[float]]], sub_sql: str, round_digits: int = 6
-) -> Column:
+def nearest_centroid_col(cents: list[tuple[int, list[float]]], sub_sql: str) -> Column:
     """nearest_centroid over a SQL fragment (clustering.nearest_centroid
     takes a column NAME; slices pass their fragment, e.g.
     ``slice(`embedding`, 17, 16)``). Round-14: one F.expr call — see
@@ -930,7 +819,7 @@ def nearest_centroid_col(
 
     structs = [
         f"named_struct('dist', round({sq_dist_sql(sub_sql, arr_sql(cvec))}, "
-        f"{int(round_digits)}), 'cluster', CAST({int(cid)} AS BIGINT))"
+        f"6), 'cluster', CAST({int(cid)} AS BIGINT))"
         for cid, cvec in cents
     ]
     # k=1: least() requires >= 2 args; the single struct IS the argmin
@@ -943,8 +832,6 @@ def pq_adc_topk(
     books: list[list[tuple[int, list[float]]]],
     k_results: int = 20,
     subdim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """ADC top-k: per-subspace query→centroid distances form an m×k lookup
     table of LITERALS; the estimated distance of every vector is the sum of
@@ -954,7 +841,7 @@ def pq_adc_topk(
     """
     from pyrecount_spark.operators.exprs import arr_sql
 
-    codes = pq_encode(embeddings, books, subdim, id_col, vec_col)
+    codes = pq_encode(embeddings, books, subdim)
     terms = []
     for s, cents in enumerate(books):
         q_sub = query[s * subdim : (s + 1) * subdim]
@@ -969,8 +856,8 @@ def pq_adc_topk(
         )
     est = F.expr(" + ".join(terms))
     return (
-        codes.select(id_col, F.round(est, 6).alias("est_dist"))
-        .orderBy(F.asc("est_dist"), F.asc(id_col))
+        codes.select(EMB_ID, F.round(est, 6).alias("est_dist"))
+        .orderBy(F.asc("est_dist"), F.asc(EMB_ID))
         .limit(k_results)
     )
 
@@ -982,8 +869,6 @@ def ivfpq_topk(
     k_results: int = 10,
     num_centroids: int | None = 8,
     subdim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ: coarse IVF cell prune, then PQ-ADC ranking of the surviving
     candidates — the standard billion-scale layout (Jégou et al. 2011 §V):
@@ -993,17 +878,14 @@ def ivfpq_topk(
     at scale the cell filter is partition pruning on a `_cell`-partitioned
     lake, so non-probed cells are never even scanned.
     """
-    cents = collect_centroids(embeddings, num_centroids, id_col, vec_col)
-    cell = cell_expr(cents, vec_col)
+    cents = collect_centroids(embeddings, num_centroids, EMB_ID, EMB_VEC)
+    cell = cell_expr(cents, EMB_VEC)
     assigned = embeddings.withColumn("_cell", cell)
     qrow = (
-        embeddings.filter(F.col(id_col) == query_vec_id)
-        .select(cell.alias("_qc"), F.col(vec_col).alias("_qv"))
+        embeddings.filter(F.col(EMB_ID) == query_vec_id)
+        .select(cell.alias("_qc"), F.col(EMB_VEC).alias("_qv"))
         .collect()[0]
     )
     query = [float(v) for v in qrow["_qv"]]
     cand = assigned.filter(F.col("_cell") == F.lit(int(qrow["_qc"])))
-    return pq_adc_topk(
-        cand, query, books, k_results=k_results, subdim=subdim,
-        id_col=id_col, vec_col=vec_col,
-    )
+    return pq_adc_topk(cand, query, books, k_results=k_results, subdim=subdim)

@@ -73,7 +73,6 @@ def salted_join(
     right: DataFrame,
     on: Sequence[str],
     salt: int = 8,
-    how: str = "inner",
 ) -> DataFrame:
     """Equi-join with key salting: left rows scatter across ``salt``
     sub-partitions per key (deterministic row-hash salt — reproducible, no
@@ -90,4 +89,4 @@ def salted_join(
     salted_right = right.withColumn(
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
     )
-    return salted_left.join(salted_right, on=on + ["_salt"], how=how).drop("_salt")
+    return salted_left.join(salted_right, on=on + ["_salt"]).drop("_salt")

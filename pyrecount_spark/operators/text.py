@@ -26,10 +26,10 @@ def tokens(text: Column) -> Column:
 
 
 def word_shingles(
-    df: DataFrame, text_col: str, n: int, id_col: str, out: str = "shingle",
-    distinct: bool = True,
+    df: DataFrame, text_col: str, n: int, id_col: str, distinct: bool = True
 ) -> DataFrame:
-    """Word n-gram shingles per document (distinct by default).
+    """Word n-gram shingles per document, as (id, shingle) rows (distinct by
+    default).
 
     ``explode(sequence(...))`` generates start positions inside each row's
     task — a narrow transformation; no shuffle until the consumer aggregates.
@@ -47,7 +47,7 @@ def word_shingles(
         " ", *[F.element_at(F.col("_toks"), F.col("i") + j) for j in range(n)]
     )
     out_df = base.select(id_col, F.col("_toks"), F.explode(starts).alias("i")).select(
-        id_col, shingle.alias(out)
+        id_col, shingle.alias("shingle")
     )
     return out_df.distinct() if distinct else out_df
 

@@ -49,52 +49,23 @@ def sliding_agg(
     )
 
 
-def sessionize(
-    df: DataFrame,
-    ts_col: str,
-    user_col: str,
-    gap_minutes: int = 30,
-    order_tiebreak: str = "event_id",
-) -> DataFrame:
-    """Gap-based sessionization: a new session starts when the time since the
-    previous event of the same user exceeds the gap; session id = running
-    count of session starts (classic lag + cumulative-sum assignment).
-
-    Scale: one shuffle on ``user_col``; within-partition sort feeds both
-    window functions in a single exchange (same partitioning + ordering).
-    """
-    order = [F.col(ts_col).asc(), F.col(order_tiebreak).asc()]
-    w_user = Window.partitionBy(user_col).orderBy(*order)
-    gap_s = gap_minutes * 60
-    prev_ts = F.lag(F.col(ts_col)).over(w_user)
-    is_new = F.when(
-        prev_ts.isNull()
-        | ((F.unix_timestamp(F.col(ts_col)) - F.unix_timestamp(prev_ts)) > gap_s),
-        1,
-    ).otherwise(0)
-    with_session = df.withColumn(
-        "session_id",
-        F.sum(is_new).over(w_user.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return with_session.groupBy(user_col, "session_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        fmt_ts(F.min(ts_col)).alias("session_start"),
-        fmt_ts(F.max(ts_col)).alias("session_end"),
-    )
-
-
 def assign_sessions(
     df: DataFrame,
     ts_col: str,
     user_col: str,
     gap_minutes: int = 30,
-    order_tiebreak: str = "event_id",
 ) -> DataFrame:
-    """Row-level session assignment: ``sessionize``'s lag + cumulative-sum
-    step without the per-session aggregation — for composites that need the
-    original columns alongside the session id (conversion rates, per-session
-    funnels). Same single user-key shuffle."""
-    order = [F.col(ts_col).asc(), F.col(order_tiebreak).asc()]
+    """Row-level gap-based session assignment: a new session starts when the
+    time since the previous event of the same user exceeds the gap; session
+    id = running count of session starts (classic lag + cumulative-sum
+    assignment), with ``event_id`` breaking same-timestamp ties. Keeps the
+    original columns alongside the session id, for composites that need
+    them (conversion rates, per-session funnels).
+
+    Scale: one shuffle on ``user_col``; within-partition sort feeds both
+    window functions in a single exchange (same partitioning + ordering).
+    """
+    order = [F.col(ts_col).asc(), F.col("event_id").asc()]
     w_user = Window.partitionBy(user_col).orderBy(*order)
     gap_s = gap_minutes * 60
     prev_ts = F.lag(F.col(ts_col)).over(w_user)
@@ -106,6 +77,23 @@ def assign_sessions(
     return df.withColumn(
         "session_id",
         F.sum(is_new).over(w_user.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+
+
+def sessionize(
+    df: DataFrame,
+    ts_col: str,
+    user_col: str,
+    gap_minutes: int = 30,
+) -> DataFrame:
+    """Per-session aggregation of ``assign_sessions``: (user, session_id,
+    n_events, session_start, session_end)."""
+    return assign_sessions(df, ts_col, user_col, gap_minutes).groupBy(
+        user_col, "session_id"
+    ).agg(
+        F.count(F.lit(1)).alias("n_events"),
+        fmt_ts(F.min(ts_col)).alias("session_start"),
+        fmt_ts(F.max(ts_col)).alias("session_end"),
     )
 
 
@@ -181,12 +169,14 @@ def pareto_frontier_2d(
     )
 
 
+_RANK_BUCKETS = 64  # value-range buckets of ``bucketed_global_rank``
+
+
 def bucketed_global_rank(
     df: DataFrame,
     value_col: str,
     tiebreak_col: str,
     ascending: bool = True,
-    buckets: int = 64,
     rank_col: str = "rnk",
 ) -> DataFrame:
     """Global dense ROW_NUMBER over ``(value, tiebreak)`` WITHOUT an
@@ -198,9 +188,9 @@ def bucketed_global_rank(
        1-row broadcast aggregate; at 100 TB swap in a sort-sampled range
        partitioner the same way),
     2. row_number WITHIN each bucket — windows partitioned by bucket, so the
-       sort parallelizes across ``buckets`` tasks instead of collapsing the
+       sort parallelizes across 64 tasks instead of collapsing the
        whole frame onto one,
-    3. per-bucket counts (tiny: ``buckets`` rows) prefix-summed in bucket
+    3. per-bucket counts (tiny: 64 rows) prefix-summed in bucket
        order and broadcast back as carry-in offsets;
        global rank = offset + in-bucket rank.
 
@@ -217,10 +207,10 @@ def bucketed_global_rank(
         .withColumn(
             "_bucket",
             F.least(
-                F.lit(buckets - 1),
+                F.lit(_RANK_BUCKETS - 1),
                 F.expr(
                     f"(cast({value_col} as long) - _mn)"
-                    f" div (cast(floor((_mx - _mn) / {buckets}) as long) + 1)"
+                    f" div (cast(floor((_mx - _mn) / {_RANK_BUCKETS}) as long) + 1)"
                 ),
             ).cast("long"),
         )
@@ -235,7 +225,7 @@ def bucketed_global_rank(
     w_in = Window.partitionBy("_bucket").orderBy(*order)
     ranked = b.withColumn("_rk", F.row_number().over(w_in))
     counts = b.groupBy("_bucket").agg(F.count(F.lit(1)).alias("_n"))
-    # bounded window: `buckets` rows, not data-sized
+    # bounded window: 64 rows, not data-sized
     w_off = Window.orderBy(bucket_order).rowsBetween(Window.unboundedPreceding, -1)
     offsets = counts.withColumn(
         "_off", F.coalesce(F.sum("_n").over(w_off), F.lit(0))

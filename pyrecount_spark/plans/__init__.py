@@ -45,7 +45,16 @@ def register(name: str, oracle: str | None = None, group: str = "default"):
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The lake table ``name``: ``<sf_dir>/<name>.parquet``."""
+    """The lake table ``name``: ``<sf_dir>/<name>.parquet``.
+
+    Spark 4 reads the events table's parquet TIMESTAMP(NANOS) natively as
+    ``timestamp_ntz`` (microsecond-truncated — the same µs semantics
+    DuckDB/Arrow surface for this column), so no conf or conversion is
+    needed; the year-2024 canary in tests/test_streaming_queries.py pins
+    that. Never set ``spark.sql.legacy.parquet.nanosAsLong``: under Spark
+    4.1 that path yields µs-valued longs, and any div-1000 shim would
+    collapse event times into 1970.
+    """
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 

@@ -14,7 +14,6 @@ from pyrecount_spark.operators.analytics import (
 )
 from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-from pyrecount_spark.session import read_events
 
 
 # ---------------------------------------------------------------------------
@@ -50,7 +49,7 @@ FUNNEL_SQL = """
 
 @register("funnel_click_view_purchase", FUNNEL_SQL)
 def funnel_click_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     return funnel_stages(e, ["click", "view", "purchase"])
 
 
@@ -73,7 +72,7 @@ COHORT_SQL = """
 
 @register("cohort_weekly_retention", COHORT_SQL)
 def cohort_weekly_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     return cohort_retention(e)
 
 
@@ -190,9 +189,11 @@ def approx_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # hex fold + bit_xor are expression-identical in both engines, so the
 # oracle IS a second, independent replica computing the same checksum.
 # ---------------------------------------------------------------------------
-def _fp_horner_sql(n: int = 15) -> str:
+def _fp_horner_sql() -> str:
+    """SQL twin of ``relational.hex_to_long``: the first 15 hex nibbles of
+    ``h`` as a long."""
     acc = "0"
-    for i in range(1, n + 1):
+    for i in range(1, 16):
         acc = f"({acc}) * 16 + (strpos('0123456789abcdef', substring(h, {i}, 1)) - 1)"
     return acc
 
@@ -252,7 +253,7 @@ INCREMENTAL_AGG_SQL = """
 
 @register("incremental_agg_maintenance", INCREMENTAL_AGG_SQL)
 def incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir).withColumn(
+    e = _t(spark, sf_dir, "events").withColumn(
         "cents", F.round(F.col("value") * 100).cast("long")
     )
     cutoff = F.lit(INCR_CUTOFF).cast("timestamp")
@@ -307,7 +308,7 @@ ANOMALY_SQL = """
 def rolling_anomaly_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    e = read_events(spark, sf_dir).withColumn(
+    e = _t(spark, sf_dir, "events").withColumn(
         "cents", F.round(F.col("value") * 100).cast("long")
     )
     win = (

@@ -18,8 +18,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyrecount_spark.functions.scalars import round_ratio_half_up
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-from pyrecount_spark.session import read_events
 
 _TOUCHES = ("click", "view")
 
@@ -55,7 +55,7 @@ _TOUCHES = ("click", "view")
     """,
 )
 def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     touches = e.filter(F.col("event_type").isin(*_TOUCHES)).select(
         "user_id",
         "ts",
@@ -120,7 +120,7 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     first_touch = (
         e.filter(F.col("event_type").isin(*_TOUCHES))
@@ -170,7 +170,7 @@ def attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def event_path_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.withColumn("prev_type", F.lag("event_type").over(w))
     return (
@@ -205,7 +205,7 @@ def event_path_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pre_post_purchase_behavior(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     first_p = (
         e.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
@@ -262,7 +262,7 @@ def pre_post_purchase_behavior(spark: SparkSession, sf_dir: str) -> DataFrame:
 def session_conversion_by_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyrecount_spark.operators.windows import assign_sessions
 
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     rows = assign_sessions(e, "ts", "user_id", gap_minutes=30)
     per_session = rows.groupBy("user_id", "session_id").agg(
         F.min("ts").alias("s_start"),
@@ -317,7 +317,7 @@ def session_conversion_by_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def repeat_buyer_rate_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     um = (
         e.filter(F.col("event_type") == "purchase")
         .select("user_id", F.date_trunc("month", "ts").alias("m"))
@@ -396,7 +396,7 @@ def repeat_buyer_rate_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def ab_cuped_adjusted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     nib1 = F.expr(
         "locate(substr(md5(cast(user_id as string)), 1, 1),"
         " '0123456789abcdef') - 1"
@@ -472,7 +472,7 @@ def ab_cuped_adjusted_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def time_to_convert_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     fc = (
         e.filter(F.col("event_type") == "click")
         .groupBy("user_id")
@@ -540,7 +540,7 @@ def time_to_convert_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def longest_daily_streak_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     days = e.select(
         "user_id",
         F.datediff(F.col("ts").cast("date"), F.lit("1990-01-01")).alias("dayn"),

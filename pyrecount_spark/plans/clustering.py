@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from pyrecount_spark.operators.clustering import kmeans_lloyd
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
 
 K = 4
@@ -81,7 +82,7 @@ def _kmeans_sql(k: int, iters: int) -> str:
 
 @register("kmeans_lloyd_embeddings", _kmeans_sql(K, ITERS))
 def kmeans_lloyd_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _t(spark, sf_dir, "embeddings")
     return kmeans_lloyd(emb, k=K, iters=ITERS, dim=DIM)
 
 
@@ -143,7 +144,7 @@ _SEMDEDUP_SQL = (
 def semdedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyrecount_spark.operators.dedup import semantic_dedup
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb = _t(spark, sf_dir, "embeddings")
     # k derives inside the operator from its single corpus-stats aggregate
     # (round-14: the plan previously paid its own count() job for the same
     # number — one bounded 1-row action instead of two; the operator's

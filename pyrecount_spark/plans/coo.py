@@ -11,7 +11,6 @@ from pyrecount_spark.functions.scalars import value_remap
 from pyrecount_spark.operators.relational import align_union, multi_join
 from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-from pyrecount_spark.session import read_events
 
 
 # ---------------------------------------------------------------------------
@@ -38,7 +37,7 @@ from pyrecount_spark.session import read_events
     """,
 )
 def coo_matrix_rowstats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     coo = (
         e.select(
             F.col("user_id").alias("row_idx"),
@@ -186,7 +185,7 @@ COO_GRAM_SQL = """
 def coo_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyrecount_spark.operators.matrix import coo_matmul
 
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     coo = (
         e.select(
             F.col("user_id").alias("row_idx"),

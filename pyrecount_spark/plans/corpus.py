@@ -623,7 +623,7 @@ def global_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tokenizer_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = _t(spark, sf_dir, "documents")
     words = F.size(F.split(F.trim(F.col("text")), r"\s+"))
     toks = F.size(
         F.filter(

@@ -106,13 +106,13 @@ NUM_PERM = 16
 BAND_SIZE = 2
 
 
-def _minhash_ctes(num_perm: int = NUM_PERM, band_size: int = BAND_SIZE) -> str:
-    families = (num_perm + 7) // 8
+def _minhash_ctes() -> str:
+    families = (NUM_PERM + 7) // 8
     hash_expr = " || ".join(
         ["sha256(shingle)"]
         + [f"sha256('{f}:' || shingle)" for f in range(1, families)]
     )
-    perm_list = ",".join(str(p) for p in range(num_perm))
+    perm_list = ",".join(str(p) for p in range(NUM_PERM))
     return f"""{SHINGLE_CTE},
     hashed AS (SELECT doc_id, {hash_expr} AS h FROM sh),
     perms AS (SELECT unnest([{perm_list}]) AS perm),
@@ -121,9 +121,9 @@ def _minhash_ctes(num_perm: int = NUM_PERM, band_size: int = BAND_SIZE) -> str:
       FROM hashed, perms GROUP BY doc_id, perm
     ),
     buckets AS (
-      SELECT doc_id, CAST(FLOOR(perm / {band_size}.0) AS INT) AS band,
+      SELECT doc_id, CAST(FLOOR(perm / {BAND_SIZE}.0) AS INT) AS band,
              md5(string_agg(CAST(perm AS VARCHAR) || ':' || mh, ',' ORDER BY perm)) AS bucket
-      FROM mh GROUP BY doc_id, CAST(FLOOR(perm / {band_size}.0) AS INT)
+      FROM mh GROUP BY doc_id, CAST(FLOOR(perm / {BAND_SIZE}.0) AS INT)
     ),
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -463,9 +463,7 @@ def incremental_dedup_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stratified_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrecount_spark.session import read_events
-
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
 
     def nib(i: int):
         return F.expr(

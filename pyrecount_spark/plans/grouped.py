@@ -77,9 +77,8 @@ COGROUP_SQL = """
 @register("cogrouped_reconcile_spend", COGROUP_SQL)
 def cogrouped_reconcile_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyrecount_spark.operators.grouped import cogroup_reconcile
-    from pyrecount_spark.session import read_events
 
-    e = read_events(spark, sf_dir).withColumn(
+    e = _t(spark, sf_dir, "events").withColumn(
         "cents", F.round(F.col("value") * 100).cast("long")
     )
     o = _t(spark, sf_dir, "orders").withColumn(

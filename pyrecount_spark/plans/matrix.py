@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from pyrecount_spark.operators import matrix as M
 from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-from pyrecount_spark.session import read_events
 
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
@@ -64,7 +63,7 @@ def melt_wide_to_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pivot_long_to_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir).withColumn(
+    e = _t(spark, sf_dir, "events").withColumn(
         "cents", F.round(F.col("value") * 100).cast("long")
     )
     return M.pivot_wide(e, "user_id", "event_type", "cents", EVENT_TYPES, agg="sum")
@@ -74,8 +73,7 @@ def pivot_long_to_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Chunked wide view: one column-group of a matrix too wide for a single
 # pivot (the MAX_PIVOT_COLUMNS fallback, SURVEY §7 hard part (b)). Chunk 1
 # of the event-type columns at chunk_size=2 → (purchase, signup). The isin
-# filter lands in PushedFilters (partition prune under the
-# write_wide_chunked layout); rows with neither column are absent from the
+# filter lands in PushedFilters; rows with neither column are absent from the
 # chunk — reassembly is the J2 align-merge below.
 # ---------------------------------------------------------------------------
 @register(
@@ -89,7 +87,7 @@ def pivot_long_to_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pivot_wide_chunk1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir).withColumn(
+    e = _t(spark, sf_dir, "events").withColumn(
         "cents", F.round(F.col("value") * 100).cast("long")
     )
     return M.pivot_wide_chunk(

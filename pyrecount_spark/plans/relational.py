@@ -475,9 +475,7 @@ def group_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def two_stage_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrecount_spark.session import read_events
-
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     pairs = e.select("event_type", "user_id").distinct()  # stage 1: (key, value) hash
     return (
         pairs.groupBy("event_type")
@@ -642,9 +640,7 @@ def snapshot_diff_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def cdc_compact_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrecount_spark.session import read_events
-
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     state = R.cdc_compact(
         e,
         key_cols=["user_id"],

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from pyrecount_spark.functions.scalars import split_to_columns, value_remap
 from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-from pyrecount_spark.session import read_events
 
 
 # ---------------------------------------------------------------------------
@@ -127,7 +126,7 @@ def arith_conditional_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     k = F.get_json_object("props", "$.k").cast("long")
     return e.groupBy("event_type").agg(
         F.sum(k).alias("sum_k"), F.count(F.lit(1)).alias("n")
@@ -401,7 +400,7 @@ def _zorder_sql(bits: int = 8) -> str:
 def zorder_key_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyrecount_spark.sources.bucketing import zorder_key
 
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     return e.select(
         "event_id",
         zorder_key(F.col("user_id"), F.hour("ts"), bits=8).alias("zkey"),

@@ -75,7 +75,7 @@ def _plane_literals(num_planes: int, dim: int) -> list[list[float]]:
     ]
 
 
-def _ann_lsh_sql(dim: int = 64, k: int = 20) -> str:
+def _ann_lsh_sql() -> str:
     """Corpus-adaptive oracle twin of lsh_bucketed_topk(num_planes=None):
     plane count = GREATEST(6, LENGTH(BIN(n-1)) - 10) (bucket target 1024),
     replayed over a static 32-plane literal list sliced to the derived
@@ -85,7 +85,7 @@ def _ann_lsh_sql(dim: int = 64, k: int = 20) -> str:
         ANN_LSH_TARGET_BUCKET,
     )
 
-    planes = _plane_literals(ANN_LSH_MAX_PLANES, dim)
+    planes = _plane_literals(ANN_LSH_MAX_PLANES, 64)
     planes_lit = ",".join("[" + ",".join(str(s) for s in p) + "]" for p in planes)
     tgt_bits = ANN_LSH_TARGET_BUCKET.bit_length() - 1  # 1024 -> 10
     return f"""
@@ -106,7 +106,7 @@ def _ann_lsh_sql(dim: int = 64, k: int = 20) -> str:
            ROUND(list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qvec), 4)
              AS cos_sim
     FROM b e, q WHERE e.bucket = q.bucket
-    ORDER BY cos_sim DESC, e.vec_id LIMIT {k}
+    ORDER BY cos_sim DESC, e.vec_id LIMIT 20
     """
 
 
@@ -223,7 +223,7 @@ def ann_ivf_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probe corpus both resolve to 64/8 and the registered query completes
 # where the pinned constants used to guard-trip.
 # ---------------------------------------------------------------------------
-def _lsh_verified_pairs_sql(dim: int = 64, threshold: float = 0.4) -> str:
+def _lsh_verified_pairs_sql() -> str:
     """Corpus-adaptive oracle twin of lsh_verified_pairs(num_planes=None)."""
     from pyrecount_spark.operators.similarity import (
         LSH_BANDS,
@@ -231,7 +231,7 @@ def _lsh_verified_pairs_sql(dim: int = 64, threshold: float = 0.4) -> str:
         LSH_TARGET_OCCUPANCY,
     )
 
-    planes = _plane_literals(LSH_BANDS * LSH_MAX_BAND_SIZE, dim)
+    planes = _plane_literals(LSH_BANDS * LSH_MAX_BAND_SIZE, 64)
     planes_lit = ",".join(
         "[" + ",".join(str(s) for s in p) + "]" for p in planes
     )
@@ -269,7 +269,7 @@ def _lsh_verified_pairs_sql(dim: int = 64, threshold: float = 0.4) -> str:
     JOIN embeddings ea ON ea.vec_id = c.id_a
     JOIN embeddings eb ON eb.vec_id = c.id_b
     WHERE ROUND(list_cosine_similarity(CAST(ea.embedding AS DOUBLE[]),
-                                       CAST(eb.embedding AS DOUBLE[])), 4) >= {threshold}
+                                       CAST(eb.embedding AS DOUBLE[])), 4) >= 0.4
     """
 
 
@@ -815,7 +815,7 @@ def rrf_hybrid_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     emb = _t(spark, sf_dir, "embeddings")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = _t(spark, sf_dir, "documents")
     query = emb.filter(F.col("vec_id") == 0)
     dense = (
         brute_force_topk(emb.filter(F.col("vec_id") != 0), query, k=20)

@@ -30,6 +30,7 @@ from pyspark.sql.types import (
     TimestampNTZType,
 )
 
+from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
 
 # events.parquet carries TIMESTAMP(NANOS); Spark 4 reads it natively as
@@ -327,7 +328,7 @@ def streaming_tumbling_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_dim_join_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build():
         stream = _read_events_stream(spark, sf_dir)
-        dim = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+        dim = _t(spark, sf_dir, "customer").select(
             "c_custkey", "c_mktsegment"
         )
         return (
@@ -542,8 +543,6 @@ def streaming_session_window_native(spark: SparkSession, sf_dir: str) -> DataFra
 def streaming_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime
 
-    from pyrecount_spark.session import read_events
-
     def build():
         clicks = _watermarked(_read_events_stream(spark, sf_dir, event_time=True), "click")
         purchases = _watermarked(
@@ -569,7 +568,7 @@ def streaming_left_outer_attribution(spark: SparkSession, sf_dir: str) -> DataFr
     # 420 s: stream-stream join guard — see streaming_click_purchase_join
     result = _run_event_time(spark, build, "stream_lo", "append", 420, sf_dir)
 
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     mx = e.groupBy().agg(
         F.max(F.when(F.col("event_type") == "click", F.col("ts"))).alias("mc"),
         F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("mp"),

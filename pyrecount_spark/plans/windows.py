@@ -13,7 +13,6 @@ from pyspark.sql.window import Window
 from pyrecount_spark.operators.windows import sessionize, sliding_agg, tumbling_agg
 from pyrecount_spark.plans import read_table as _t
 from pyrecount_spark.plans import register
-from pyrecount_spark.session import read_events
 
 
 # ---------------------------------------------------------------------------
@@ -30,7 +29,7 @@ from pyrecount_spark.session import read_events
     """,
 )
 def window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tumbling_agg(read_events(spark, sf_dir), "ts", ["event_type"], unit="hour")
+    return tumbling_agg(_t(spark, sf_dir, "events"), "ts", ["event_type"], unit="hour")
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +54,7 @@ def window_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_sliding_30m_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sliding_agg(
-        read_events(spark, sf_dir), "ts", window="30 minutes", slide="15 minutes"
+        _t(spark, sf_dir, "events"), "ts", window="30 minutes", slide="15 minutes"
     )
 
 
@@ -85,7 +84,7 @@ def window_sliding_30m_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def sessionize_30m_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return sessionize(read_events(spark, sf_dir), "ts", "user_id", gap_minutes=30)
+    return sessionize(_t(spark, sf_dir, "events"), "ts", "user_id", gap_minutes=30)
 
 
 # ---------------------------------------------------------------------------
@@ -155,7 +154,7 @@ def window_function_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rolling_3_events_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -279,9 +278,7 @@ def pareto_price_recency_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def twap_value_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrecount_spark.session import read_events
-
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t = e.select(
         "user_id",
@@ -337,9 +334,7 @@ def twap_value_by_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def gapfill_daily_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyrecount_spark.session import read_events
-
-    e = read_events(spark, sf_dir)
+    e = _t(spark, sf_dir, "events")
     bounds = e.groupBy("user_id").agg(
         F.date_trunc("day", F.min("ts")).alias("d0"),
         F.date_trunc("day", F.max("ts")).alias("d1"),

@@ -40,6 +40,9 @@ def get_spark(
     run on. The same count is the default shuffle-partition number.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    # driver heap: a fifth of RAM, clamped to 1-8 GB (ARCHITECTURE.md, "Driver heap")
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    heap = os.environ.get("SPARK_DRIVER_MEM") or f"{max(1, min(8, int(ram_gb // 5)))}g"
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
@@ -74,10 +77,11 @@ def get_spark(
         # every AQE-coalesced partition 4x — wrong at 100 TB. The OOM is
         # a LOCAL-mode artifact (32 threads share ONE heap; a real
         # executor runs 4-8 tasks on its own 8-32 GB, where 256 MB builds
-        # are exactly what this conversion is for), so the local heap is
-        # sized to match (48g below) and the threshold keeps the
-        # cluster-correct value. Runtime-only (AQE) decision: static
-        # plans and their fingerprints are byte-identical everywhere.
+        # are exactly what this conversion is for), so large local runs
+        # set SPARK_DRIVER_MEM (ARCHITECTURE.md, "Driver heap") and the
+        # threshold keeps the cluster-correct value. Runtime-only (AQE)
+        # decision: static plans and their fingerprints are byte-identical
+        # everywhere.
         .config(
             "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
             "67108864",
@@ -85,20 +89,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # 48g default (round-13; 24g round-11, 8g before): in LOCAL mode
-        # this one heap is driver AND all 32 executor threads. At 8g a
-        # ~2 MB driver-side broadcast build racing 32 sort/aggregate tasks
-        # for unified memory failed on the 120k-vector probe; at 24g the
-        # 600M-row decade's SHJ-converted joins (~256 MB in-memory build x
-        # 32 concurrent tasks = ~8 GB of maps ALONE) OOM'd two Q9/Q7-shape
-        # queries (SCALING_TPCHV_r12 tpchv_sf100 expected_err rows, both
-        # cell-exact under a 48g diagnostic). The contention is the
-        # local-mode heap-sharing artifact, not the plan: a real cluster
-        # gives each executor its own 8-32 GB for 4-8 tasks, the exact
-        # regime the 64 MB SHJ threshold above is calibrated for. 1.5 GB
-        # per task thread; -Xmx is lazily committed, so small runs pay
-        # nothing.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
@@ -159,45 +150,3 @@ def local_frame(spark: SparkSession, rows: Sequence[tuple], names: Sequence[str]
     """
     columns = {name: pa.array([r[i] for r in rows], pa.string()) for i, name in enumerate(names)}
     return spark.createDataFrame(pa.table(columns))
-
-
-def read_events(spark: SparkSession, sf_dir: str):
-    """Read the events table.
-
-    Spark 4 reads parquet TIMESTAMP(NANOS) natively as ``timestamp_ntz``
-    (microsecond-truncated — the same µs semantics DuckDB/Arrow surface for
-    this column), so no conf or conversion is needed; the year-2024 canary
-    in tests/test_streaming_queries.py pins that. Never set
-    ``spark.sql.legacy.parquet.nanosAsLong`` here: under Spark 4.1 that
-    path yields µs-valued longs, and any div-1000 shim would collapse event
-    times into 1970.
-    """
-    return spark.read.parquet(f"{sf_dir}/events.parquet")
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] | None = None):
-    """Register the lake tables under ``sf_dir`` as temp views and return them.
-
-    Mirrors the reference's catalog-then-load flow (SURVEY.md §3.1) minus the
-    HTTP layer: here the "catalog" is the parquet directory listing and Spark's
-    own file index. Partition/row-group pruning replaces the reference's URL
-    pre-filtering (accessor.py:320-323).
-    """
-    names = names or (
-        "region",
-        "nation",
-        "customer",
-        "supplier",
-        "part",
-        "orders",
-        "lineitem",
-        "events",
-        "documents",
-        "embeddings",
-    )
-    out = {}
-    for name in names:
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

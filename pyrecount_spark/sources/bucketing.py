@@ -1,52 +1,12 @@
-"""Bucketed-table sink: the co-located-join layout for the 100 TB lake.
-
-The reference caches raw files and re-joins per query
-(/root/reference/src/pyrecount/accessor.py cache paths); at Spark scale the
-equivalent investment is to LAND the lake bucketed on the join key so every
-later fact-fact join is shuffle-free: both sides hash-bucket on the same
-key with the same bucket count, and SortMergeJoin reads buckets pairwise —
-no Exchange in the plan, ever, no matter how many queries reuse it.
-
-Rule of thumb: bucket count ≈ (table bytes / 256 MB) rounded to a power of
-two; both sides of a recurring join MUST use the same count or Spark
-re-shuffles the mismatched side.
+"""Sorted lake layouts whose parquet min/max stats let range and 2-D box
+predicates skip whole files and row groups.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 8,
-    sort_cols: Sequence[str] = (),
-    path: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Save as a bucketed (optionally bucket-sorted) Parquet table.
-
-    ``sortBy`` makes each bucket file key-sorted, so SortMergeJoin skips
-    its sort as well — the join degenerates to a streaming merge of
-    pre-sorted, pre-partitioned files.
-    """
-    writer = df.write.mode(mode).format("parquet").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: Sequence[str]
-) -> DataFrame:
-    """Join two same-bucketed tables — produces a shuffle-free plan."""
-    return spark.table(left_table).join(spark.table(right_table), on=list(on))
+from pyspark.sql import DataFrame
 
 
 def write_range_sorted(
@@ -54,7 +14,6 @@ def write_range_sorted(
     path: str,
     range_cols: Sequence[str],
     num_partitions: int,
-    mode: str = "overwrite",
 ) -> None:
     """Range-partitioned, within-file-sorted layout: the scan-pruning layout
     for range predicates (time ranges, key ranges) when a hive-style
@@ -70,7 +29,7 @@ def write_range_sorted(
     (
         df.repartitionByRange(num_partitions, *cols)
         .sortWithinPartitions(*cols)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
@@ -98,26 +57,3 @@ def zorder_key(a, b, bits: int = 16):
             + F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i)
         )
     return out
-
-
-def compact_lake(
-    spark: SparkSession, in_path: str, out_path: str, target_file_bytes: int = 256 << 20
-) -> int:
-    """Small-file compaction: rewrite a lake directory into
-    ``ceil(total_bytes / target_file_bytes)`` files. Returns the file count.
-
-    The lake-maintenance job every long-lived ingest needs — streaming and
-    per-batch writes fragment into KB-files whose per-file open/footer cost
-    dominates scans at 100 TB. Local implementation sizes via the
-    filesystem; on object storage the same sum comes from the FileIndex.
-    """
-    import math
-    import os
-
-    df = spark.read.parquet(in_path)
-    total = sum(
-        os.path.getsize(f.replace("file:", "")) for f in df.inputFiles()
-    )
-    n = max(1, math.ceil(total / target_file_bytes))
-    df.coalesce(n).write.mode("overwrite").parquet(out_path)
-    return n

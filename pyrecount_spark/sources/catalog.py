@@ -17,8 +17,6 @@ from dataclasses import dataclass, field
 from enum import Enum
 from typing import Sequence
 
-from pyrecount_spark.functions.scalars import ORGANISM_REMAP
-
 
 class Annotation(str, Enum):
     """Annotation sources (models.py:7-14)."""
@@ -58,11 +56,6 @@ class Extensions(str, Enum):
     GZ = "gz"
     MM = "MM.gz"
     RR = "RR.gz"
-
-
-def normalize_organism(name: str) -> str:
-    """utils.py:6-9 — pass through unmatched values."""
-    return ORGANISM_REMAP.get(name, name)
 
 
 def shard2(ident: str) -> str:

@@ -145,7 +145,6 @@ def land_parquet(
     df: DataFrame,
     lake_path: str,
     partition_by: Sequence[str] = (),
-    mode: str = "overwrite",
 ) -> None:
     """Land a DataFrame as the partitioned Parquet lake table.
 
@@ -153,7 +152,7 @@ def land_parquet(
     a re-ingest of one project replaces only that project's partitions —
     the Spark-native form of the reference's skip-if-cached semantics.
     """
-    writer = df.write.mode(mode).option("partitionOverwriteMode", "dynamic")
+    writer = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(lake_path)

@@ -135,15 +135,8 @@ def matrix_market_dims(path: str) -> tuple[int, int, int]:
     return int(r), int(c), int(n)
 
 
-def read_id_list(spark: SparkSession, path: str, col: str = "rail_id") -> DataFrame:
-    """S11 (accessor.py:419): sample-id dimension table, ids cast to string.
-    Stays a DataFrame (joined to COO col_idx) — never a driver list unless
-    genuinely tiny."""
-    return read_tsv_strings(spark, path).select(col)
-
-
 def id_list_length(path: str) -> int:
-    """Rows ``read_id_list`` returns for ``path``, counted on the driver."""
+    """Data rows of the ID list TSV at ``path``, counted on the driver."""
     n = sum(1 for _ in _lines(path, "#"))
     if not n:
         raise ValueError(f"no header line in {path}")

@@ -48,19 +48,16 @@ def read_event_stream(
     )
 
 
-def streaming_tumbling_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling window counts per event_type.
+def streaming_tumbling_counts(events: DataFrame) -> DataFrame:
+    """Watermarked 1-hour tumbling window counts per event_type, with a
+    2-hour watermark.
 
     The watermark bounds state: windows older than max(event time) -
     watermark are finalized and evicted — without it, 100 TB of stream
     history accumulates in the state store."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
             F.col("w.start").alias("window_start"),
@@ -213,39 +210,6 @@ def run_stream_to_memory(
             f"streaming query {query_name} did not finish within {timeout_s}s"
         )
     capture_state_metrics(q)
-
-
-def foreach_batch_parquet_sink(
-    stream: DataFrame, path: str, checkpoint: str
-):
-    """Exactly-once file sink: ``foreachBatch`` + idempotent per-batch
-    dynamic partition overwrite.
-
-    The standard recipe when a sink has no native transactional writer:
-    each micro-batch lands under its ``_batch_id=N`` partition with
-    DYNAMIC partition overwrite, so a replayed batch (failure between
-    write and checkpoint commit) overwrites ITS OWN partition instead of
-    duplicating rows — write idempotence + the checkpoint's exactly-once
-    batch tracking compose to end-to-end exactly-once. Restarting with the
-    same checkpoint resumes at the next unprocessed file; batch ids keep
-    ascending.
-    """
-
-    def write_batch(df: DataFrame, batch_id: int) -> None:
-        (
-            df.withColumn("_batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(path)
-        )
-
-    return (
-        stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 TIMEOUT_SESSIONS_SCHEMA = StructType(

@@ -101,6 +101,7 @@ Prints every suspect with its ratios; --strict exits 1 when any exist
 
 from __future__ import annotations
 
+import glob
 import json
 import re
 import sys
@@ -190,10 +191,10 @@ INTERMEDIATE_BOUND_OK = {
         "runtime broadcast between sf1 and sf10; hi = 126M ~ 2.1x "
         "lineitem — linear with self-join multiplicity 2",
     # tpchv_sf10->sf100 (round-13: the row exists under registered
-    # defaults for the first time — the 48g local heap fixed its r12 OOM;
+    # defaults for the first time — a 48g local heap fixed its r12 OOM;
     # see session.py for why the advised 16 MB threshold was rejected).
-    # Reviewed hi anatomy from the r12 48g diagnostic (now the registered
-    # config): part (20M) and supplier (1M) outgrow runtime broadcast at
+    # Reviewed hi anatomy from the r12 48g diagnostic (the heap the r13
+    # decade ran with): part (20M) and supplier (1M) outgrow runtime broadcast at
     # sf100, so the Q9-shape join stream shuffles lineitem + orders once
     # each — hi = 827M rows ~ 1.4x lineitem, linear with join
     # multiplicity; srows x36.8 only because the sf10 base is the
@@ -203,7 +204,7 @@ INTERMEDIATE_BOUND_OK = {
         "outgrow broadcast; hi = 827M ~ 1.4x lineitem (join "
         "multiplicity), linear per decade beyond",
     # tpchv_sf10->sf100 (round-13: first pair adjudication — the row was
-    # expected_err at 24g in r12; green under the 48g registered default).
+    # expected_err at 24g in r12; green under a 48g heap).
     # Reviewed hi anatomy: Q7-shape — customer (15M) and supplier (1M)
     # outgrow runtime broadcast at sf100, so the date-filtered
     # lineitem-orders stream re-shuffles at each crossed join; hi =
@@ -348,7 +349,9 @@ def main() -> int:
     if bad:
         print(f"unknown option(s) {bad}; see the module docstring for usage")
         raise SystemExit(2)
-    path = args[0] if args else "SWEEP_r7.json"
+    path = args[0] if args else max(
+        glob.glob("SWEEP_r*.json"), key=lambda p: int(re.search(r"_r(\d+)", p).group(1))
+    )
 
     with open(path) as f:
         sweep = json.load(f)

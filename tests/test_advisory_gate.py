@@ -20,10 +20,14 @@ verify joins unnoticed. These tests make both halves mechanical:
    16 MB threshold stays SortMergeJoin even though every shuffle partition
    is kilobytes (far below 16 MB): the reversion is the advisory gate, not
    partition size.
+
+The last test pins the other session default sized for local mode: the
+driver heap.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
@@ -150,3 +154,12 @@ def test_registered_session_factory_threshold_relation():
         f"partition size {advisory} — see the round-13 finding in the "
         "session.py comment block before shipping this"
     )
+
+
+def test_driver_memory_from_env_or_fifth_of_ram(spark):
+    """The session's driver heap: ``SPARK_DRIVER_MEM`` when set, otherwise a
+    fifth of RAM clamped to 1-8 GB (ARCHITECTURE.md, "Driver heap")."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    rule = f"{max(1, min(8, int(ram_gb // 5)))}g"
+    expected = os.environ.get("SPARK_DRIVER_MEM") or rule
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == expected

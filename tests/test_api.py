@@ -396,6 +396,25 @@ def test_empty_tsv_raises_naming_file(spark, lake_copy, catalog_df):
         proj.load(Dtype.METADATA)
 
 
+def test_truncated_gzip_fails_first_action_naming_file(spark, lake_copy, catalog_df):
+    """A gene_sums .gz cut in half: load() returns (its header is read on the
+    driver from the intact start), then the first action fails with Spark's
+    FAILED_READ_FILE naming the file, so no partial rows come back."""
+    tsv = lake_copy / "sra/gene_sums/P1/sra.gene_sums.P1.G029.tsv"
+    body = _tsv("gene_id\ts1\ts2", *[f"g{i}\t{i}\t{2 * i}" for i in range(5000)])
+    data = gzip.compress(body.encode())
+    tsv.unlink()
+    cut = tsv.with_name(tsv.name + ".gz")
+    cut.write_bytes(data[: len(data) // 2])
+    proj = Project(
+        spark, metadata=catalog_df.filter(F.col("project") == "P1"),
+        lake_dir=str(lake_copy), dbase="sra", annotation=Annotation.GENCODE_V29,
+    )
+    _, counts = proj.load(Dtype.GENE)
+    with pytest.raises(Exception, match=r"FAILED_READ_FILE[\s\S]*" + re.escape(cut.name)):
+        counts.collect()
+
+
 def test_loads_start_no_spark_job(spark, lake, catalog_df, job_group):
     """Headers, MM dims and ID-list lengths are read on the driver and the
     bigwig manifest is a local relation: once the project -> samples map is

@@ -1,75 +1,16 @@
-"""Bucketed sink: co-located joins must be shuffle-free, partitioned reads
-must prune. These are plan-shape assertions — the 100 TB design claims made
-in ``sources/bucketing.py`` verified against the actual physical plans.
+"""Partitioned lake reads must prune: a plan-shape assertion on the layout
+``sources/ingest.land_parquet`` writes, checked against the physical plan.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from pyrecount_spark.sources.bucketing import bucketed_join, write_bucketed
 from pyrecount_spark.sources.ingest import land_parquet
 
 
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
-
-
-class _no_broadcast:
-    """Force the SortMergeJoin path: at test sizes Spark would broadcast
-    (correct for these row counts, but bucketing only pays on the fact-fact
-    joins a broadcast can't serve — that's what's under test)."""
-
-    def __init__(self, spark):
-        self.spark = spark
-
-    def __enter__(self):
-        self.old = self.spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        self.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.autoBroadcastJoinThreshold", self.old)
-
-
-def test_bucketed_join_no_shuffle(spark, tmp_path):
-    orders = spark.range(0, 1000).select(
-        F.col("id").alias("o_key"), (F.col("id") % 7).alias("o_val")
-    )
-    items = spark.range(0, 5000).select(
-        (F.col("id") % 1000).alias("o_key"), F.col("id").alias("i_val")
-    )
-    spark.sql("DROP TABLE IF EXISTS t_orders_b")
-    spark.sql("DROP TABLE IF EXISTS t_items_b")
-    write_bucketed(
-        orders, "t_orders_b", ["o_key"], num_buckets=4, sort_cols=["o_key"],
-        path=str(tmp_path / "orders_b"),
-    )
-    write_bucketed(
-        items, "t_items_b", ["o_key"], num_buckets=4, sort_cols=["o_key"],
-        path=str(tmp_path / "items_b"),
-    )
-    with _no_broadcast(spark):
-        joined = bucketed_join(spark, "t_orders_b", "t_items_b", on=["o_key"])
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan, plan
-        assert joined.count() == 5000
-
-
-def test_mismatched_buckets_shuffle_one_side(spark, tmp_path):
-    left = spark.range(0, 100).select(F.col("id").alias("k"))
-    right = spark.range(0, 100).select(F.col("id").alias("k"), F.lit(1).alias("v"))
-    spark.sql("DROP TABLE IF EXISTS t_left8")
-    spark.sql("DROP TABLE IF EXISTS t_right4")
-    write_bucketed(left, "t_left8", ["k"], num_buckets=8, path=str(tmp_path / "l8"))
-    write_bucketed(right, "t_right4", ["k"], num_buckets=4, path=str(tmp_path / "r4"))
-    with _no_broadcast(spark):
-        plan = _plan(bucketed_join(spark, "t_left8", "t_right4", on=["k"]))
-        # exactly one Exchange node: the mismatched side re-distributes,
-        # the 8-bucket side stays in place
-        import re
-
-        assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1, plan
 
 
 def test_partition_pruning_on_lake_read(spark, tmp_path):

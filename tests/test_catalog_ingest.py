@@ -12,7 +12,6 @@ from pyrecount_spark.sources.catalog import (
     Dtype,
     ProjectLocator,
     discover_data_sources,
-    normalize_organism,
     shard2,
 )
 from pyrecount_spark.sources.ingest import (
@@ -72,7 +71,6 @@ def test_catalog_locator_and_discovery():
     assert len(cat.urls()) == 2
     srcs = discover_data_sources("data_sources/sra\ndata_sources/gtex\n\n")
     assert srcs == {"sra": "data_sources/sra", "gtex": "data_sources/gtex"}
-    assert normalize_organism("Homo sapiens") == "human"
 
 
 def test_fetch_manifest_idempotent(spark, tmp_path):

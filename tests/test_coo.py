@@ -17,8 +17,8 @@ from pyrecount_spark.operators.relational import anti_join
 from pyrecount_spark.sources.readers import (
     id_list_length,
     matrix_market_dims,
-    read_id_list,
     read_matrix_market_coo,
+    read_tsv_strings,
 )
 
 MM = textwrap.dedent(
@@ -82,14 +82,14 @@ def test_mm_dims(mm_path):
 def test_width_validation_positive(spark, mm_path, ids_path):
     # accessor.py:434-435: MM column count must equal the id-list length
     _, n_cols, _ = matrix_market_dims(mm_path)
-    ids = read_id_list(spark, ids_path)
+    ids = read_tsv_strings(spark, ids_path).select("rail_id")
     assert ids.count() == n_cols == id_list_length(ids_path)
 
 
 def test_orphan_check_anti_join(spark, mm_path, ids_path):
     """COO col indices not covered by the sample dim table (none here)."""
     coo = read_matrix_market_coo(spark, mm_path)
-    ids = read_id_list(spark, ids_path)
+    ids = read_tsv_strings(spark, ids_path).select("rail_id")
     dim = ids.select(
         (F.row_number().over(__import__("pyspark").sql.window.Window.orderBy("rail_id")))
         .alias("col_idx")

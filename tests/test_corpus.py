@@ -157,7 +157,8 @@ def test_bpe_regex_tokenization_semantics(spark):
 
 
 def test_write_training_shards_order_and_disjointness(spark, tmp_path):
-    from pyrecount_spark.operators.corpus import weighted_mix, write_training_shards
+    from pyrecount_spark.operators.corpus import weighted_mix
+    from pyrecount_spark.sources.bucketing import write_range_sorted
 
     docs = spark.createDataFrame(
         [(i, f"src{i % 4}") for i in range(400)], ["doc_id", "source"]
@@ -168,7 +169,7 @@ def test_write_training_shards_order_and_disjointness(spark, tmp_path):
     total = mixed.count()
 
     path = str(tmp_path / "shards")
-    write_training_shards(mixed, path, n_shards=4)
+    write_range_sorted(mixed, path, ["shuffle_key"], 4)
 
     import glob
 

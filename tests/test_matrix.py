@@ -1,4 +1,4 @@
-"""Count-matrix semantics: melt/pivot round-trip, align-merge, Q7/Q8 scaling.
+"""Count-matrix semantics: melt/pivot round-trip, chunked wide view, Q7/Q8 scaling.
 
 Golden fixtures per FIXTURES.md F2/F3; scaling semantics accessor.py:122-174.
 """
@@ -12,14 +12,11 @@ from pyspark.sql import functions as F
 
 from pyrecount_spark.operators.matrix import (
     melt,
-    numeric_columns,
     pivot_wide,
     scale_factors_auc,
     scale_factors_mapped_reads,
     scale_long,
-    scale_wide,
 )
-from pyrecount_spark.operators.relational import align_merge
 
 
 @pytest.fixture(scope="module")
@@ -67,15 +64,6 @@ def test_pivot_cardinality_guard(spark, counts_wide):
         M.MAX_PIVOT_COLUMNS = orig
 
 
-def test_align_merge_matches_reference_align_concat(spark):
-    # accessor.py:388: frames share gene_id, disjoint sample columns,
-    # non-identical gene sets (FIXTURES.md F3)
-    a = spark.createDataFrame([("g1", 1), ("g2", 2)], ["gene_id", "s1"])
-    b = spark.createDataFrame([("g2", 20), ("g3", 30)], ["gene_id", "s2"])
-    out = {r.gene_id: (r.s1, r.s2) for r in align_merge(a, b, ["gene_id"]).collect()}
-    assert out == {"g1": (1, None), "g2": (2, 20), "g3": (None, 30)}
-
-
 def test_scale_factors_mapped_reads_paired_end_detection(spark, metadata):
     # accessor.py:127-144: sf = target*L*paired / (reads * len^2)
     sf = {r.sample_id: r.sf for r in
@@ -95,26 +83,18 @@ def test_scale_auc_long_and_wide_agree(spark, counts_wide, metadata):
     assert got[("g1", "s1")] == 20 and got[("g1", "s2")] == 400
     assert got[("g3", "s1")] == 0 and got[("g3", "s2")] == 1200
 
-    scaled_wide = scale_wide(counts_wide, factors, round_to_int=True)
+    # the wide view of the scaled long table is the reference's wide result
+    scaled_wide = pivot_wide(scaled_long, "gene_id", "sample_id", "count", ["s1", "s2"])
     wide_vals = {r.gene_id: (r.s1, r.s2) for r in scaled_wide.collect()}
     assert wide_vals == {"g1": (20, 400), "g2": (40, 800), "g3": (0, 1200)}
-    # gene_id column untouched (accessor.py:172)
-    assert dict(scaled_wide.dtypes)["gene_id"] == "string"
-
-
-def test_numeric_column_selection(spark, counts_wide):
-    assert numeric_columns(counts_wide, exclude=["gene_id"]) == ["s1", "s2"]
+    assert dict(scaled_wide.dtypes)["s1"] == "bigint"
 
 
 def test_chunked_wide_view_reassembles_and_prunes(spark, tmp_path):
     """The MAX_PIVOT_COLUMNS fallback: chunked column-group pivots over the
-    partitioned layout reassemble (via align-merge) to the direct pivot,
-    and each chunk's scan reads ONLY its own partition directory."""
-    from pyrecount_spark.operators.matrix import (
-        column_chunks,
-        pivot_wide_chunk,
-        write_wide_chunked,
-    )
+    landed long table reassemble (full-outer on the id) to the direct pivot,
+    and each chunk's column filter is pushed into the parquet scan."""
+    from pyrecount_spark.operators.matrix import column_chunks, pivot_wide_chunk
 
     samples = [f"s{i:02d}" for i in range(7)]  # 7 cols, chunk_size 3 → 3 chunks
     rows = [
@@ -130,8 +110,8 @@ def test_chunked_wide_view_reassembles_and_prunes(spark, tmp_path):
         for s in samples
     }
 
-    path = str(tmp_path / "wide_chunks")
-    write_wide_chunked(long, path, "sample_id", samples, chunk_size=3)
+    path = str(tmp_path / "long")
+    long.write.parquet(path)
     landed = spark.read.parquet(path)
 
     chunks = column_chunks(samples, 3)
@@ -142,13 +122,12 @@ def test_chunked_wide_view_reassembles_and_prunes(spark, tmp_path):
             landed, "gene_id", "sample_id", "count", samples, ci, 3
         )
         assert wide.columns == ["gene_id"] + cols
-        # partition pruning: the scan plans only this chunk's directory
+        # the chunk's columns reach the scan as a pushed filter
         plan = wide._sc._jvm.PythonSQLUtils.explainString(
             wide._jdf.queryExecution(), "formatted"
         )
-        assert "PartitionFilters" in plan, plan
-        assert re.search(rf"_chunk#\d+\s*=\s*{ci}\)", plan), plan
-        merged = wide if merged is None else align_merge(merged, wide, ["gene_id"])
+        assert re.search(r"PushedFilters: \[.*(In|EqualTo)\(sample_id,", plan), plan
+        merged = wide if merged is None else merged.join(wide, "gene_id", "full")
 
     got = {
         (r.gene_id, s): r[s] for r in merged.collect() for s in samples

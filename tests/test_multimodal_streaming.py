@@ -98,68 +98,6 @@ def test_streaming_sessionize_matches_batch_gap_semantics(spark, stream_dir):
     assert by_user[2] == [1]
 
 
-def test_foreach_batch_exactly_once_sink(spark, tmp_path):
-    """foreachBatch + per-batch dynamic overwrite: all rows land once,
-    a replayed batch is idempotent, and a checkpointed restart processes
-    only new files."""
-    import json
-
-    from pyspark.sql import functions as F
-    from pyrecount_spark.streaming.pipeline import (
-        EVENTS_SCHEMA,
-        foreach_batch_parquet_sink,
-        read_event_stream,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-
-    def write_file(name, ids):
-        rows = [
-            {"event_id": i, "ts": "2024-01-01T00:00:00", "user_id": i % 3,
-             "event_type": "click", "value": "1", "props": "{}"}
-            for i in ids
-        ]
-        (src / name).write_text("\n".join(json.dumps(r) for r in rows))
-
-    write_file("a.json", range(0, 5))
-    write_file("b.json", range(5, 8))
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    q = foreach_batch_parquet_sink(stream, out, ckpt)
-    q.awaitTermination(120)
-
-    landed = spark.read.parquet(out)
-    assert landed.count() == 8
-    batches = {r._batch_id for r in landed.select("_batch_id").distinct().collect()}
-    assert len(batches) == 2  # maxFilesPerTrigger=1 -> one batch per file
-
-    # replayed batch (failure between write and checkpoint commit) is
-    # idempotent: re-running the same batch write leaves counts unchanged
-    replay = spark.read.parquet(out).filter(F.col("_batch_id") == max(batches)).drop("_batch_id")
-    (
-        replay.withColumn("_batch_id", F.lit(max(batches)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(out)
-    )
-    assert spark.read.parquet(out).count() == 8
-
-    # restart with the same checkpoint + one new file: only it is processed
-    write_file("c.json", range(8, 10))
-    q2 = foreach_batch_parquet_sink(
-        read_event_stream(spark, str(src), max_files_per_trigger=1), out, ckpt
-    )
-    q2.awaitTermination(120)
-    after = spark.read.parquet(out)
-    assert after.count() == 10
-    new_batches = {r._batch_id for r in after.select("_batch_id").distinct().collect()}
-    assert len(new_batches) == 3 and max(new_batches) > max(batches)
-
-
 def test_resize_images_contract(spark, tmp_path):
     """Resize stub: aspect preserved, short side = target, payload exactly
     dst_w*dst_h*3 bytes, deterministic across runs, narrow plan."""

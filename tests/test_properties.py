@@ -210,32 +210,6 @@ def test_png_codec_roundtrip_property(w, h, data):
 
 @_settings
 @given(
-    vecs=st.lists(
-        st.lists(
-            st.floats(-10, 10, allow_nan=False, width=32), min_size=6, max_size=6
-        ),
-        min_size=1,
-        max_size=8,
-    ),
-)
-def test_dot_unrolled_bit_identical_to_fold(spark, vecs):
-    """dot_unrolled must reproduce the higher-order fold EXACTLY (same
-    left-to-right double accumulation) — it replaces the fold on quadratic
-    hot paths, so bit-identity is the contract the oracles rely on."""
-    from pyrecount_spark.operators.similarity import dot, dot_unrolled
-
-    rows = [(i, v, vecs[(i + 1) % len(vecs)]) for i, v in enumerate(vecs)]
-    df = spark.createDataFrame(rows, "id int, a array<float>, b array<float>")
-    out = df.select(
-        dot(F.col("a"), F.col("b")).alias("fold"),
-        dot_unrolled(F.col("a"), F.col("b"), 6).alias("unrolled"),
-    ).collect()
-    for r in out:
-        assert r.fold == r.unrolled  # exact, not approx
-
-
-@_settings
-@given(
     n=st.integers(4, 24),
     k=st.sampled_from([1, 2, 3]),
 )

@@ -96,19 +96,6 @@ def test_zorder_key_locality_and_pruning(spark, tmp_path):
     assert touched < n_files / 2, (touched, n_files)
 
 
-def test_compact_lake_reduces_files(spark, tmp_path):
-    from pyrecount_spark.sources.bucketing import compact_lake
-
-    frag = str(tmp_path / "fragmented")
-    out = str(tmp_path / "compacted")
-    spark.range(0, 10_000).repartition(64).write.parquet(frag)
-    assert spark.read.parquet(frag).select(F.input_file_name()).distinct().count() == 64
-    n = compact_lake(spark, frag, out, target_file_bytes=256 << 20)
-    assert n == 1
-    assert spark.read.parquet(out).select(F.input_file_name()).distinct().count() == 1
-    assert spark.read.parquet(out).count() == 10_000
-
-
 def _plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"

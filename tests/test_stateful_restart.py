@@ -150,8 +150,7 @@ def test_tws_registered_query_matches_oracle(spark):
         pytest.skip("protobuf unavailable")
     from pyspark.sql import functions as F
 
-    from pyrecount_spark.plans import QUERIES, load_all
-    from pyrecount_spark.session import read_events
+    from pyrecount_spark.plans import QUERIES, load_all, read_table
 
     load_all()
     if "streaming_tws_user_stats" not in QUERIES:
@@ -161,7 +160,7 @@ def test_tws_registered_query_matches_oracle(spark):
         r.user_id: (r.n_events, r.n_event_types, r.n_purchases, r.value_cents)
         for r in QUERIES["streaming_tws_user_stats"](spark, sf).collect()
     }
-    e = read_events(spark, sf)
+    e = read_table(spark, sf, "events")
     exp = {
         r.user_id: (r.n_events, r.n_event_types, r.n_purchases, r.value_cents)
         for r in e.groupBy("user_id")

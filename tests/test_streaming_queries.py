@@ -24,9 +24,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from pyrecount_spark.plans import ORACLES, QUERIES, load_all
+from pyrecount_spark.plans import ORACLES, QUERIES, load_all, read_table
 from pyrecount_spark.plans.streaming_q import _read_events_stream
-from pyrecount_spark.session import read_events
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -62,15 +61,15 @@ def test_event_time_canary_streamed(spark):
 
 
 def test_event_time_canary_batch(spark):
-    """Batch read_events must agree: timestamps in 2024, µs precision."""
-    e = read_events(spark, SF_DIR)
+    """Batch read_table must agree: timestamps in 2024, µs precision."""
+    e = read_table(spark, SF_DIR, "events")
     row = e.agg(F.min("ts").alias("mn"), F.max("ts").alias("mx")).collect()[0]
     assert row.mn.year == 2024 and row.mx.year == 2024
 
 
 def _batch_counts(spark):
     """Batch twins for each streaming query's expected row count."""
-    e = read_events(spark, SF_DIR).withColumn(
+    e = read_table(spark, SF_DIR, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     c = spark.read.parquet(f"{SF_DIR}/customer.parquet")
@@ -143,7 +142,7 @@ def test_streaming_query_matches_oracle(spark, duck, name):
 def test_streaming_session_window_rows(spark):
     """session_window merges events with gaps < 30 min; its session count
     must match the batch lag/cumsum sessionizer at µs precision."""
-    e = read_events(spark, SF_DIR).withColumn(
+    e = read_table(spark, SF_DIR, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     from pyspark.sql import Window
@@ -183,7 +182,7 @@ def test_streaming_timeout_sessions_rows(spark):
     n = got.count()
     assert n > 0, "timeout sessionizer emitted nothing — state never timed out"
     # every emitted session must predate the global cutoff
-    e = read_events(spark, SF_DIR)
+    e = read_table(spark, SF_DIR, "events")
     mx = e.agg(F.max("ts").alias("mx")).collect()[0].mx
     assert got.count() == n  # deterministic re-read from memory sink
 
@@ -331,7 +330,7 @@ def test_late_family_degeneration_and_drop_pin(spark, tmp_path):
     want_free = sorted(
         map(
             tuple,
-            read_events(spark, SF_DIR)
+            read_table(spark, SF_DIR, "events")
             .select("user_id", "event_type")
             .distinct()
             .collect(),
@@ -357,7 +356,7 @@ def test_late_family_degeneration_and_drop_pin(spark, tmp_path):
     want_late = sorted(
         map(
             tuple,
-            read_events(spark, str(late_dir))
+            read_table(spark, str(late_dir), "events")
             .filter(F.col("event_id") >= 0)
             .select("user_id", "event_type")
             .distinct()

@@ -117,30 +117,6 @@ def test_lsh_verified_pairs_subset_with_true_scores(spark):
     assert len(got) >= len(full) * 0.5  # measured ~73% on this data
 
 
-def test_pandas_udf_cosine_matches_native(spark):
-    """The Arrow-batched Pandas-UDF scorer is value-identical to the native
-    F.aggregate fold at the registered rounding."""
-    from pyspark.sql import functions as F
-
-    from pyrecount_spark.operators.similarity import cosine, cosine_scores_pandas
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    qrow = emb.filter(F.col("vec_id") == 0).select("embedding").collect()[0]
-    qvec = [float(x) for x in qrow.embedding]
-    lit_q = F.array(*[F.lit(v) for v in qvec])
-    native = {
-        r.vec_id: r.cos_sim
-        for r in emb.select(
-            "vec_id", F.round(cosine(F.col("embedding"), lit_q), 4).alias("cos_sim")
-        ).collect()
-    }
-    pandas_scores = {
-        r.vec_id: r.cos_sim for r in cosine_scores_pandas(emb, qvec).collect()
-    }
-    assert pandas_scores == native
-    assert len(native) == 500
-
-
 def test_mean_pool_vectors_exact(spark):
     from pyrecount_spark.operators.similarity import mean_pool_vectors
 
