@@ -8,8 +8,11 @@ Design stance (SURVEY.md §7):
 - Long ("tidy") count tables ``(feature_id, sample_id, count)`` are the
   canonical form; wide matrices are a presentation-layer pivot.
 - Sparse matrices stay COO — never densified.
-- Zero row-at-a-time Python UDFs on hot paths; Arrow-batched pandas UDFs are
-  the only escape hatch (multimodal decode).
+- Zero row-at-a-time Python UDFs. Python runs on executors only in the
+  ``applyInPandas`` grouped-map queries, the ``applyInPandasWithState`` /
+  ``transformWithStateInPandas`` streaming operators, the ``mapInArrow``
+  fetch, and the ``mapInPandas`` decode of the ``multimodal`` library, which
+  no registered query reaches.
 - Small dimension sides are broadcast; big joins shuffle on explicit keys.
 """
 

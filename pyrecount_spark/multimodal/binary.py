@@ -8,7 +8,7 @@ in columnar batches, never row-at-a-time.
 
 Image decode probes codecs **at runtime on the executor**, in order:
 Pillow when importable (production throughput) → the pure-stdlib decoders
-in ``multimodal.codecs`` (PNG / baseline JPEG / PPM / BMP real-pixel
+in ``multimodal.codecs`` (PNG / PPM / BMP real-pixel
 decode, WAV via the stdlib ``wave`` module — genuinely executable on
 codec-less containers) → a deterministic content-hash fake for payloads
 outside both envelopes.
@@ -101,7 +101,7 @@ def extract_image_features(df: DataFrame, content_col: str = "content") -> DataF
     transfer and scheduling stay vectorized. Narrow op — no shuffle.
 
     Decode chain on the executor: Pillow when importable → pure-stdlib
-    PNG/JPEG/PPM/BMP decoders (real dims with no installs) → deterministic
+    PNG/PPM/BMP decoders (real dims with no installs) → deterministic
     fake dims from a content hash for anything undecodable. Nested so
     cloudpickle ships it by value — the job runs on executors that don't
     have this package installed."""

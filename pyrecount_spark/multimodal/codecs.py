@@ -2,15 +2,14 @@
 
 The executor-side decode order in ``multimodal.binary`` is:
 PIL (when installed) → THESE decoders → deterministic content-hash fake.
-PNG (8-bit non-interlaced), baseline sequential JPEG (SOF0/SOF1, Huffman,
-any JFIF chroma sampling), PROGRESSIVE JPEG (SOF2 — spectral selection,
-successive approximation, EOB runs), binary PPM, and uncompressed 24-bit
-BMP decode to real RGB pixels with nothing but ``zlib``/``struct``/
-``math``; WAV parses with the stdlib ``wave`` module; compressed media
-get NO-DECODE metadata passes (mp3 frame-header walk, FLAC STREAMINFO,
+PNG (8-bit non-interlaced), binary PPM, and uncompressed 24-bit BMP
+decode to real RGB pixels with nothing but ``zlib``/``struct``; JPEG and
+GIF payloads fall through to the fake (recount3 carries no image corpus,
+so their decoders are retired); WAV parses with the stdlib ``wave``
+module; compressed media get NO-DECODE metadata passes (mp3 frame-header walk, FLAC STREAMINFO,
 ISO-BMFF/mp4 box walk). That makes the "real decode" branch genuinely
-executable — and testable — on codec-less containers for every dominant
-corpus format, not a stub waiting for Pillow.
+executable — and testable — on codec-less containers, not a stub waiting
+for Pillow.
 
 These are correctness-first reference decoders (per-byte unfiltering
 loops); production throughput comes from PIL/libvips sitting ahead of
@@ -169,658 +168,6 @@ def decode_bmp(raw: bytes) -> tuple[int, int, bytes] | None:
     return w, h, bytes(rgb)
 
 
-# --- baseline JPEG (ITU-T T.81 sequential DCT, Huffman) --------------------
-# Pure-stdlib reference decoder for the dominant real-corpus image format:
-# SOF0/SOF1 frames, 8-bit samples, gray or 3-component YCbCr (any JFIF
-# sampling factors incl. 4:2:0 / 4:2:2), restart markers. Progressive
-# (SOF2), arithmetic coding, and 12-bit frames return None and fall through
-# the chain. Per-block Python IDCT — correctness-first like the PNG
-# unfilter loops above; PIL/libvips sit ahead of this in production.
-
-_ZIGZAG = (
-    0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
-    12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
-    35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
-    58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-)
-
-# IDCT basis: _COS[u][x] = alpha(u)/2 * cos((2x+1) u pi / 16)
-import math as _math
-
-_COS = [
-    [
-        (0.5 * (1.0 / _math.sqrt(2.0) if u == 0 else 1.0))
-        * _math.cos((2 * x + 1) * u * _math.pi / 16.0)
-        for x in range(8)
-    ]
-    for u in range(8)
-]
-
-
-def _huff_table(bits: list[int], vals: bytes) -> dict[tuple[int, int], int]:
-    """Canonical JPEG Huffman: {(length, code) -> symbol} per T.81 C.2."""
-    table: dict[tuple[int, int], int] = {}
-    code = 0
-    k = 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            table[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return table
-
-
-class _BitReader:
-    """MSB-first reader over entropy-coded data with 0xFF00 unstuffing;
-    stops at any real marker (caller handles RSTn via ``restart``)."""
-
-    def __init__(self, raw: bytes, pos: int):
-        self.raw = raw
-        self.pos = pos
-        self.bit = 0
-        self.marker: int | None = None
-
-    def _next_byte(self) -> int | None:
-        raw, p = self.raw, self.pos
-        if p >= len(raw):
-            return None
-        b = raw[p]
-        if b == 0xFF:
-            if p + 1 < len(raw) and raw[p + 1] == 0x00:
-                self.pos = p + 2
-                return 0xFF
-            self.marker = raw[p + 1] if p + 1 < len(raw) else None
-            return None
-        self.pos = p + 1
-        return b
-
-    def read_bit(self) -> int | None:
-        if self.bit == 0:
-            b = self._next_byte()
-            if b is None:
-                return None
-            self.cur = b
-            self.bit = 8
-        self.bit -= 1
-        return (self.cur >> self.bit) & 1
-
-    def read_bits(self, n: int) -> int | None:
-        v = 0
-        for _ in range(n):
-            b = self.read_bit()
-            if b is None:
-                return None
-            v = (v << 1) | b
-        return v
-
-    def restart(self) -> bool:
-        """Consume an RSTn marker at the current (byte-aligned) position."""
-        self.bit = 0
-        p = self.pos
-        if p + 1 < len(self.raw) and self.raw[p] == 0xFF and 0xD0 <= self.raw[p + 1] <= 0xD7:
-            self.pos = p + 2
-            self.marker = None
-            return True
-        return False
-
-    def decode_huff(self, table: dict[tuple[int, int], int]) -> int | None:
-        code = 0
-        for length in range(1, 17):
-            b = self.read_bit()
-            if b is None:
-                return None
-            code = (code << 1) | b
-            sym = table.get((length, code))
-            if sym is not None:
-                return sym
-        return None
-
-    def receive_extend(self, s: int) -> int | None:
-        if s == 0:
-            return 0
-        v = self.read_bits(s)
-        if v is None:
-            return None
-        return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-def _idct_block(coef: list[float]) -> list[int]:
-    """2-D 8×8 inverse DCT + level shift, separable (rows then columns)."""
-    tmp = [0.0] * 64
-    for y in range(8):
-        row = coef[y * 8 : y * 8 + 8]
-        base = y * 8
-        for x in range(8):
-            acc = 0.0
-            for u in range(8):
-                c = row[u]
-                if c:
-                    acc += c * _COS[u][x]
-            tmp[base + x] = acc
-    out = [0] * 64
-    for x in range(8):
-        col = [tmp[y * 8 + x] for y in range(8)]
-        for y in range(8):
-            acc = 0.0
-            for v in range(8):
-                c = col[v]
-                if c:
-                    acc += c * _COS[v][y]
-            px = int(round(acc + 128.0))
-            out[y * 8 + x] = 0 if px < 0 else (255 if px > 255 else px)
-    return out
-
-
-def _parse_dqt(data: bytes, quant: dict) -> bool:
-    """DQT segment → quant tables (zigzag order); False on truncation."""
-    i = 0
-    while i < len(data):
-        pq, tq = data[i] >> 4, data[i] & 15
-        i += 1
-        step = 64 if pq == 0 else 128
-        if i + step > len(data):
-            return False
-        if pq == 0:
-            quant[tq] = list(data[i : i + 64])
-        else:
-            quant[tq] = [
-                int.from_bytes(data[i + 2 * j : i + 2 * j + 2], "big")
-                for j in range(64)
-            ]
-        i += step
-    return True
-
-
-def _parse_dht(data: bytes, huff_dc: dict, huff_ac: dict) -> bool:
-    """DHT segment → canonical tables; False on truncation."""
-    i = 0
-    while i + 17 <= len(data):
-        tc, th = data[i] >> 4, data[i] & 15
-        bits = list(data[i + 1 : i + 17])
-        nv = sum(bits)
-        vals = data[i + 17 : i + 17 + nv]
-        if len(vals) < nv:
-            return False
-        (huff_dc if tc == 0 else huff_ac)[th] = _huff_table(bits, vals)
-        i += 17 + nv
-    return True
-
-
-def decode_jpeg(raw: bytes) -> tuple[int, int, bytes] | None:
-    """Baseline sequential (SOF0/1) or progressive (SOF2) JPEG →
-    (w, h, rgb); None outside the envelope."""
-    if not raw.startswith(b"\xff\xd8"):
-        return None
-    quant: dict[int, list[int]] = {}
-    huff_dc: dict[int, dict] = {}
-    huff_ac: dict[int, dict] = {}
-    frame = None  # (w, h, [(cid, h, v, tq), ...])
-    restart_interval = 0
-    scan = None  # ([(comp_idx, td, ta), ...], data_start)
-    pos = 2
-    n = len(raw)
-    while pos + 2 <= n:
-        if raw[pos] != 0xFF:
-            return None
-        marker = raw[pos + 1]
-        pos += 2
-        if marker == 0xD9 or marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            continue
-        if pos + 2 > n:
-            return None
-        ln = int.from_bytes(raw[pos : pos + 2], "big")
-        data = raw[pos + 2 : pos + ln]
-        if marker == 0xDB:  # DQT
-            if not _parse_dqt(data, quant):
-                return None
-        elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 sequential, SOF2 progressive
-            if len(data) < 6 or data[0] != 8:
-                return None
-            h = int.from_bytes(data[1:3], "big")
-            w = int.from_bytes(data[3:5], "big")
-            nc = data[5]
-            if len(data) < 6 + 3 * nc:
-                return None
-            comps = []
-            for c in range(nc):
-                cid, hv, tq = data[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, hv >> 4, hv & 15, tq))
-            frame = (w, h, comps)
-            if marker == 0xC2:
-                # progressive: multi-scan driver owns the rest of the stream
-                return _decode_jpeg_progressive(
-                    raw, pos + ln, frame, quant, huff_dc, huff_ac, restart_interval
-                )
-        elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):
-            return None  # arithmetic / lossless / hierarchical
-        elif marker == 0xC4:  # DHT
-            if not _parse_dht(data, huff_dc, huff_ac):
-                return None
-        elif marker == 0xDD:  # DRI
-            if len(data) < 2:
-                return None
-            restart_interval = int.from_bytes(data[0:2], "big")
-        elif marker == 0xDA:  # SOS
-            if frame is None or not data or len(data) < 1 + 2 * data[0]:
-                return None
-            ns = data[0]
-            sel = []
-            cids = [c[0] for c in frame[2]]
-            for c in range(ns):
-                cs, tdta = data[1 + 2 * c], data[2 + 2 * c]
-                if cs not in cids:
-                    return None
-                sel.append((cids.index(cs), tdta >> 4, tdta & 15))
-            scan = (sel, pos + ln)
-            break
-        pos += ln
-    if frame is None or scan is None:
-        return None
-    w, h, comps = frame
-    if w <= 0 or h <= 0 or len(comps) not in (1, 3):
-        return None
-    sel, data_start = scan
-    if len(sel) != len(comps):
-        return None  # non-interleaved multi-scan not supported
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax < 1 or vmax < 1:
-        return None
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    # per-component sample planes (MCU-padded)
-    planes = []
-    for _, ch, cv, _ in comps:
-        planes.append(bytearray(mcux * ch * 8 * mcuy * cv * 8))
-    try:
-        dq = [quant[c[3]] for c in comps]
-        tables = [(huff_dc[td], huff_ac[ta]) for _, td, ta in sel]
-    except KeyError:
-        return None
-    rd = _BitReader(raw, data_start)
-    pred = [0] * len(comps)
-    coef = [0.0] * 64
-    mcu_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                if not rd.restart():
-                    return None
-                pred = [0] * len(comps)
-            mcu_count += 1
-            for ci, (comp, (dc_t, ac_t)) in enumerate(zip(comps, tables)):
-                _, ch, cv, _ = comp
-                q = dq[ci]
-                plane = planes[ci]
-                stride = mcux * ch * 8
-                for by in range(cv):
-                    for bx in range(ch):
-                        for i in range(64):
-                            coef[i] = 0.0
-                        t = rd.decode_huff(dc_t)
-                        if t is None or t > 11:
-                            return None
-                        diff = rd.receive_extend(t)
-                        if diff is None:
-                            return None
-                        pred[ci] += diff
-                        coef[0] = pred[ci] * q[0]
-                        k = 1
-                        while k < 64:
-                            rs = rd.decode_huff(ac_t)
-                            if rs is None:
-                                return None
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                return None
-                            v = rd.receive_extend(s)
-                            if v is None:
-                                return None
-                            coef[_ZIGZAG[k]] = v * q[k]
-                            k += 1
-                        block = _idct_block(coef)
-                        ox = (mx * ch + bx) * 8
-                        oy = (my * cv + by) * 8
-                        for yy in range(8):
-                            row_off = (oy + yy) * stride + ox
-                            plane[row_off : row_off + 8] = bytes(
-                                block[yy * 8 : yy * 8 + 8]
-                            )
-    return w, h, _assemble_rgb(w, h, comps, planes, mcux, hmax, vmax)
-
-
-def _decode_jpeg_progressive(
-    raw: bytes,
-    pos: int,
-    frame: tuple,
-    quant: dict,
-    huff_dc: dict,
-    huff_ac: dict,
-    restart_interval: int,
-) -> tuple[int, int, bytes] | None:
-    """Progressive JPEG (SOF2, T.81 Annex G): accumulate dequantized-later
-    coefficients across spectral-selection / successive-approximation
-    scans into per-component full-image buffers, then IDCT once. Shares
-    the Huffman/bit machinery and plane assembly with the sequential
-    path. ``pos`` points just past the SOF2 segment."""
-    w, h, comps = frame
-    if w <= 0 or h <= 0 or len(comps) not in (1, 3):
-        return None
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax < 1 or vmax < 1:
-        return None
-    mcux = (w + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (h + 8 * vmax - 1) // (8 * vmax)
-    n = len(raw)
-    balloc, nominal, coefs = [], [], []
-    for _, ch, cv, _ in comps:
-        bw_a, bh_a = mcux * ch, mcuy * cv
-        balloc.append((bw_a, bh_a))
-        cw = (w * ch + hmax - 1) // hmax
-        chh = (h * cv + vmax - 1) // vmax
-        nominal.append(((cw + 7) // 8, (chh + 7) // 8))
-        coefs.append([0] * (bw_a * bh_a * 64))  # zigzag order per block
-    got_scan = False
-    cids = [c[0] for c in comps]
-    while pos + 2 <= n:
-        if raw[pos] != 0xFF:
-            return None
-        marker = raw[pos + 1]
-        pos += 2
-        if marker == 0xD9:
-            break
-        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
-            continue
-        if pos + 2 > n:
-            return None
-        ln = int.from_bytes(raw[pos : pos + 2], "big")
-        data = raw[pos + 2 : pos + ln]
-        if marker == 0xC4:  # DHT (tables may be redefined between scans)
-            if not _parse_dht(data, huff_dc, huff_ac):
-                return None
-        elif marker == 0xDB:  # DQT
-            if not _parse_dqt(data, quant):
-                return None
-        elif marker == 0xDD:
-            if len(data) < 2:
-                return None
-            restart_interval = int.from_bytes(data[0:2], "big")
-        elif marker == 0xDA:  # one scan
-            if not data:
-                return None
-            ns = data[0]
-            if len(data) < 4 + 2 * ns:
-                return None
-            sel = []
-            for c in range(ns):
-                cs, tdta = data[1 + 2 * c], data[2 + 2 * c]
-                if cs not in cids:
-                    return None
-                sel.append((cids.index(cs), tdta >> 4, tdta & 15))
-            ss, se = data[1 + 2 * ns], data[2 + 2 * ns]
-            ah, al = data[3 + 2 * ns] >> 4, data[3 + 2 * ns] & 15
-            pos = _progressive_scan(
-                raw, pos + ln, sel, ss, se, ah, al, comps, coefs, balloc,
-                nominal, huff_dc, huff_ac, restart_interval, mcux, mcuy,
-            )
-            if pos is None:
-                return None
-            got_scan = True
-            continue
-        pos += ln
-    if not got_scan:
-        return None
-    try:
-        dq = [quant[c[3]] for c in comps]
-    except KeyError:
-        return None
-    planes = []
-    coef_nat = [0.0] * 64
-    for ci, (_, ch, cv, _) in enumerate(comps):
-        bw_a, bh_a = balloc[ci]
-        stride = bw_a * 8
-        plane = bytearray(stride * bh_a * 8)
-        q = dq[ci]
-        carr = coefs[ci]
-        for by in range(bh_a):
-            for bx in range(bw_a):
-                base = (by * bw_a + bx) * 64
-                for i in range(64):
-                    coef_nat[i] = 0.0
-                for k in range(64):
-                    c = carr[base + k]
-                    if c:
-                        coef_nat[_ZIGZAG[k]] = c * q[k]
-                block = _idct_block(coef_nat)
-                ox, oy = bx * 8, by * 8
-                for yy in range(8):
-                    ro = (oy + yy) * stride + ox
-                    plane[ro : ro + 8] = bytes(block[yy * 8 : yy * 8 + 8])
-        planes.append(plane)
-    return w, h, _assemble_rgb(w, h, comps, planes, mcux, hmax, vmax)
-
-
-def _progressive_scan(
-    raw, data_start, sel, ss, se, ah, al, comps, coefs, balloc, nominal,
-    huff_dc, huff_ac, restart_interval, mcux, mcuy,
-):
-    """Decode one progressive scan into the coefficient buffers; returns
-    the position of the next marker's 0xFF, or None on error."""
-    rd = _BitReader(raw, data_start)
-    n = len(raw)
-    # restart units: list of blocks per unit; a block is (arr, base, si)
-    units = []
-    if ss == 0:  # DC scan
-        if se != 0 or ah > 13 or al > 13:
-            return None
-        if len(sel) > 1:  # interleaved over the selected components
-            for my in range(mcuy):
-                for mx in range(mcux):
-                    unit = []
-                    for si, (ci, _, _) in enumerate(sel):
-                        _, ch, cv, _ = comps[ci]
-                        bw_a, _ = balloc[ci]
-                        for by_ in range(cv):
-                            for bx_ in range(ch):
-                                bidx = (my * cv + by_) * bw_a + (mx * ch + bx_)
-                                unit.append((coefs[ci], bidx * 64, si))
-                    units.append(unit)
-        else:
-            ci = sel[0][0]
-            bw_a, _ = balloc[ci]
-            bwn, bhn = nominal[ci]
-            for by in range(bhn):
-                for bx in range(bwn):
-                    units.append([(coefs[ci], (by * bw_a + bx) * 64, 0)])
-        if ah == 0:
-            try:
-                dcts = [huff_dc[td] for _, td, _ in sel]
-            except KeyError:
-                return None
-    else:  # AC scan: single component, non-interleaved
-        if len(sel) != 1 or se < ss or se > 63 or ah > 13 or al > 13:
-            return None
-        ci = sel[0][0]
-        bw_a, _ = balloc[ci]
-        bwn, bhn = nominal[ci]
-        for by in range(bhn):
-            for bx in range(bwn):
-                units.append([(coefs[ci], (by * bw_a + bx) * 64, 0)])
-        try:
-            act = huff_ac[sel[0][2]]
-        except KeyError:
-            return None
-    pred = [0] * len(sel)
-    eobrun = 0
-    count = 0
-    p1 = 1 << al
-    for unit in units:
-        if restart_interval and count and count % restart_interval == 0:
-            if not rd.restart():
-                return None
-            pred = [0] * len(sel)
-            eobrun = 0
-        count += 1
-        for arr, base, si in unit:
-            if ss == 0 and ah == 0:  # DC first
-                t = rd.decode_huff(dcts[si])
-                if t is None or t > 11:
-                    return None
-                diff = rd.receive_extend(t)
-                if diff is None:
-                    return None
-                pred[si] += diff
-                arr[base] = pred[si] << al
-            elif ss == 0:  # DC refine: one appended bit per block
-                b = rd.read_bit()
-                if b is None:
-                    return None
-                if b:
-                    arr[base] |= p1
-            elif ah == 0:  # AC first
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    sym = rd.decode_huff(act)
-                    if sym is None:
-                        return None
-                    r, s = sym >> 4, sym & 15
-                    if s == 0:
-                        if r == 15:
-                            k += 16
-                            continue
-                        eobrun = (1 << r) - 1  # blocks AFTER this one
-                        if r:
-                            eb = rd.read_bits(r)
-                            if eb is None:
-                                return None
-                            eobrun += eb
-                        break
-                    k += r
-                    if k > se:
-                        return None
-                    v = rd.receive_extend(s)
-                    if v is None:
-                        return None
-                    arr[base + k] = v << al
-                    k += 1
-            else:  # AC refine (T.81 G.1.2.3)
-                k = ss
-                if eobrun == 0:
-                    while k <= se:
-                        sym = rd.decode_huff(act)
-                        if sym is None:
-                            return None
-                        r, s = sym >> 4, sym & 15
-                        val = 0
-                        if s == 0:
-                            if r < 15:
-                                eobrun = 1 << r  # INCLUDES this block
-                                if r:
-                                    eb = rd.read_bits(r)
-                                    if eb is None:
-                                        return None
-                                    eobrun += eb
-                                break
-                            # r == 15: run of 16 zero-history positions
-                        elif s == 1:
-                            b = rd.read_bit()
-                            if b is None:
-                                return None
-                            val = p1 if b else -p1
-                        else:
-                            return None
-                        while k <= se:
-                            c = arr[base + k]
-                            if c != 0:
-                                b = rd.read_bit()
-                                if b is None:
-                                    return None
-                                if b and (c & p1) == 0:
-                                    arr[base + k] = c + (p1 if c > 0 else -p1)
-                            else:
-                                if r == 0:
-                                    break
-                                r -= 1
-                            k += 1
-                        if val and k <= se:
-                            arr[base + k] = val
-                        k += 1
-                if eobrun > 0:
-                    while k <= se:  # correction bits through end of band
-                        c = arr[base + k]
-                        if c != 0:
-                            b = rd.read_bit()
-                            if b is None:
-                                return None
-                            if b and (c & p1) == 0:
-                                arr[base + k] = c + (p1 if c > 0 else -p1)
-                        k += 1
-                    eobrun -= 1
-    # skip to the next marker (pad bits, stuffing, stray RSTs)
-    p = rd.pos
-    while p + 1 < n:
-        if raw[p] == 0xFF:
-            nb = raw[p + 1]
-            if nb == 0x00 or 0xD0 <= nb <= 0xD7:
-                p += 2
-                continue
-            return p
-        p += 1
-    return None
-
-
-def _assemble_rgb(
-    w: int, h: int, comps: list, planes: list, mcux: int, hmax: int, vmax: int
-) -> bytes:
-    """Sample planes → packed RGB with chroma upsampling + color convert
-    (shared by the sequential and progressive paths)."""
-    rgb = bytearray(w * h * 3)
-    if len(comps) == 1:
-        stride = mcux * comps[0][1] * 8
-        plane = planes[0]
-        for y in range(h):
-            base = y * stride
-            o = y * w * 3
-            for x in range(w):
-                g = plane[base + x]
-                rgb[o] = rgb[o + 1] = rgb[o + 2] = g
-                o += 3
-    else:
-        strides = [mcux * c[1] * 8 for c in comps]
-        for y in range(h):
-            o = y * w * 3
-            # slice exactly one source row per component — an open-ended
-            # tail slice here copies the rest of the plane EVERY row,
-            # O(W·H²) bytes on large frames
-            rows = []
-            for ci in range(3):
-                rb = (y * comps[ci][2] // vmax) * strides[ci]
-                rows.append(planes[ci][rb : rb + strides[ci]])
-            for x in range(w):
-                yy = rows[0][x * comps[0][1] // hmax]
-                cb = rows[1][x * comps[1][1] // hmax] - 128
-                cr = rows[2][x * comps[2][1] // hmax] - 128
-                r = int(round(yy + 1.402 * cr))
-                g = int(round(yy - 0.344136 * cb - 0.714136 * cr))
-                b = int(round(yy + 1.772 * cb))
-                rgb[o] = 0 if r < 0 else (255 if r > 255 else r)
-                rgb[o + 1] = 0 if g < 0 else (255 if g > 255 else g)
-                rgb[o + 2] = 0 if b < 0 else (255 if b > 255 else b)
-                o += 3
-    return bytes(rgb)
-
-
 def decode_image_py(raw: bytes) -> tuple[int, int, bytes] | None:
     """Magic-byte dispatch over the pure-stdlib decoders.
 
@@ -829,7 +176,7 @@ def decode_image_py(raw: bytes) -> tuple[int, int, bytes] | None:
     decoders bounds-check their envelopes, but a reference parser over
     adversarial corpus bytes is exactly where an unforeseen IndexError
     escapes."""
-    for dec in (decode_png, decode_jpeg, decode_ppm, decode_bmp, decode_gif):
+    for dec in (decode_png, decode_ppm, decode_bmp):
         try:
             out = dec(raw)
         except Exception:
@@ -1210,140 +557,3 @@ def parse_mkv(raw: bytes) -> dict | None:
         "duration_ms": int(min(max(ms, -(2**63)), 2**63 - 1024)),
         "n_tracks": n_tracks,
     }
-
-
-def _lzw_decode(data: bytes, minw: int, max_pixels: int) -> bytes | None:
-    """GIF-variant LZW (LSB-first packing, CLEAR/END codes, growing code
-    width capped at 12 bits)."""
-    clear = 1 << minw
-    end = clear + 1
-    table: dict[int, bytes] = {}
-    width = minw + 1
-    next_code = end + 1
-    out = bytearray()
-    prev: bytes | None = None
-    acc = nbits = pos = 0
-    while True:
-        while nbits < width:
-            if pos >= len(data):
-                return bytes(out)  # tolerate a missing END code
-            acc |= data[pos] << nbits
-            nbits += 8
-            pos += 1
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = {i: bytes([i]) for i in range(clear)}
-            width = minw + 1
-            next_code = end + 1
-            prev = None
-            continue
-        if code == end:
-            return bytes(out)
-        if prev is None:
-            if code >= clear:
-                return None
-            entry = bytes([code])
-            if not table:
-                table = {i: bytes([i]) for i in range(clear)}
-        else:
-            if code in table:
-                entry = table[code]
-                add = prev + entry[:1]
-            elif code == next_code and next_code < 4096:
-                entry = prev + prev[:1]
-                add = entry
-            else:
-                return None
-            if next_code < 4096:  # table freezes at the 12-bit cap
-                table[next_code] = add
-                next_code += 1
-                if next_code == (1 << width) and width < 12:
-                    width += 1
-        out += entry
-        prev = entry
-        if len(out) >= max_pixels:
-            return bytes(out)
-
-
-_GIF_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def decode_gif(raw: bytes) -> tuple[int, int, bytes] | None:
-    """GIF87a/89a first frame → (w, h, rgb): logical-screen palette, LZW
-    pixel decode, optional interlace. Envelope: the first image must
-    cover the full canvas (the single-frame corpus case); animation
-    composition falls through to the next decoder in the chain."""
-    if raw[:6] not in (b"GIF87a", b"GIF89a") or len(raw) < 13:
-        return None
-    w, h = struct.unpack_from("<HH", raw, 6)
-    if w <= 0 or h <= 0:
-        return None
-    packed = raw[10]
-    pos = 13
-    pal = b""
-    if packed >> 7:
-        size = 3 * (2 << (packed & 7))
-        pal = raw[pos : pos + size]
-        if len(pal) < size:
-            return None
-        pos += size
-    n = len(raw)
-    while pos < n:
-        b = raw[pos]
-        if b == 0x21:  # extension: label then sub-blocks
-            pos += 2
-            while pos < n and raw[pos] != 0:
-                pos += 1 + raw[pos]
-            pos += 1
-        elif b == 0x2C:  # image descriptor
-            if pos + 10 > n:
-                return None
-            left, top, iw, ih = struct.unpack_from("<HHHH", raw, pos + 1)
-            ipacked = raw[pos + 9]
-            pos += 10
-            if ipacked >> 7:  # local color table wins
-                size = 3 * (2 << (ipacked & 7))
-                pal = raw[pos : pos + size]
-                if len(pal) < size:
-                    return None
-                pos += size
-            if (left, top, iw, ih) != (0, 0, w, h) or not pal or pos >= n:
-                return None
-            minw = raw[pos]
-            pos += 1
-            # GIF89a envelope: LZW minimum code size is 2..8 (color depth
-            # caps at 8 bits); 9-11 would make _lzw_decode's base table
-            # build bytes([i]) with i>=256 and raise instead of None.
-            if not 2 <= minw <= 8:
-                return None
-            data = bytearray()
-            while pos < n and raw[pos] != 0:
-                ln = raw[pos]
-                data += raw[pos + 1 : pos + 1 + ln]
-                pos += 1 + ln
-            idx = _lzw_decode(bytes(data), minw, w * h)
-            if idx is None or len(idx) < w * h:
-                return None
-            if (ipacked >> 6) & 1:  # deinterlace
-                rows = []
-                for first, step in _GIF_PASSES:
-                    rows += list(range(first, h, step))
-                plane = bytearray(w * h)
-                for src, dst in enumerate(rows):
-                    plane[dst * w : (dst + 1) * w] = idx[src * w : (src + 1) * w]
-                idx = bytes(plane)
-            npal = len(pal) // 3
-            rgb = bytearray(w * h * 3)
-            for i in range(w * h):
-                c = idx[i]
-                if c >= npal:
-                    return None
-                rgb[3 * i : 3 * i + 3] = pal[3 * c : 3 * c + 3]
-            return w, h, bytes(rgb)
-        elif b == 0x3B:
-            return None  # trailer before any image
-        else:
-            return None
-    return None

@@ -70,7 +70,6 @@ def load_all() -> None:
         grouped,
         joins,
         matrix,
-        multimodal_q,
         relational,
         scalars,
         similarity,

@@ -31,6 +31,8 @@ CORRECTNESS_rN.json shape ({name: {rows_match, schema_match, hash_match,
 spark_rows, oracle_rows, err}}), nested under the sf dir's basename so
 several scale factors merge into one auditable artifact (SWEEP_rN.json).
 Existing entries for other SFs / other queries in OUT.json are preserved.
+With ``--sample`` it also writes ``"_meta": {"round": ROUND, "k": K}``, the
+window declaration tests/test_artifacts.py recomputes the slice from.
 """
 
 from __future__ import annotations
@@ -360,9 +362,13 @@ def main() -> int:
                 merged = json.load(f)
         key = os.path.basename(sf_dir.rstrip("/"))
         merged.setdefault(key, {}).update(records)
+        if sample is not None:
+            rnd, k = sample
+            merged["_meta"] = {"round": rnd, "k": k}
         with open(json_out, "w") as f:
             json.dump(merged, f, indent=1, sort_keys=True)
-        print(f"wrote {sum(len(v) for v in merged.values())} records to {json_out}")
+        n = sum(len(v) for sf, v in merged.items() if sf != "_meta")
+        print(f"wrote {n} records to {json_out}")
     return 1 if n_fail else 0
 
 

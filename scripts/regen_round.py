@@ -302,12 +302,6 @@ def step_slice(rnd: int, dry: bool) -> None:
     out = f"SLICE_r{rnd}.json"
     _run([PY, "scripts/check_oracle.py", "--json", out,
           "--sample", f"{rnd}:60", "/root/testdata/sf0.01"], dry)
-    print(
-        "NOTE: add the _meta block by hand (round/k/scheme/"
-        "overlap_with_driver_50/new_vs_driver_50/cumulative union, plus "
-        "extra_sections for any closure passes) — see SLICE_r13.json. "
-        "test_slice_artifact_matches_declared_window_and_is_green gates it."
-    )
 
 
 def step_plans(rnd: int, dry: bool) -> None:

@@ -189,18 +189,25 @@ def test_gene_load_long_and_wide_view(project):
 
 
 def test_gene_load_sample_absent_from_counts_raises(spark, lake, catalog_df):
-    """A catalog sample missing from the gene_sums header makes load() itself
-    raise, so no counts frame with a silently dropped sample is returned."""
-    extra = spark.createDataFrame([("r9", "s9", "st2", "P2", "human")], catalog_df.columns)
-    proj = Project(
-        spark,
-        metadata=catalog_df.filter(F.col("project") == "P2").unionByName(extra),
-        lake_dir=lake,
-        dbase="sra",
-        annotation=Annotation.GENCODE_V29,
-    )
-    with pytest.raises(KeyError, match=r"P2.*s9"):
-        proj.load(Dtype.GENE)
+    """A catalog sample missing from its project's gene_sums header makes
+    load() itself raise, so no counts frame with a silently dropped sample
+    is returned. Two inputs: a sample absent from every header, and s1
+    repeated under a conflicting project whose header lacks it."""
+    cases = [
+        (["P2"], ("r9", "s9", "st2", "P2", "human"), r"P2.*s9"),
+        (["P1", "P2"], ("r1", "s1", "st1", "P2", "human"), r"P2.*\['s1'\]"),
+    ]
+    for projects, extra_row, match in cases:
+        extra = spark.createDataFrame([extra_row], catalog_df.columns)
+        proj = Project(
+            spark,
+            metadata=catalog_df.filter(F.col("project").isin(projects)).unionByName(extra),
+            lake_dir=lake,
+            dbase="sra",
+            annotation=Annotation.GENCODE_V29,
+        )
+        with pytest.raises(KeyError, match=match):
+            proj.load(Dtype.GENE)
 
 
 @pytest.fixture(scope="module")

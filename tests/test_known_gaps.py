@@ -13,10 +13,10 @@ from pyspark.sql import functions as F
 @pytest.mark.xfail(
     reason="PERMANENT BY DECISION (round-14, VERDICT r13 #7): "
     "compressed-audio PCM decode stays library-gated. The decode chain "
-    "REALLY decodes PNG/baseline+progressive-JPEG/PPM/BMP pixels and WAV "
+    "REALLY decodes PNG/PPM/BMP pixels and WAV "
     "PCM via the pure-stdlib codecs in multimodal/codecs.py, plus "
     "no-decode mp3/FLAC metadata (executing tests in "
-    "test_multimodal_streaming + test_jpeg_codec); a pure-stdlib mp3/FLAC "
+    "test_multimodal_streaming); a pure-stdlib mp3/FLAC "
     "PCM decoder is disproportionate engineering for a surface no driver "
     "testdata exercises (documents/embeddings carry no audio payloads), "
     "so this xfail is the permanent record: if a DSP library (PIL/pydub/"

@@ -1,24 +1,14 @@
-"""Multimodal binary plumbing + Structured Streaming parity tests."""
+"""Multimodal binary plumbing tests."""
 
 from __future__ import annotations
 
-import json
-from datetime import datetime
-
 import pytest
-from pyspark.sql import functions as F
 
 from pyrecount_spark.multimodal.binary import (
     extract_image_features,
     read_binary_files,
     sample_frames,
     with_media_type,
-)
-from pyrecount_spark.streaming.pipeline import (
-    read_event_stream,
-    run_stream_to_memory,
-    streaming_sessionize,
-    streaming_tumbling_counts,
 )
 
 
@@ -55,47 +45,6 @@ def test_frame_sampling_shape(spark, media_dir):
     frames = sample_frames(df, every_n_bytes=8, max_frames=4).collect()
     assert [f.frame_idx for f in frames] == [0, 1, 2]  # 21 bytes / 8 -> 3 markers
     assert [f.byte_offset for f in frames] == [0, 8, 16]
-
-
-@pytest.fixture(scope="module")
-def stream_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("stream")
-    rows = [
-        {"event_id": 1, "ts": "2024-01-01T10:00:00.000Z", "user_id": 1, "event_type": "click"},
-        {"event_id": 2, "ts": "2024-01-01T10:10:00.000Z", "user_id": 1, "event_type": "click"},
-        {"event_id": 3, "ts": "2024-01-01T12:30:00.000Z", "user_id": 1, "event_type": "view"},
-        {"event_id": 4, "ts": "2024-01-01T10:05:00.000Z", "user_id": 2, "event_type": "view"},
-    ]
-    for i, r in enumerate(rows):
-        (d / f"part-{i}.json").write_text(json.dumps(r) + "\n")
-    return str(d)
-
-
-def test_streaming_tumbling_counts(spark, stream_dir):
-    stream = read_event_stream(spark, stream_dir, max_files_per_trigger=2)
-    assert stream.isStreaming
-    run_stream_to_memory(streaming_tumbling_counts(stream), "tumbling_test")
-    got = {
-        (str(r.window_start), r.event_type): r.n_events
-        for r in spark.sql("select * from tumbling_test").collect()
-    }
-    assert got[("2024-01-01 10:00:00", "click")] == 2
-    assert got[("2024-01-01 10:00:00", "view")] == 1
-    assert got[("2024-01-01 12:00:00", "view")] == 1
-
-
-def test_streaming_sessionize_matches_batch_gap_semantics(spark, stream_dir):
-    # one micro-batch: a complete-mode snapshot of partially-merged session
-    # state is not deterministic across batch boundaries (see docstring)
-    stream = read_event_stream(spark, stream_dir, max_files_per_trigger=10)
-    run_stream_to_memory(streaming_sessionize(stream, gap="30 minutes"), "session_test")
-    rows = spark.sql("select * from session_test").collect()
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r.user_id, []).append(r.n_events)
-    # user 1: 2h gap splits into sessions of 2 and 1 (same as batch test)
-    assert sorted(by_user[1]) == [1, 2]
-    assert by_user[2] == [1]
 
 
 def test_resize_images_contract(spark, tmp_path):
@@ -548,23 +497,6 @@ def test_container_numeric_envelope_clamps():
     assert parse_mkv(raw) is None
 
 
-def test_gif_lzw_min_code_size_envelope():
-    """LZW minimum code size 9-11 is outside the GIF envelope (2..8): the
-    descriptor check must return a clean None, not survive only via the
-    decode_image_py exception backstop."""
-    from pyrecount_spark.multimodal.codecs import decode_gif
-
-    idx = bytes([0, 1, 2, 3] * 4)
-    pal = bytes(range(12))
-    raw = bytearray(_gif_bytes(4, 4, idx, pal))
-    # patch the LZW minimum-code-size byte (first byte after the 10-byte
-    # image descriptor, which follows the 13-byte header + 12-byte GCT)
-    pos = raw.index(0x2C, 13)
-    assert raw[pos + 10] in range(2, 9)
-    raw[pos + 10] = 9
-    assert decode_gif(bytes(raw)) is None
-
-
 def test_video_metadata_spark_path(spark):
     """extract_video_metadata surfaces REAL container metadata through the
     full mapInPandas path; non-container bytes get the deterministic stub."""
@@ -671,136 +603,9 @@ def test_container_chain_spark_paths(spark):
     assert vrow.n_tracks == 1
 
 
-def _lzw_encode(indices: bytes, minw: int) -> bytes:
-    """Greedy GIF-LZW encoder (test-side twin of codecs._lzw_decode)."""
-    clear, end = 1 << minw, (1 << minw) + 1
-    out = bytearray()
-    acc = nbits = 0
-    width = minw + 1
-
-    def emit(code):
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = end + 1
-    emit(clear)
-    cur = b""
-    for i in indices:
-        nxt = cur + bytes([i])
-        if nxt in table:
-            cur = nxt
-            continue
-        emit(table[cur])
-        if next_code < 4096:  # table freezes at the 12-bit cap
-            table[nxt] = next_code
-            next_code += 1
-            # the decoder's table runs ONE entry behind (it adds on
-            # receive, starting from the second data code), so the width
-            # bump lands one code later than the encoder's table size
-            # suggests
-            if next_code == (1 << width) + 1 and width < 12:
-                width += 1
-        cur = bytes([i])
-    if cur:
-        emit(table[cur])
-    emit(end)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-def _gif_bytes(w: int, h: int, indices: bytes, palette: bytes,
-               interlace: bool = False, minw: int = 2) -> bytes:
-    import struct as _s
-
-    npal = len(palette) // 3
-    bits = max((npal - 1).bit_length(), 1)
-    pal = palette + b"\x00" * (3 * ((2 << (bits - 1)) - npal))
-    if interlace:
-        order = []
-        for first, step in ((0, 8), (4, 8), (2, 4), (1, 2)):
-            order += list(range(first, h, step))
-        indices = b"".join(indices[r * w : (r + 1) * w] for r in order)
-    lzw = _lzw_encode(indices, minw)
-    blocks = b"".join(
-        bytes([min(255, len(lzw) - i)]) + lzw[i : i + 255]
-        for i in range(0, len(lzw), 255)
-    )
-    return (b"GIF89a" + _s.pack("<HH", w, h)
-            + bytes([0x80 | (bits - 1), 0, 0]) + pal
-            + b"\x21\xfe\x04test\x00"  # comment extension exercises the skip
-            + b"\x2c" + _s.pack("<HHHH", 0, 0, w, h)
-            + bytes([0x40 if interlace else 0])
-            + bytes([minw]) + blocks + b"\x00" + b"\x3b")
-
-
-def test_gif_decode_roundtrip():
-    from pyrecount_spark.multimodal.codecs import decode_gif, decode_image_py
-
-    pal = bytes([255, 0, 0, 0, 255, 0, 0, 0, 255, 255, 255, 0])
-    # 6x10: pattern with runs (exercises dict growth) and all 4 colors
-    idx = bytes((x + y) % 4 for y in range(10) for x in range(6))
-    raw = _gif_bytes(6, 10, idx, pal)
-    out = decode_gif(raw)
-    assert out is not None
-    w, h, rgb = out
-    assert (w, h) == (6, 10)
-    for i, c in enumerate(idx):
-        assert rgb[3 * i : 3 * i + 3] == pal[3 * c : 3 * c + 3], i
-    # interlaced storage decodes to the same image
-    assert decode_gif(_gif_bytes(6, 10, idx, pal, interlace=True)) == out
-    # dispatch picks GIF up by magic
-    assert decode_image_py(raw) == out
-    # a bigger random-ish frame stresses width growth past 9 bits
-    big = bytes((i * 31 + (i >> 3)) % 256 for i in range(64 * 64))
-    bigpal = bytes(range(256)) * 3
-    out2 = decode_gif(_gif_bytes(64, 64, big, bigpal[: 256 * 3], minw=8))
-    assert out2 is not None and out2[0] == 64
-
-
-def test_gif_rejections():
-    from pyrecount_spark.multimodal.codecs import decode_gif
-
-    pal = bytes([0, 0, 0, 255, 255, 255])
-    idx = bytes([0, 1] * 2)
-    ok = _gif_bytes(2, 2, idx, pal)
-    assert decode_gif(ok) is not None
-    assert decode_gif(b"GIF89a" + b"\x00" * 4) is None  # truncated
-    assert decode_gif(ok[:20]) is None
-    # partial-canvas frame (animation composition) falls through
-    import struct as _s
-
-    partial = ok.replace(
-        b"\x2c" + _s.pack("<HHHH", 0, 0, 2, 2),
-        b"\x2c" + _s.pack("<HHHH", 1, 0, 1, 2),
-    )
-    assert decode_gif(partial) is None
-
-
-def test_lzw_roundtrip_fuzz():
-    """Deterministic fuzz incl. dict growth past 9 bits and the 4096-entry
-    table freeze at the 12-bit cap."""
-    import random
-
-    from pyrecount_spark.multimodal.codecs import _lzw_decode
-
-    for trial in range(12):
-        rng = random.Random(trial)
-        minw = rng.choice([2, 3, 4, 8])
-        n = rng.randint(1, 3000) if trial < 11 else 25000  # cap-crosser
-        idx = bytes(rng.randint(0, (1 << minw) - 1) for _ in range(n))
-        assert _lzw_decode(_lzw_encode(idx, minw), minw, n) == idx, (trial, minw)
-
-
 def test_malformed_media_survives_spark_task(spark):
-    """The payloads that crashed decode_jpeg pre-fix must ride the full
-    mapInPandas path to deterministic fake features, not kill the task."""
+    """Malformed JPEG/GIF/PNG payloads must ride the full mapInPandas path
+    to deterministic fake features, not kill the task."""
     from pyrecount_spark.multimodal.binary import extract_image_features
 
     rows = [

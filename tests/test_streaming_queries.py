@@ -14,10 +14,15 @@ timestamps. These tests pin both layers:
 - one availableNow smoke per registered streaming query compares row count
   to its batch twin computed in Spark (same predicate logic, batch read),
   so semantic breakage can't hide behind "the stream ran fine".
+
+The last two tests drive ``streaming.pipeline.read_event_stream`` over a
+multi-file JSON source with ``maxFilesPerTrigger`` (tumbling counts and
+session-gap semantics).
 """
 
 from __future__ import annotations
 
+import json
 import sys
 from pathlib import Path
 
@@ -26,6 +31,12 @@ from pyspark.sql import functions as F
 
 from pyrecount_spark.plans import ORACLES, QUERIES, load_all, read_table
 from pyrecount_spark.plans.streaming_q import _read_events_stream
+from pyrecount_spark.streaming.pipeline import (
+    read_event_stream,
+    run_stream_to_memory,
+    streaming_sessionize,
+    streaming_tumbling_counts,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -364,3 +375,44 @@ def test_late_family_degeneration_and_drop_pin(spark, tmp_path):
         )
     )
     assert got_late == want_late, "late-corpus result != on-time DISTINCT"
+
+
+@pytest.fixture(scope="module")
+def stream_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("stream")
+    rows = [
+        {"event_id": 1, "ts": "2024-01-01T10:00:00.000Z", "user_id": 1, "event_type": "click"},
+        {"event_id": 2, "ts": "2024-01-01T10:10:00.000Z", "user_id": 1, "event_type": "click"},
+        {"event_id": 3, "ts": "2024-01-01T12:30:00.000Z", "user_id": 1, "event_type": "view"},
+        {"event_id": 4, "ts": "2024-01-01T10:05:00.000Z", "user_id": 2, "event_type": "view"},
+    ]
+    for i, r in enumerate(rows):
+        (d / f"part-{i}.json").write_text(json.dumps(r) + "\n")
+    return str(d)
+
+
+def test_streaming_tumbling_counts(spark, stream_dir):
+    stream = read_event_stream(spark, stream_dir, max_files_per_trigger=2)
+    assert stream.isStreaming
+    run_stream_to_memory(streaming_tumbling_counts(stream), "tumbling_test")
+    got = {
+        (str(r.window_start), r.event_type): r.n_events
+        for r in spark.sql("select * from tumbling_test").collect()
+    }
+    assert got[("2024-01-01 10:00:00", "click")] == 2
+    assert got[("2024-01-01 10:00:00", "view")] == 1
+    assert got[("2024-01-01 12:00:00", "view")] == 1
+
+
+def test_streaming_sessionize_matches_batch_gap_semantics(spark, stream_dir):
+    # one micro-batch: a complete-mode snapshot of partially-merged session
+    # state is not deterministic across batch boundaries (see docstring)
+    stream = read_event_stream(spark, stream_dir, max_files_per_trigger=10)
+    run_stream_to_memory(streaming_sessionize(stream, gap="30 minutes"), "session_test")
+    rows = spark.sql("select * from session_test").collect()
+    by_user = {}
+    for r in rows:
+        by_user.setdefault(r.user_id, []).append(r.n_events)
+    # user 1: 2h gap splits into sessions of 2 and 1 (same as batch test)
+    assert sorted(by_user[1]) == [1, 2]
+    assert by_user[2] == [1]
