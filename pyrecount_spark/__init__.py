@@ -10,9 +10,8 @@ Design stance (SURVEY.md §7):
 - Sparse matrices stay COO — never densified.
 - Zero row-at-a-time Python UDFs. Python runs on executors only in the
   ``applyInPandas`` grouped-map queries, the ``applyInPandasWithState`` /
-  ``transformWithStateInPandas`` streaming operators, the ``mapInArrow``
-  fetch, and the ``mapInPandas`` decode of the ``multimodal`` library, which
-  no registered query reaches.
+  ``transformWithStateInPandas`` streaming operators and the ``mapInArrow``
+  fetch.
 - Small dimension sides are broadcast; big joins shuffle on explicit keys.
 """
 

@@ -33,8 +33,9 @@ Differences from the reference, by design (SURVEY §1.3):
 
 File layout consumed (mirrors the reference's cache tree, FIXTURES.md):
 ``{lake}/{dbase}/{dtype}/{project}/<files>`` with the reference's file
-naming (``{dbase}.{tag}.{project}.*`` for metadata tags, ``*.gtf*`` for
-annotation, ``*ID*``/``*MM*``/``*RR*`` for junctions).
+naming (``{dbase}.{tag}.{project}.*`` for metadata tags,
+``*.{annotation}.gtf*`` for annotation, ``*.{jxn_format}.ID*``/``MM*``/``RR*``
+for junctions).
 """
 
 from __future__ import annotations
@@ -182,7 +183,7 @@ class Project:
                 for url in loc.urls(dtype):
                     if ".gtf" in os.path.basename(url):
                         # Shared annotation: one copy per dtype at the level
-                        # _load_counts globs ({lake}/{dbase}/{dtype}/*.gtf*),
+                        # _load_counts globs ({lake}/{dbase}/{dtype}/*.{ann}.gtf*),
                         # deduped across projects below.
                         dest = os.path.join(
                             self.lake_dir, self.dbase, dtype.value,
@@ -252,11 +253,13 @@ class Project:
     def _load_counts(self, dtype: Dtype) -> tuple[DataFrame, DataFrame]:
         if self.annotation is None:
             raise ValueError(f"{dtype.value} requires an annotation (locator.py:19-20)")
-        anno_hits = sorted(
-            _glob.glob(os.path.join(self.lake_dir, self.dbase, dtype.value, "*.gtf*"))
-        )
+        anno_hits = sorted(_glob.glob(os.path.join(
+            self.lake_dir, self.dbase, dtype.value, f"*.{self.annotation.value}.gtf*"
+        )))
         if not anno_hits:
-            raise FileNotFoundError(f"no {dtype.value} GTF annotation in lake")
+            raise FileNotFoundError(
+                f"no {dtype.value} GTF annotation for {self.annotation.value} in lake"
+            )
         annotation = with_gtf_attributes(read_gtf(self.spark, anno_hits[0]))
 
         longs = []
@@ -295,8 +298,10 @@ class Project:
 
     # ---- Q5: junctions stay COO; width check vs the id dim table ----
     def _load_junctions(self) -> tuple[DataFrame, DataFrame]:
+        # the format token, case-insensitively: the locator writes .ALL., some lakes .all.
+        fmt = "".join(f"[{c.lower()}{c.upper()}]" for c in self.jxn_format)
         id_files, mm_files, rr_files = (
-            self._project_files(Dtype.JXN, pattern) for pattern in ("*ID*", "*MM*", "*RR*")
+            self._project_files(Dtype.JXN, f"*.{fmt}.{kind}*") for kind in ("ID", "MM", "RR")
         )
         coos, coords = [], []
         for pid in self.project_ids:

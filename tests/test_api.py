@@ -386,6 +386,38 @@ def lake_copy(lake, tmp_path):
     return Path(shutil.copytree(lake, tmp_path / "lake"))
 
 
+def test_loads_pick_the_requested_annotation_and_junction_format(spark, lake_copy, catalog_df):
+    """With a second annotation's GTF and a UNIQUE junction triplet in the
+    lake, each load reads the files of its own annotation and jxn_format,
+    not whichever sorts first."""
+    (lake_copy / "sra/gene_sums/human.gene_sums.G026.gtf").write_text(
+        'chr1\tHAVANA\tgene\t1\t100\t.\t+\t.\tgene_id "g26";\n'
+    )
+    jxn = lake_copy / "sra/junctions/P1"
+    (jxn / "sra.junctions.P1.UNIQUE.ID.csv").write_text("rail_id\n1\n2\n")
+    (jxn / "sra.junctions.P1.UNIQUE.MM.mtx").write_text(
+        "%%MatrixMarket matrix coordinate integer general\n1 2 1\n1 2 8\n"
+    )
+    (jxn / "sra.junctions.P1.UNIQUE.RR.tsv").write_text(
+        _tsv("chromosome\tstart\tend", "chr3\t1\t2")
+    )
+
+    def project(**kw):
+        return Project(
+            spark, metadata=catalog_df.filter(F.col("project") == "P1"),
+            lake_dir=str(lake_copy), dbase="sra", **kw,
+        )
+
+    anno, _ = project(annotation=Annotation.GENCODE_V29).load(Dtype.GENE)
+    assert {r.gene_id for r in anno.collect()} == {"g1", "g2"}
+    with pytest.raises(FileNotFoundError, match="F006"):
+        project(annotation=Annotation.FANTOM6).load(Dtype.GENE)
+    for fmt, want in [("all", {(1, 1): 4.0, (2, 2): 5.0, (3, 1): 6.0}),
+                      ("unique", {(1, 2): 8.0})]:
+        coo, _ = project(jxn_format=fmt).load(Dtype.JXN)
+        assert {(r.row_idx, r.col_idx): r.value for r in coo.collect()} == want, fmt
+
+
 def test_missing_tag_file_raises_naming_project(spark, lake_copy, catalog_df):
     """A project without one metadata tag file fails the load instead of
     returning that tag's columns as nulls."""

@@ -11,25 +11,6 @@ from pyspark.sql import functions as F
 
 
 @pytest.mark.xfail(
-    reason="PERMANENT BY DECISION (round-14, VERDICT r13 #7): "
-    "compressed-audio PCM decode stays library-gated. The decode chain "
-    "REALLY decodes PNG/PPM/BMP pixels and WAV "
-    "PCM via the pure-stdlib codecs in multimodal/codecs.py, plus "
-    "no-decode mp3/FLAC metadata (executing tests in "
-    "test_multimodal_streaming); a pure-stdlib mp3/FLAC "
-    "PCM decoder is disproportionate engineering for a surface no driver "
-    "testdata exercises (documents/embeddings carry no audio payloads), "
-    "so this xfail is the permanent record: if a DSP library (PIL/pydub/"
-    "librosa) ever lands in the container, it XPASSes and the decision "
-    "gets revisited",
-    strict=True,
-    raises=ImportError,
-)
-def test_real_image_decode_available():
-    import PIL  # noqa: F401
-
-
-@pytest.mark.xfail(
     reason="approx_count_distinct is HLL-sketch-based: estimates are "
     "engine-specific by design; only the exact twin (count_distinct_agg) "
     "is oracle-checked",

@@ -2,10 +2,14 @@
 no cartesian products, and nested-loop joins only where they are the
 intended shape (1-row broadcast scalar/query sides, or the documented
 all-pairs correctness baseline). Catches a plan regression in ANY
-registered query at analysis time — no execution needed.
+registered query at analysis time — no execution needed. Also an import
+audit: every package module must be reachable from a product entry point.
 """
 
 from __future__ import annotations
+
+import ast
+from pathlib import Path
 
 from pyrecount_spark import plans
 
@@ -457,3 +461,49 @@ def test_iterative_edge_feeders_are_bucketed(spark):
     assert "BroadcastNestedLoopJoin" not in p
     assert "CartesianProduct" not in p
     assert "embeddings.parquet" not in p  # graph is over documents now
+
+
+_REPO = Path(__file__).resolve().parents[1]
+# The product surface: the driver contract file plus the three modules a
+# caller imports (the recount facade, the session, the query registry).
+ENTRY_ROOTS = ("__spark_entry__", "pyrecount_spark.api", "pyrecount_spark.session",
+               "pyrecount_spark.plans")
+
+
+def _with_parents(names) -> set[str]:
+    """Importing a.b.c runs a and a.b first."""
+    return {".".join(n.split(".")[:i]) for n in names for i in range(1, n.count(".") + 2)}
+
+
+def _imported_modules(path: Path) -> set[str]:
+    """Every dotted name an ``import`` / ``from ... import ...`` anywhere in
+    ``path`` may load, lazy imports inside function bodies included."""
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text())):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom):  # the package imports absolutely
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+    return _with_parents(names)
+
+
+def test_every_package_module_reachable_from_entry_points():
+    """A static import walk from ENTRY_ROOTS must reach every module under
+    pyrecount_spark/. A module only tests import is dead code: delete it,
+    or import it from the product path that needs it."""
+    modules = {}
+    for path in (_REPO / "pyrecount_spark").rglob("*.py"):
+        parts = path.relative_to(_REPO).with_suffix("").parts
+        modules[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = path
+    modules["__spark_entry__"] = _REPO / "__spark_entry__.py"
+
+    reached, todo = set(), list(_with_parents(ENTRY_ROOTS))
+    while todo:
+        mod = todo.pop()
+        if mod in reached:
+            continue
+        reached.add(mod)
+        todo.extend(m for m in _imported_modules(modules[mod]) if m in modules)
+    unreached = sorted(set(modules) - reached)
+    assert not unreached, f"no entry point imports {unreached}"

@@ -179,35 +179,6 @@ def test_table_fingerprint_permutation_invariant(spark, rows):
     assert one == other
 
 
-# Pure-Python codec round-trips: no Spark in the loop, so examples can be
-# generous. The encoder lives in test_multimodal_streaming (hand-built PNG
-# writer); decode must invert it for ANY pixels, dims, and filter mix.
-@settings(max_examples=40, deadline=None)
-@given(
-    w=st.integers(1, 9),
-    h=st.integers(1, 7),
-    data=st.data(),
-)
-def test_png_codec_roundtrip_property(w, h, data):
-    from tests.test_multimodal_streaming import _bmp_bytes, _png_bytes
-
-    from pyrecount_spark.multimodal.codecs import decode_bmp, decode_png, decode_ppm
-
-    rgb = bytes(
-        data.draw(
-            st.lists(
-                st.integers(0, 255), min_size=w * h * 3, max_size=w * h * 3
-            )
-        )
-    )
-    filters = data.draw(
-        st.lists(st.integers(0, 4), min_size=1, max_size=h)
-    )
-    assert decode_png(_png_bytes(w, h, rgb, filters)) == (w, h, rgb)
-    assert decode_ppm(b"P6\n%d %d\n255\n" % (w, h) + rgb) == (w, h, rgb)
-    assert decode_bmp(_bmp_bytes(w, h, rgb)) == (w, h, rgb)
-
-
 @_settings
 @given(
     n=st.integers(4, 24),

@@ -332,14 +332,13 @@ def test_prefix_filtered_jaccard_equals_full_join(spark, docs):
         assert pref == full, (t, pref, full)
 
 
-def test_prefix_filtered_jaccard_array_path_equals_bitmap_path(spark):
+def test_prefix_filtered_jaccard_array_path_equals_bitmap_path(spark, docs):
     """Both verify representations (round-15 bitset gate true/false) give
     identical results. A corpus of near-disjoint tiny docs drives the gate
     FALSE (V/64 > avg set length / 2: many distinct shingles, short sets);
-    the shared-vocabulary corpus drives it TRUE. Equality against the
-    all-pairs yardstick pins each path."""
-    from pyspark.sql import functions as F  # noqa: F401
-
+    the shared-vocabulary ``docs`` corpus drives it TRUE. The executed plan
+    pins which path ran; equality against the all-pairs yardstick pins its
+    result."""
     from pyrecount_spark.operators.dedup import jaccard_pairs, prefix_filtered_jaccard
 
     # 300 docs x 4 bigrams, mostly unique vocabulary + a few duplicated
@@ -349,19 +348,18 @@ def test_prefix_filtered_jaccard_array_path_equals_bitmap_path(spark):
         base = i - (i % 3) if i % 7 == 0 else i
         rows.append((i, f"w{base}a w{base}b w{base}c w{base}d w{base}e"))
     sparse = spark.createDataFrame(rows, ["doc_id", "text"])
-    full = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in jaccard_pairs(
-            sparse, "text", "doc_id", n=2, threshold=0.4, max_shingle_df=None
-        ).collect()
-    }
-    pref = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in prefix_filtered_jaccard(
-            sparse, "text", "doc_id", n=2, threshold=0.4
-        ).collect()
-    }
-    assert pref == full and full, (len(full), pref)
+    for corpus, bitmap in [(docs, True), (sparse, False)]:
+        full = {
+            (r.id_a, r.id_b): r.jaccard
+            for r in jaccard_pairs(
+                corpus, "text", "doc_id", n=2, threshold=0.4, max_shingle_df=None
+            ).collect()
+        }
+        out = prefix_filtered_jaccard(corpus, "text", "doc_id", n=2, threshold=0.4)
+        pref = {(r.id_a, r.id_b): r.jaccard for r in out.collect()}
+        assert pref == full and full, (bitmap, len(full), pref)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("bit_count" in plan, "array_intersect" in plan) == (bitmap, not bitmap), plan
 
 
 def test_feature_hash_tf_deterministic_and_counted(spark):
