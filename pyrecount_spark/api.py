@@ -19,15 +19,18 @@ Differences from the reference, by design (SURVEY §1.3):
   ``operators.matrix.pivot_wide`` produces the wide view on demand;
 - every TSV is read string-first with its header taken on the driver, so
   loads start no Spark job; ``count`` is cast to long after the melt;
-- each metadata tag is read once across projects (drift unions by name);
+- a load reads each file kind in one scan across the selected projects:
+  counts are melted by one join to the (file, position, sample) picks the
+  headers give, junction MM and RR files are one read each, and each
+  metadata tag is read once (drift unions by name);
 - a ``Project`` memoizes its project -> samples map (one collect) and its
   metadata frame, shared by every load and both scalers;
 - junction matrices stay COO — ``(mm_coo, coords)``, never densified;
 - a failed read raises; no silent ``None``/empty fallbacks
   (accessor.py:327-335 quirks intentionally not replicated); a missing
   metadata tag, counts, junction or bigwig file raises naming its project;
-- ``cache`` fetches the whole manifest, then raises ``FetchError`` naming
-  every URL that failed;
+- ``cache`` fetches the manifest one locator builds for the whole
+  selection, then raises ``FetchError`` naming every URL that failed;
 - driver-sized frames (manifests) are built from Arrow as JVM local
   relations, so they start no Python worker task.
 
@@ -51,16 +54,19 @@ from pyspark.sql import functions as F
 from pyrecount_spark.functions.gtf import with_gtf_attributes
 from pyrecount_spark.functions.scalars import ORGANISM_REMAP, value_remap
 from pyrecount_spark.operators import matrix as M
-from pyrecount_spark.operators.relational import align_union, multi_join
+from pyrecount_spark.operators.relational import multi_join
 from pyrecount_spark.session import local_frame
-from pyrecount_spark.sources.catalog import Annotation, CatalogLocator, Dtype, ProjectLocator, Tags
+from pyrecount_spark.sources.catalog import Annotation, CatalogLocator, Dtype, ProjectLocator
+from pyrecount_spark.sources.catalog import metadata_tags
 from pyrecount_spark.sources.ingest import FetchError, fetch_manifest
 from pyrecount_spark.sources.readers import (
     id_list_length,
     matrix_market_dims,
     read_gtf,
     read_matrix_market_coo,
+    read_tsv_cells,
     read_tsv_strings,
+    tsv_header,
 )
 
 METADATA_JOIN_KEY = ["rail_id", "external_id", "study"]  # accessor.py:470
@@ -168,32 +174,18 @@ class Project:
         any fetch failed."""
         if isinstance(dtypes, Dtype):
             dtypes = (dtypes,)
+        loc = ProjectLocator(root, organism, self.dbase, self.project_ids, self.annotation,
+                             self.jxn_format, self.samples_by_project)
         rows = []
-        for pid, samples in self.samples_by_project.items():
-            loc = ProjectLocator(
-                root=root,
-                organism=organism,
-                dbase=self.dbase,
-                project_ids=[pid],
-                annotation=self.annotation,
-                jxn_format=self.jxn_format,
-                samples_by_project={pid: samples},
-            )
-            for dtype in dtypes:
-                for url in loc.urls(dtype):
-                    if ".gtf" in os.path.basename(url):
-                        # Shared annotation: one copy per dtype at the level
-                        # _load_counts globs ({lake}/{dbase}/{dtype}/*.{ann}.gtf*),
-                        # deduped across projects below.
-                        dest = os.path.join(
-                            self.lake_dir, self.dbase, dtype.value,
-                            os.path.basename(url),
-                        )
-                    else:
-                        dest = os.path.join(
-                            self._project_dir(dtype, pid), os.path.basename(url)
-                        )
-                    rows.append((url, dest))
+        for dtype in dtypes:
+            for pid, url in loc.urls(dtype):
+                folder = self._project_dir(dtype, pid)
+                if ".gtf" in os.path.basename(url):
+                    # Shared annotation: one copy per dtype at the level
+                    # _load_counts globs ({lake}/{dbase}/{dtype}/*.{ann}.gtf*),
+                    # deduped across projects below.
+                    folder = os.path.dirname(folder)
+                rows.append((url, os.path.join(folder, os.path.basename(url))))
         rows = list(dict.fromkeys(rows))  # dedup shared-annotation fetches
         return _fetch_all(self.spark, rows, fetcher, num_tasks)
 
@@ -231,14 +223,11 @@ class Project:
 
     @cached_property
     def _project_metadata(self) -> DataFrame:
-        tags = [self.dbase] + [t.value for t in Tags]
-        if self.dbase in ("gtex", "tcga"):  # accessor.py:288-289
-            tags.remove(Tags.RECOUNT_PRED.value)
         frames = [
             read_tsv_strings(
                 self.spark, sum(self._project_files(Dtype.METADATA, f"*.{tag}.*").values(), [])
             )
-            for tag in tags
+            for tag in metadata_tags(self.dbase)
         ]
         out = multi_join(frames, on=METADATA_JOIN_KEY, how="inner").filter(
             F.col("external_id").isin(self.samples)
@@ -262,24 +251,22 @@ class Project:
             )
         annotation = with_gtf_attributes(read_gtf(self.spark, anno_hits[0]))
 
-        longs = []
+        columns = {}
         for pid, files in self._project_files(dtype, f"*{self.annotation.value}*").items():
-            samples = self.samples_by_project[pid]
-            wide = read_tsv_strings(self.spark, files)
-            feature_col = wide.columns[0]
-            missing = set(samples) - set(wide.columns[1:])
+            samples = set(self.samples_by_project[pid])
+            headers = {path: tsv_header(path) for path in files}
+            missing = samples.difference(*headers.values())
             if missing:  # P1 raise semantics (accessor.py:276-278)
                 raise KeyError(f"samples missing from counts for {pid}: {sorted(missing)}")
-            long = M.melt(
-                wide.select(feature_col, *samples),
-                [feature_col],
-                samples,
-                var_name="sample_id",
-                value_name="count",
-            ).withColumnRenamed(feature_col, "feature_id")
-            longs.append(long)
-        # J2 align-merge degenerates to a union in long form (SURVEY §2.3)
-        return annotation, align_union(longs).withColumn("count", F.col("count").cast("long"))
+            for path, names in headers.items():
+                columns[path] = {i: n for i, n in enumerate(names) if i and n in samples}
+        # one scan melts every file; J2 align-merge is a union in long form (SURVEY §2.3)
+        long = read_tsv_cells(self.spark, columns).select(
+            F.col("key").alias("feature_id"),
+            F.col("name").alias("sample_id"),
+            F.col("value").cast("long").alias("count"),
+        )
+        return annotation, long
 
     # ---- Q4: exon = counts + composite-key split (F2) + reorder (P2) ----
     def _load_exon(self, dtype: Dtype) -> tuple[DataFrame, DataFrame]:
@@ -303,7 +290,6 @@ class Project:
         id_files, mm_files, rr_files = (
             self._project_files(Dtype.JXN, f"*.{fmt}.{kind}*") for kind in ("ID", "MM", "RR")
         )
-        coos, coords = [], []
         for pid in self.project_ids:
             _, n_cols, _ = matrix_market_dims(mm_files[pid][0])
             n_ids = id_list_length(id_files[pid][0])
@@ -312,16 +298,11 @@ class Project:
                     f"junction width mismatch for {pid}: MM has {n_cols} cols, "
                     f"ID list has {n_ids}"
                 )
-            coo = read_matrix_market_coo(self.spark, mm_files[pid][0]).withColumn(
-                "project_id", F.lit(pid)
-            )
-            coos.append(coo)
-            coords.append(
-                read_tsv_strings(self.spark, rr_files[pid][0]).withColumn(
-                    "project_id", F.lit(pid)  # P8 provenance
-                )
-            )
-        return align_union(coos), align_union(coords)
+        # P8 provenance: the lake layout puts each file in its project's folder
+        project_id = F.element_at(F.split(F.input_file_name(), "/"), -2).alias("project_id")
+        coo = read_matrix_market_coo(self.spark, [mm_files[pid][0] for pid in self.project_ids])
+        coords = read_tsv_strings(self.spark, [rr_files[pid][0] for pid in self.project_ids])
+        return coo.select("*", project_id), coords.select("*", project_id)
 
     # ---- Q6: manifest only, payloads never parsed ----
     def _load_bigwig_manifest(self) -> DataFrame:

@@ -65,12 +65,22 @@ def shard2(ident: str) -> str:
     return ident[-2:]
 
 
+def metadata_tags(dbase: str) -> list[str]:
+    """Metadata file tags of a data source: ``dbase`` + the four recount tags
+    (locator.py:59-60); gtex/tcga have no ``recount_pred`` (accessor.py:288-289)."""
+    tags = [dbase] + [t.value for t in Tags]
+    if dbase in ("gtex", "tcga"):
+        tags.remove(Tags.RECOUNT_PRED.value)
+    return tags
+
+
 @dataclass
 class ProjectLocator:
     """URL synthesis for per-project data files (locator.py:82-164).
 
     ``urls(dtype)`` produces the full cartesian tags × extensions fan-out the
-    reference builds (locator.py:86), with per-dtype path templates.
+    reference builds (locator.py:86), with per-dtype path templates, as
+    ``(project_id, url)`` rows.
     """
 
     root: str
@@ -81,93 +91,67 @@ class ProjectLocator:
     jxn_format: str = "all"
     samples_by_project: dict[str, Sequence[str]] = field(default_factory=dict)
 
-    def _base(self, project_id: str) -> str:
+    def _base(self) -> str:
         return posixpath.join(
             self.root, self.organism, "data_sources", self.dbase,
         )
 
-    def metadata_urls(self) -> list[str]:
-        """S3 metadata variant: tags = [dbase] + the four recount tags
-        (locator.py:59-60); gtex/tcga drop `pred` (accessor.py:288-289)."""
-        tags = [self.dbase] + [t.value for t in Tags]
-        if self.dbase in ("gtex", "tcga"):
-            tags = [t for t in tags if t != Tags.RECOUNT_PRED.value]
-        urls = []
-        for pid in self.project_ids:
-            for tag in tags:
-                urls.append(
-                    posixpath.join(
-                        self._base(pid), "metadata", shard2(pid), pid,
-                        f"{self.dbase}.{tag}.{pid}.{Extensions.MD.value}",
-                    )
-                )
-        return urls
+    def metadata_urls(self) -> list[tuple[str, str]]:
+        """S3 metadata variant: one file per :func:`metadata_tags` tag."""
+        return [
+            (pid, posixpath.join(self._base(), "metadata", shard2(pid), pid,
+                                 f"{self.dbase}.{tag}.{pid}.{Extensions.MD.value}"))
+            for pid in self.project_ids
+            for tag in metadata_tags(self.dbase)
+        ]
 
-    def counts_urls(self, dtype: Dtype) -> list[str]:
+    def counts_urls(self, dtype: Dtype) -> list[tuple[str, str]]:
         """GENE/EXON: one annotated counts file + one shared annotation GTF
         per project (locator.py:96-108)."""
         if self.annotation is None:
             raise ValueError(f"{dtype.value} requires an annotation (locator.py:19-20)")
         ann = self.annotation.value
-        urls = []
-        for pid in self.project_ids:
-            urls.append(
-                posixpath.join(
-                    self._base(pid), dtype.value, shard2(pid), pid,
-                    f"{self.dbase}.{dtype.value}.{pid}.{ann}.gz",
-                )
-            )
-            urls.append(
-                posixpath.join(
-                    self.root, self.organism, "annotations", f"{dtype.value}",
-                    f"{self.organism}.{dtype.value}.{ann}.gtf.gz",
-                )
-            )
-        return urls
-
-    def junction_urls(self) -> list[str]:
-        """JXN: ID + MM + RR triplet per project (locator.py:110-135)."""
-        urls = []
-        for pid in self.project_ids:
-            base = posixpath.join(self._base(pid), Dtype.JXN.value, shard2(pid), pid)
-            stem = f"{self.dbase}.junctions.{pid}.{self.jxn_format.upper()}"
-            urls += [
-                posixpath.join(base, f"{stem}.ID.gz"),
-                posixpath.join(base, f"{stem}.{Extensions.MM.value}"),
-                posixpath.join(base, f"{stem}.{Extensions.RR.value}"),
-            ]
-        return urls
-
-    def bigwig_urls(self) -> list[tuple[str, str]]:
-        """BW: one BigWig per (project, sample) (locator.py:139-159);
-        returns (project_id, url) rows — the Q6 manifest seed. Path levels are
-        {base_sums}/{shard2(pid)}/{pid}/{shard2(sample)}/{file}, matching the
-        reference's project_index/project_id/sample_index nesting."""
+        gtf = posixpath.join(
+            self.root, self.organism, "annotations", dtype.value,
+            f"{self.organism}.{dtype.value}.{ann}.gtf.gz",
+        )
         rows = []
         for pid in self.project_ids:
-            for sample in self.samples_by_project.get(pid, []):
-                rows.append(
-                    (
-                        pid,
-                        posixpath.join(
-                            self._base(pid), Dtype.BW.value,
-                            shard2(pid), pid, shard2(sample),
-                            f"{self.dbase}.base_sums.{pid}_{sample}.ALL.bw",
-                        ),
-                    )
-                )
+            counts = posixpath.join(
+                self._base(), dtype.value, shard2(pid), pid,
+                f"{self.dbase}.{dtype.value}.{pid}.{ann}.gz",
+            )
+            rows += [(pid, counts), (pid, gtf)]
         return rows
 
-    def urls(self, dtype: Dtype) -> list[str]:
-        if dtype == Dtype.METADATA:
-            return self.metadata_urls()
+    def junction_urls(self) -> list[tuple[str, str]]:
+        """JXN: ID + MM + RR triplet per project (locator.py:110-135)."""
+        rows = []
+        for pid in self.project_ids:
+            base = posixpath.join(self._base(), Dtype.JXN.value, shard2(pid), pid)
+            stem = f"{self.dbase}.junctions.{pid}.{self.jxn_format.upper()}"
+            rows += [
+                (pid, posixpath.join(base, f"{stem}.{ext}"))
+                for ext in ("ID.gz", Extensions.MM.value, Extensions.RR.value)
+            ]
+        return rows
+
+    def bigwig_urls(self) -> list[tuple[str, str]]:
+        """BW: one BigWig per (project, sample) (locator.py:139-159). Path
+        levels are {base_sums}/{shard2(pid)}/{pid}/{shard2(sample)}/{file},
+        matching the reference's project_index/project_id/sample_index nesting."""
+        return [
+            (pid, posixpath.join(self._base(), Dtype.BW.value, shard2(pid), pid, shard2(sample),
+                                 f"{self.dbase}.base_sums.{pid}_{sample}.ALL.bw"))
+            for pid in self.project_ids
+            for sample in self.samples_by_project.get(pid, [])
+        ]
+
+    def urls(self, dtype: Dtype) -> list[tuple[str, str]]:
         if dtype in (Dtype.GENE, Dtype.EXON):
             return self.counts_urls(dtype)
-        if dtype == Dtype.JXN:
-            return self.junction_urls()
-        if dtype == Dtype.BW:
-            return [u for _, u in self.bigwig_urls()]
-        raise ValueError(f"unknown dtype: {dtype}")
+        return {Dtype.METADATA: self.metadata_urls, Dtype.JXN: self.junction_urls,
+                Dtype.BW: self.bigwig_urls}[dtype]()
 
 
 @dataclass

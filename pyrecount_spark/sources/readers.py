@@ -12,7 +12,9 @@ from __future__ import annotations
 
 import csv
 import gzip
+import os
 from functools import reduce
+from pathlib import Path
 from typing import Iterator, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,6 +26,10 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from pyrecount_spark.session import local_frame
+
+_TSV = {"sep": "\t", "header": True, "comment": "#"}  # how every TSV reader parses
 
 
 def _lines(path: str, comment: str) -> Iterator[str]:
@@ -54,6 +60,11 @@ def _string_schema(header: str) -> StructType:
     ])
 
 
+def tsv_header(path: str) -> list[str]:
+    """Column names :func:`read_tsv_strings` gives the TSV at ``path``."""
+    return _string_schema(_first_line(path, "#")).names
+
+
 def read_tsv_strings(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
     """S7/S8 (accessor.py:261-265, 326, 480) — the one TSV reader: tab-
     separated, header, ``#`` comment rows skipped, **no inference**: every
@@ -65,12 +76,35 @@ def read_tsv_strings(spark: SparkSession, paths: str | Sequence[str]) -> DataFra
     for p in [paths] if isinstance(paths, str) else paths:
         groups.setdefault(_first_line(p, "#"), []).append(p)
     frames = [
-        spark.read.options(sep="\t", header=True, comment="#")
+        spark.read.options(**_TSV)
         .schema(_string_schema(header))
         .csv(group)
         for header, group in groups.items()
     ]
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
+
+
+def read_tsv_cells(spark: SparkSession, columns: dict[str, dict[int, str]]) -> DataFrame:
+    """Picked cells of many TSVs as long strings ``(key, name, value)``, in
+    one scan. ``columns`` maps each path to ``{position: name}`` (from 1;
+    ``key`` is field 0). Rows parse as in :func:`read_tsv_strings`, under a
+    positional all-string schema; their fields after the key are
+    ``posexplode``d and joined to a broadcast ``(file, pos, name)`` frame,
+    which melts the rows and keeps only the picked cells in one join. A file
+    is keyed by ``input_file_name()``, the URI of its absolute path."""
+    width = 1 + max(pos for picks in columns.values() for pos in picks)
+    picks = local_frame(spark, [
+        (Path(os.path.abspath(path)).as_uri(), str(pos - 1), name)
+        for path, picked in columns.items() for pos, name in picked.items()
+    ], ["file", "pos", "name"]).withColumn("pos", F.col("pos").cast("int"))
+    schema = StructType([StructField(f"_c{i}", StringType()) for i in range(width)])
+    cells = spark.read.options(**_TSV).schema(schema).csv(list(columns))
+    cells = cells.select(
+        F.input_file_name().alias("file"),
+        F.col("_c0").alias("key"),
+        F.posexplode(F.array(*schema.names[1:])).alias("pos", "value"),
+    )
+    return cells.join(F.broadcast(picks), ["file", "pos"]).select("key", "name", "value")
 
 
 GTF_SCHEMA = StructType(
@@ -109,14 +143,14 @@ COO_SCHEMA = StructType(
 )
 
 
-def read_matrix_market_coo(spark: SparkSession, path: str) -> DataFrame:
+def read_matrix_market_coo(spark: SparkSession, paths: str | Sequence[str]) -> DataFrame:
     """S10 rebuilt sparse (accessor.py:431-432 densifies via scipy ``mmread``
     — the known blow-up, SURVEY §1.3): parse the MatrixMarket coordinate
     body into a long COO table ``(row_idx, col_idx, value)`` and **stay
     sparse**. 1-based MM indices are kept as-is (dim tables use the same
     base); ``%``-prefixed comment lines and the dims line are dropped.
 
-    Distributed parse: Spark's CSV reader splits the file across tasks with
+    Distributed parse: Spark's CSV reader splits each file across tasks with
     ``%`` as the comment prefix and the dims line as the header, so the dims
     line is dropped by position (the first non-comment line of the file,
     the one ``_first_line`` reads) — a body entry with the same text stays.
@@ -124,7 +158,7 @@ def read_matrix_market_coo(spark: SparkSession, path: str) -> DataFrame:
     coo = (
         spark.read.options(sep=" ", header=True, comment="%")
         .schema(COO_SCHEMA)
-        .csv(path)
+        .csv(paths)
     )
     return coo.withColumn("value", F.coalesce("value", F.lit(1.0)))
 

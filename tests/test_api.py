@@ -176,16 +176,26 @@ def test_project_metadata_join_and_union(project):
     assert md is project.load_metadata()
 
 
-def test_gene_load_long_and_wide_view(project):
-    anno, counts = project.load(Dtype.GENE)
-    assert anno.filter(F.col("gene_name") == "G_ONE").count() == 1
-    assert counts.schema["count"].dataType == LongType()  # string-first, cast after melt
-    got = {(r.feature_id, r.sample_id): r["count"] for r in counts.collect()}
-    assert got[("g1", "s1")] == 10 and got[("g2", "s3")] == 7
-    assert ("g3", "s3") in got and ("g3", "s1") not in got
-    wide = pivot_wide(counts, "feature_id", "sample_id", "count", ["s1", "s2", "s3"])
-    g2 = {r.feature_id: (r.s1, r.s2, r.s3) for r in wide.collect()}["g2"]
-    assert g2 == (20, 200, 7)  # align-merge semantics in long form
+def test_gene_load_long_and_wide_view(spark, lake, project, tmp_path):
+    """Also from a copy of the lake under a folder whose name a file URI
+    escapes (space, ``#``): counts rows are keyed by file URI, and a key
+    that missed would drop every row without an error."""
+    moved = shutil.copytree(lake, tmp_path / "lake dir#1")
+    elsewhere = Project(
+        spark, metadata=project.metadata, lake_dir=str(moved), dbase="sra",
+        annotation=Annotation.GENCODE_V29,
+    )
+    for proj in (project, elsewhere):
+        anno, counts = proj.load(Dtype.GENE)
+        assert anno.filter(F.col("gene_name") == "G_ONE").count() == 1
+        assert counts.schema["count"].dataType == LongType()  # string-first, cast after melt
+        got = {(r.feature_id, r.sample_id): r["count"] for r in counts.collect()}
+        assert len(got) == 6
+        assert got[("g1", "s1")] == 10 and got[("g2", "s3")] == 7
+        assert ("g3", "s3") in got and ("g3", "s1") not in got
+        wide = pivot_wide(counts, "feature_id", "sample_id", "count", ["s1", "s2", "s3"])
+        g2 = {r.feature_id: (r.s1, r.s2, r.s3) for r in wide.collect()}["g2"]
+        assert g2 == (20, 200, 7)  # align-merge semantics in long form
 
 
 def test_gene_load_sample_absent_from_counts_raises(spark, lake, catalog_df):
@@ -416,6 +426,50 @@ def test_loads_pick_the_requested_annotation_and_junction_format(spark, lake_cop
                       ("unique", {(1, 2): 8.0})]:
         coo, _ = project(jxn_format=fmt).load(Dtype.JXN)
         assert {(r.row_idx, r.col_idx): r.value for r in coo.collect()} == want, fmt
+
+
+def test_loads_scan_each_file_kind_once_whatever_the_project_count(
+    spark, lake_copy, job_group
+):
+    """With P2 given a junction triplet and cloned to P3..P8 (renamed
+    samples), the counts, junction COO and junction coords frames each plan
+    one CSV scan at 2 and at 8 projects, and a counts action runs as many
+    jobs at 8 projects as at 2."""
+    jxn = lake_copy / "sra/junctions/P2"
+    jxn.mkdir()
+    (jxn / "sra.junctions.P2.all.ID.csv").write_text("rail_id\n3\n")
+    (jxn / "sra.junctions.P2.all.MM.mtx").write_text(
+        "%%MatrixMarket matrix coordinate integer general\n2 1 2\n1 1 7\n2 1 9\n"
+    )
+    (jxn / "sra.junctions.P2.all.RR.tsv").write_text(
+        _tsv("chromosome\tstart\tend", "chr1\t10\t20", "chr2\t5\t9")
+    )
+    for k in range(3, 9):
+        for dtype in ("gene_sums", "junctions"):
+            clone = lake_copy / f"sra/{dtype}/P{k}"
+            clone.mkdir()
+            for f in (lake_copy / f"sra/{dtype}/P2").iterdir():
+                text = f.read_text().replace("\ts3\n", f"\ts3_{k}\n")
+                (clone / f.name.replace(".P2.", f".P{k}.")).write_text(text)
+
+    def scans(df):
+        return df._jdf.queryExecution().executedPlan().toString().count("FileScan csv")
+
+    jobs = {}
+    for n in (2, 8):
+        samples = [("P1", "s1"), ("P1", "s2"), ("P2", "s3")]
+        samples += [(f"P{k}", f"s3_{k}") for k in range(3, n + 1)]
+        proj = Project(
+            spark, metadata=spark.createDataFrame(samples, ["project", "external_id"]),
+            lake_dir=str(lake_copy), dbase="sra", annotation=Annotation.GENCODE_V29,
+        )
+        _, counts = proj.load(Dtype.GENE)
+        coo, coords = proj.load(Dtype.JXN)
+        assert [scans(counts), scans(coo), scans(coords)] == [1, 1, 1], n
+        assert coords.select("project_id").distinct().count() == n
+        rows, jobs[n], _ = job_group(f"test-api-scans-{n}", counts.collect)
+        assert len(rows) == 4 + 2 * (n - 1)
+    assert len(jobs[2]) == len(jobs[8])
 
 
 def test_missing_tag_file_raises_naming_project(spark, lake_copy, catalog_df):

@@ -41,7 +41,7 @@ def test_shard2_is_last_two_chars():
 
 
 def test_metadata_urls_tags_and_sharding():
-    urls = _locator().metadata_urls()
+    urls = [u for _, u in _locator().metadata_urls()]
     # tags = dbase + 4 recount tags (locator.py:59-60) for sra
     assert len(urls) == 5
     assert all("/metadata/15/SRP009615/" in u for u in urls)
@@ -49,7 +49,7 @@ def test_metadata_urls_tags_and_sharding():
 
 
 def test_metadata_urls_tcga_drops_pred():
-    urls = _locator(dbase="tcga", project_ids=["CHOL"]).metadata_urls()
+    urls = [u for _, u in _locator(dbase="tcga", project_ids=["CHOL"]).metadata_urls()]
     # accessor.py:288-289: gtex/tcga exclude recount_pred
     assert len(urls) == 4
     assert not any("recount_pred" in u for u in urls)
@@ -61,7 +61,7 @@ def test_gene_urls_require_annotation():
 
 
 def test_junction_urls_triplet():
-    urls = _locator().junction_urls()
+    urls = [u for _, u in _locator().junction_urls()]
     assert len(urls) == 3
     assert [u.rsplit(".", 2)[-2] for u in urls] == ["ID", "MM", "RR"]
 
@@ -123,7 +123,7 @@ def test_land_parquet_partitioned(spark, tmp_path):
 def test_junction_urls_uppercase_format():
     """ADVICE fix: jxn_format 'all' must synthesize '.ALL.' in the stem
     (locator.py:110) or the URLs 404 against the real service."""
-    urls = _locator(jxn_format="all").junction_urls()
+    urls = [u for _, u in _locator(jxn_format="all").junction_urls()]
     assert all(".ALL." in u for u in urls)
     assert not any(".all." in u for u in urls)
 
