@@ -20,9 +20,10 @@ Differences from the reference, by design (SURVEY §1.3):
 - every TSV is read string-first with its header taken on the driver, so
   loads start no Spark job; ``count`` is cast to long after the melt;
 - a load reads each file kind in one scan across the selected projects:
-  counts are melted by one join to the (file, position, sample) picks the
-  headers give, junction MM and RR files are one read each, and each
-  metadata tag is read once (drift unions by name);
+  each counts row joins to its file's picked positions and samples, which
+  the headers give, and explodes into only those cells; junction MM and RR
+  files are one read each, and each metadata tag is read once (drift
+  unions by name);
 - a ``Project`` memoizes its project -> samples map (one collect) and its
   metadata frame, shared by every load and both scalers;
 - junction matrices stay COO — ``(mm_coo, coords)``, never densified;
@@ -61,6 +62,7 @@ from pyrecount_spark.sources.catalog import metadata_tags
 from pyrecount_spark.sources.ingest import FetchError, fetch_manifest
 from pyrecount_spark.sources.readers import (
     id_list_length,
+    input_file_part,
     matrix_market_dims,
     read_gtf,
     read_matrix_market_coo,
@@ -299,7 +301,7 @@ class Project:
                     f"ID list has {n_ids}"
                 )
         # P8 provenance: the lake layout puts each file in its project's folder
-        project_id = F.element_at(F.split(F.input_file_name(), "/"), -2).alias("project_id")
+        project_id = input_file_part(-2).alias("project_id")
         coo = read_matrix_market_coo(self.spark, [mm_files[pid][0] for pid in self.project_ids])
         coords = read_tsv_strings(self.spark, [rr_files[pid][0] for pid in self.project_ids])
         return coo.select("*", project_id), coords.select("*", project_id)

@@ -12,12 +12,12 @@ from __future__ import annotations
 
 import csv
 import gzip
-import os
+import json
 from functools import reduce
 from pathlib import Path
 from typing import Iterator, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -84,27 +84,42 @@ def read_tsv_strings(spark: SparkSession, paths: str | Sequence[str]) -> DataFra
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
+def input_file_part(i: int) -> Column:
+    """Part ``i`` of the path of the file a row was read from (``-1`` is its
+    name, ``-2`` its folder), spelled as on disk: ``input_file_name()`` is a
+    URI with ``%XX`` escapes but a bare ``+``, so ``+`` is escaped first."""
+    part = F.element_at(F.split(F.input_file_name(), "/"), i)
+    return F.url_decode(F.replace(part, F.lit("+"), F.lit("%2B")))
+
+
 def read_tsv_cells(spark: SparkSession, columns: dict[str, dict[int, str]]) -> DataFrame:
     """Picked cells of many TSVs as long strings ``(key, name, value)``, in
     one scan. ``columns`` maps each path to ``{position: name}`` (from 1;
-    ``key`` is field 0). Rows parse as in :func:`read_tsv_strings`, under a
-    positional all-string schema; their fields after the key are
-    ``posexplode``d and joined to a broadcast ``(file, pos, name)`` frame,
-    which melts the rows and keeps only the picked cells in one join. A file
-    is keyed by ``input_file_name()``, the URI of its absolute path."""
-    width = 1 + max(pos for picks in columns.values() for pos in picks)
+    ``key`` is field 0). Rows parse as in :func:`read_tsv_strings`, but only
+    the key and the picked fields are read, by position. Each row joins to
+    its file's broadcast picks (matched by folder and file name) and
+    explodes into just those cells, so the work follows the picked cells."""
+    used = sorted({pos for picked in columns.values() for pos in picked})
+    slot = {pos: i + 1 for i, pos in enumerate(used)}  # element_at index into ``cells``
     picks = local_frame(spark, [
-        (Path(os.path.abspath(path)).as_uri(), str(pos - 1), name)
-        for path, picked in columns.items() for pos, name in picked.items()
-    ], ["file", "pos", "name"]).withColumn("pos", F.col("pos").cast("int"))
-    schema = StructType([StructField(f"_c{i}", StringType()) for i in range(width)])
-    cells = spark.read.options(**_TSV).schema(schema).csv(list(columns))
-    cells = cells.select(
-        F.input_file_name().alias("file"),
-        F.col("_c0").alias("key"),
-        F.posexplode(F.array(*schema.names[1:])).alias("pos", "value"),
+        (Path(p).parent.name, Path(p).name,
+         json.dumps([slot[pos] for pos in picked]), json.dumps(list(picked.values())))
+        for p, picked in columns.items()
+    ], ["folder", "file", "slots", "names"]).select(
+        "folder", "file", F.from_json("slots", "array<int>").alias("slots"),
+        F.from_json("names", "array<string>").alias("names"))
+    # a field past the last pick keeps the read fields a strict subset of the
+    # schema, so the parser takes them by position and no row width is malformed
+    schema = StructType([StructField(f"_c{i}", StringType()) for i in range(used[-1] + 2)])
+    rows = spark.read.options(**_TSV).schema(schema).csv(list(columns)).select(
+        input_file_part(-2).alias("folder"), input_file_part(-1).alias("file"),
+        F.col("_c0").alias("key"), F.array(*(f"_c{pos}" for pos in used)).alias("cells"))
+    return (
+        rows.join(F.broadcast(picks), ["folder", "file"])
+        .select("key", "cells", "names", F.posexplode("slots").alias("i", "slot"))
+        .select("key", F.col("names")[F.col("i")].alias("name"),
+                F.element_at("cells", F.col("slot")).alias("value"))
     )
-    return cells.join(F.broadcast(picks), ["file", "pos"]).select("key", "name", "value")
 
 
 GTF_SCHEMA = StructType(

@@ -178,9 +178,10 @@ def test_project_metadata_join_and_union(project):
 
 def test_gene_load_long_and_wide_view(spark, lake, project, tmp_path):
     """Also from a copy of the lake under a folder whose name a file URI
-    escapes (space, ``#``): counts rows are keyed by file URI, and a key
-    that missed would drop every row without an error."""
-    moved = shutil.copytree(lake, tmp_path / "lake dir#1")
+    escapes (space, ``#``) or keeps (``=``, ``+``, ``@``): counts rows are
+    matched to their files by path, and a key that missed would drop every
+    row without an error."""
+    moved = shutil.copytree(lake, tmp_path / "lake dir#1=a+b@c")
     elsewhere = Project(
         spark, metadata=project.metadata, lake_dir=str(moved), dbase="sra",
         annotation=Annotation.GENCODE_V29,
