@@ -109,7 +109,8 @@ def read_tsv_cells(spark: SparkSession, columns: dict[str, dict[int, str]]) -> D
         "folder", "file", F.from_json("slots", "array<int>").alias("slots"),
         F.from_json("names", "array<string>").alias("names"))
     # a field past the last pick keeps the read fields a strict subset of the
-    # schema, so the parser takes them by position and no row width is malformed
+    # schema, so CSV column pruning makes the parser take them by position and
+    # a row of any width parses without the malformed-record path
     schema = StructType([StructField(f"_c{i}", StringType()) for i in range(used[-1] + 2)])
     rows = spark.read.options(**_TSV).schema(schema).csv(list(columns)).select(
         input_file_part(-2).alias("folder"), input_file_part(-1).alias("file"),

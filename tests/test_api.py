@@ -179,8 +179,8 @@ def test_project_metadata_join_and_union(project):
 def test_gene_load_long_and_wide_view(spark, lake, project, tmp_path):
     """Also from a copy of the lake under a folder whose name a file URI
     escapes (space, ``#``) or keeps (``=``, ``+``, ``@``): counts rows are
-    matched to their files by path, and a key that missed would drop every
-    row without an error."""
+    matched to their files by folder and name, read from the file URI, and a
+    key that missed would drop every row without an error. Then s2 alone: a file's unpicked samples stay out."""
     moved = shutil.copytree(lake, tmp_path / "lake dir#1=a+b@c")
     elsewhere = Project(
         spark, metadata=project.metadata, lake_dir=str(moved), dbase="sra",
@@ -197,6 +197,12 @@ def test_gene_load_long_and_wide_view(spark, lake, project, tmp_path):
         wide = pivot_wide(counts, "feature_id", "sample_id", "count", ["s1", "s2", "s3"])
         g2 = {r.feature_id: (r.s1, r.s2, r.s3) for r in wide.collect()}["g2"]
         assert g2 == (20, 200, 7)  # align-merge semantics in long form
+    only_s2 = Project(
+        spark, metadata=project.metadata.filter(F.col("external_id") == "s2"), lake_dir=lake,
+        dbase="sra", annotation=Annotation.GENCODE_V29,
+    )
+    got = {(r.feature_id, r.sample_id): r["count"] for r in only_s2.load(Dtype.GENE)[1].collect()}
+    assert got == {("g1", "s2"): 100, ("g2", "s2"): 200}
 
 
 def test_gene_load_sample_absent_from_counts_raises(spark, lake, catalog_df):
