@@ -28,24 +28,24 @@ Differences from the reference, by design (SURVEY §1.3):
   metadata frame, shared by every load and both scalers;
 - junction matrices stay COO — ``(mm_coo, coords)``, never densified;
 - a failed read raises; no silent ``None``/empty fallbacks
-  (accessor.py:327-335 quirks intentionally not replicated); a missing
-  metadata tag, counts, junction or bigwig file raises naming its project;
+  (accessor.py:327-335 quirks intentionally not replicated); a load raises
+  ``FileNotFoundError`` naming each project and file missing from the lake;
 - ``cache`` fetches the manifest one locator builds for the whole
   selection, then raises ``FetchError`` naming every URL that failed;
 - driver-sized frames (manifests) are built from Arrow as JVM local
   relations, so they start no Python worker task.
 
-File layout consumed (mirrors the reference's cache tree, FIXTURES.md):
-``{lake}/{dbase}/{dtype}/{project}/<files>`` with the reference's file
-naming (``{dbase}.{tag}.{project}.*`` for metadata tags,
-``*.{annotation}.gtf*`` for annotation, ``*.{jxn_format}.ID*``/``MM*``/``RR*``
-for junctions).
+Lake layout (FIXTURES.md): ``Project._lake_files`` maps each locator URL to
+``{lake}/{dbase}/{dtype}/{project}/{name}`` (the shared GTF one level up;
+catalogs at ``{lake}/{dbase}/metadata/{name}``). ``cache`` writes and the
+loaders read exactly those paths, routed by name as the reference does, so
+no other file, such as a killed fetch's ``.part.`` temp file, is ever read.
 """
 
 from __future__ import annotations
 
-import glob as _glob
 import os
+import posixpath
 from dataclasses import dataclass
 from functools import cached_property
 
@@ -103,28 +103,25 @@ class Metadata:
         self.organism = organism
         self.dbases = dbases
 
+    def _lake_files(self, root: str = "") -> list[tuple[str, str]]:
+        """``(url, lake_path)`` of each data source's catalog: what ``cache``
+        writes and ``load`` reads."""
+        loc = CatalogLocator(root=root, organism=self.organism, dbases=self.dbases)
+        return [
+            (url, os.path.join(self.lake_dir, db, "metadata", posixpath.basename(url)))
+            for db, url in zip(self.dbases, loc.urls())
+        ]
+
     def cache(self, root: str, fetcher=None, num_tasks=None) -> list[tuple[str, str, str]]:
         """Reference-parity ingest (``Metadata.cache()``, accessor.py:300-313):
         synthesize the per-data-source catalog URLs and fetch the missing
-        files into the lake layout ``{lake}/{dbase}/metadata/`` on executors
-        (idempotent — existing files report "cached"). Returns per-file
-        (url, path, status); raises :class:`FetchError` if any fetch failed."""
-        loc = CatalogLocator(root=root, organism=self.organism, dbases=self.dbases)
-        rows = [
-            (url, os.path.join(self.lake_dir, db, "metadata", os.path.basename(url)))
-            for db, url in zip(self.dbases, loc.urls())
-        ]
-        return _fetch_all(self.spark, rows, fetcher, num_tasks)
+        files into the lake on executors (idempotent — existing files report
+        "cached"). Returns per-file (url, path, status); raises
+        :class:`FetchError` if any fetch failed."""
+        return _fetch_all(self.spark, self._lake_files(root), fetcher, num_tasks)
 
     def load(self) -> DataFrame:
-        paths = sorted(
-            _glob.glob(os.path.join(self.lake_dir, "*", "metadata", "*recount_project*"))
-        )
-        if not paths:
-            raise FileNotFoundError(
-                f"no catalog files under {self.lake_dir}/*/metadata/"
-            )
-        out = read_tsv_strings(self.spark, paths)
+        out = read_tsv_strings(self.spark, [path for _, path in self._lake_files()])
         if "organism" in out.columns:
             out = out.withColumn(
                 "organism", value_remap(F.col("organism"), ORGANISM_REMAP)
@@ -143,6 +140,7 @@ class Project:
     dbase: str
     annotation: Annotation | None = None
     jxn_format: str = "all"
+    organism: str = "human"
 
     # ---- derived coordinates (A3, accessor.py:56-57) ----
     @cached_property
@@ -165,30 +163,17 @@ class Project:
         self,
         root: str,
         dtypes: Dtype | tuple[Dtype, ...] = (Dtype.METADATA,),
-        organism: str = "human",
         fetcher=None,
         num_tasks=None,
     ) -> list[tuple[str, str, str]]:
         """``Project.cache(dtypes)``: synthesize every project's URLs for
-        the requested dtypes and fetch the missing files into
-        ``{lake}/{dbase}/{dtype}/{project}/`` on executors. Idempotent;
-        returns per-file (url, path, status); raises :class:`FetchError` if
-        any fetch failed."""
+        the requested dtypes and fetch the missing files to their
+        :meth:`_lake_files` paths on executors. Idempotent; returns per-file
+        (url, path, status); raises :class:`FetchError` if any fetch failed."""
         if isinstance(dtypes, Dtype):
             dtypes = (dtypes,)
-        loc = ProjectLocator(root, organism, self.dbase, self.project_ids, self.annotation,
-                             self.jxn_format, self.samples_by_project)
-        rows = []
-        for dtype in dtypes:
-            for pid, url in loc.urls(dtype):
-                folder = self._project_dir(dtype, pid)
-                if ".gtf" in os.path.basename(url):
-                    # Shared annotation: one copy per dtype at the level
-                    # _load_counts globs ({lake}/{dbase}/{dtype}/*.{ann}.gtf*),
-                    # deduped across projects below.
-                    folder = os.path.dirname(folder)
-                rows.append((url, os.path.join(folder, os.path.basename(url))))
-        rows = list(dict.fromkeys(rows))  # dedup shared-annotation fetches
+        rows = [(url, path) for dtype in dtypes for _, url, path in self._lake_files(dtype, root)]
+        rows = list(dict.fromkeys(rows))  # the shared GTF is fetched once
         return _fetch_all(self.spark, rows, fetcher, num_tasks)
 
     # ---- loader registry (Q10, accessor.py:63-74) ----
@@ -204,20 +189,37 @@ class Project:
             return loader(dtype)
         return loader()
 
-    def _project_dir(self, dtype: Dtype, project_id: str) -> str:
-        return os.path.join(self.lake_dir, self.dbase, dtype.value, project_id)
+    # ---- the lake layout: the one map from locator URLs to lake paths ----
+    def _lake_files(self, dtype: Dtype, root: str = "") -> list[tuple[str, str, str]]:
+        """``(project_id, url, lake_path)`` of every ``dtype`` file of the
+        selection: ``{lake}/{dbase}/{dtype}/{project}/{name}``, with the
+        shared annotation GTF one level up. ``name`` is the URL's file name,
+        so the paths do not depend on ``root``."""
+        loc = ProjectLocator(root, self.organism, self.dbase, self.project_ids, self.annotation,
+                             self.jxn_format, self.samples_by_project)
+        folder = os.path.join(self.lake_dir, self.dbase, dtype.value)
+        return [
+            (pid, url, os.path.join(folder, "" if ".gtf" in name else pid, name))
+            for pid, url in loc.urls(dtype)
+            for name in [posixpath.basename(url)]
+        ]
 
-    def _project_files(self, dtype: Dtype, pattern: str) -> dict[str, list[str]]:
-        """Project -> its sorted files matching ``pattern``; raises naming
-        every selected project with no match."""
-        hits = {
-            pid: sorted(_glob.glob(os.path.join(self._project_dir(dtype, pid), pattern)))
-            for pid in self.samples_by_project
+    def _lake_paths(self, dtype: Dtype) -> list[tuple[str, str]]:
+        """``(project_id, lake_path)`` of every ``dtype`` file a load reads;
+        raises naming each project and file missing from the lake, from one
+        listing per folder."""
+        rows = [(pid, path) for pid, _, path in self._lake_files(dtype)]
+        present = {
+            os.path.join(folder, name)
+            for folder in {os.path.dirname(path) for _, path in rows}
+            if os.path.isdir(folder)
+            for name in os.listdir(folder)
         }
-        missing = [pid for pid, files in hits.items() if not files]
+        missing = [(pid, os.path.basename(path)) for pid, path in rows if path not in present]
         if missing:
-            raise FileNotFoundError(f"no {dtype.value} files matching {pattern!r} for {missing}")
-        return hits
+            pids, names = (sorted(set(col)) for col in zip(*missing))
+            raise FileNotFoundError(f"no {dtype.value} files {names} in the lake for {pids}")
+        return rows
 
     # ---- Q2 + Q11: one cross-project read per tag -> join, memoized ----
     def load_metadata(self) -> DataFrame:
@@ -225,9 +227,10 @@ class Project:
 
     @cached_property
     def _project_metadata(self) -> DataFrame:
+        names = [(os.path.basename(path), path) for _, path in self._lake_paths(Dtype.METADATA)]
         frames = [
             read_tsv_strings(
-                self.spark, sum(self._project_files(Dtype.METADATA, f"*.{tag}.*").values(), [])
+                self.spark, [p for n, p in names if n.startswith(f"{self.dbase}.{tag}.")]
             )
             for tag in metadata_tags(self.dbase)
         ]
@@ -242,26 +245,21 @@ class Project:
 
     # ---- Q3: shared GTF + per-project counts -> long union ----
     def _load_counts(self, dtype: Dtype) -> tuple[DataFrame, DataFrame]:
-        if self.annotation is None:
-            raise ValueError(f"{dtype.value} requires an annotation (locator.py:19-20)")
-        anno_hits = sorted(_glob.glob(os.path.join(
-            self.lake_dir, self.dbase, dtype.value, f"*.{self.annotation.value}.gtf*"
-        )))
-        if not anno_hits:
-            raise FileNotFoundError(
-                f"no {dtype.value} GTF annotation for {self.annotation.value} in lake"
-            )
-        annotation = with_gtf_attributes(read_gtf(self.spark, anno_hits[0]))
+        # the locator raises ValueError for a counts dtype without an annotation
+        files = self._lake_paths(dtype)
+        gtf = next(path for _, path in files if ".gtf" in os.path.basename(path))
+        annotation = with_gtf_attributes(read_gtf(self.spark, gtf))
 
         columns = {}
-        for pid, files in self._project_files(dtype, f"*{self.annotation.value}*").items():
+        for pid, path in files:
+            if path == gtf:
+                continue
             samples = set(self.samples_by_project[pid])
-            headers = {path: tsv_header(path) for path in files}
-            missing = samples.difference(*headers.values())
+            names = tsv_header(path)
+            missing = samples.difference(names)
             if missing:  # P1 raise semantics (accessor.py:276-278)
                 raise KeyError(f"samples missing from counts for {pid}: {sorted(missing)}")
-            for path, names in headers.items():
-                columns[path] = {i: n for i, n in enumerate(names) if i and n in samples}
+            columns[path] = {i: n for i, n in enumerate(names) if i and n in samples}
         # one scan melts every file; J2 align-merge is a union in long form (SURVEY §2.3)
         long = read_tsv_cells(self.spark, columns).select(
             F.col("key").alias("feature_id"),
@@ -287,14 +285,14 @@ class Project:
 
     # ---- Q5: junctions stay COO; width check vs the id dim table ----
     def _load_junctions(self) -> tuple[DataFrame, DataFrame]:
-        # the format token, case-insensitively: the locator writes .ALL., some lakes .all.
-        fmt = "".join(f"[{c.lower()}{c.upper()}]" for c in self.jxn_format)
+        files = self._lake_paths(Dtype.JXN)
         id_files, mm_files, rr_files = (
-            self._project_files(Dtype.JXN, f"*.{fmt}.{kind}*") for kind in ("ID", "MM", "RR")
+            {pid: path for pid, path in files if f".{kind}." in os.path.basename(path)}
+            for kind in ("ID", "MM", "RR")
         )
         for pid in self.project_ids:
-            _, n_cols, _ = matrix_market_dims(mm_files[pid][0])
-            n_ids = id_list_length(id_files[pid][0])
+            _, n_cols, _ = matrix_market_dims(mm_files[pid])
+            n_ids = id_list_length(id_files[pid])
             if n_cols != n_ids:  # accessor.py:434-435, loud
                 raise ValueError(
                     f"junction width mismatch for {pid}: MM has {n_cols} cols, "
@@ -302,17 +300,13 @@ class Project:
                 )
         # P8 provenance: the lake layout puts each file in its project's folder
         project_id = input_file_part(-2).alias("project_id")
-        coo = read_matrix_market_coo(self.spark, [mm_files[pid][0] for pid in self.project_ids])
-        coords = read_tsv_strings(self.spark, [rr_files[pid][0] for pid in self.project_ids])
+        coo = read_matrix_market_coo(self.spark, list(mm_files.values()))
+        coords = read_tsv_strings(self.spark, list(rr_files.values()))
         return coo.select("*", project_id), coords.select("*", project_id)
 
     # ---- Q6: manifest only, payloads never parsed ----
     def _load_bigwig_manifest(self) -> DataFrame:
-        rows = [
-            (pid, "file://" + path, path)
-            for pid, paths in self._project_files(Dtype.BW, "*").items()
-            for path in paths
-        ]
+        rows = [(pid, "file://" + path, path) for pid, path in self._lake_paths(Dtype.BW)]
         return local_frame(self.spark, rows, ["project_id", "url", "path"])
 
     # ---- Q7/Q8: scaling as broadcast joins (no dict round-trip) ----

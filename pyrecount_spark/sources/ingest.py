@@ -16,13 +16,10 @@ reference pre-filters URL lists (accessor.py:320-323 → SURVEY §4).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
-
-from pyrecount_spark.session import local_frame
+from pyspark.sql import DataFrame
 
 # Fetcher signature: (url, dest_path) -> None. Injected so offline harnesses
 # and tests use file copies; production uses urllib. No aiohttp dependency.
@@ -39,21 +36,6 @@ class FetchError(OSError):
             f"{len(errors)} file(s) failed to fetch: "
             + "; ".join(f"{url} ({status})" for url, status in errors.items())
         )
-
-
-def mirror_path(cache_dir: str, url: str) -> str:
-    """Local path mirroring the URL path (utils.py:12-20 layout).
-
-    The URL tail is always relativized (leading '/' stripped) — an absolute
-    tail would make ``os.path.join`` silently *discard* cache_dir and point
-    the "cache" at the source itself."""
-    tail = url.split("://", 1)[-1].lstrip("/")
-    return os.path.join(cache_dir, tail)
-
-
-def build_manifest(spark: SparkSession, urls: Sequence[str], cache_dir: str) -> DataFrame:
-    """Manifest DataFrame (url, path) — the unit of ingest work."""
-    return local_frame(spark, [(u, mirror_path(cache_dir, u)) for u in urls], ["url", "path"])
 
 
 def fetch_manifest_df(
@@ -73,9 +55,12 @@ def fetch_manifest_df(
     data instead of pulling it through the driver; only the convenience
     facade (``fetch_manifest`` / ``api.Project.cache``) collects.
 
-    Fetches are atomic: bytes land in a same-directory temp file and are
-    ``os.replace``d into place on success, so an interrupted fetch can never
-    leave a partial file that a later run mistakes for "cached".
+    Fetches are atomic: bytes land in a same-directory temp file
+    (``{name}.part.XXXX``) and are ``os.replace``d into place on success, so
+    an interrupted fetch can never leave a partial file that a later run
+    mistakes for "cached". A ``.part.`` file that a killed task leaves behind
+    is never loaded either: the ``api`` loaders read only the paths
+    ``cache`` fetches to.
 
     The executor closure is self-contained (no module-level references):
     cloudpickle ships it by value, so the job runs even on executors that

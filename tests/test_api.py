@@ -27,6 +27,12 @@ def _tsv(*rows: str) -> str:
     return "\n".join(rows) + "\n"
 
 
+def _gz(path: Path, text: str) -> None:
+    """Write ``text`` gzipped: lake files carry the names and compression the
+    catalog locator gives them, the paths ``cache`` writes."""
+    path.write_bytes(gzip.compress(text.encode()))
+
+
 @pytest.fixture(scope="module")
 def lake(tmp_path_factory):
     root = tmp_path_factory.mktemp("lake")
@@ -44,16 +50,23 @@ def lake(tmp_path_factory):
     )
     with gzip.open(meta / "sra.recount_project.MD.gz", "wt") as fh:
         fh.write(catalog)
+    # another data source's catalog, which Metadata(dbases=("sra",)) never reads
+    gtex_meta = root / "gtex" / "metadata"
+    gtex_meta.mkdir(parents=True)
+    _gz(gtex_meta / "gtex.recount_project.MD.gz", _tsv(
+        "rail_id\texternal_id\tstudy\tproject\torganism",
+        "r9\ts9\tst9\tGTEX1\tHomo sapiens",
+    ))
 
     # per-project metadata tags (P1 only needs full tags for scaling test)
     for pid, samples in [("P1", ["s1", "s2"]), ("P2", ["s3"])]:
         pdir = meta / pid
         pdir.mkdir()
         key_rows = [f"r{s[1:]}\t{s}\tst{1 if pid == 'P1' else 2}" for s in samples]
-        (pdir / f"sra.sra.{pid}.MD").write_text(
+        _gz(pdir / f"sra.sra.{pid}.MD.gz",
             _tsv("rail_id\texternal_id\tstudy", *key_rows)
         )
-        (pdir / f"sra.recount_project.{pid}.MD").write_text(
+        _gz(pdir / f"sra.recount_project.{pid}.MD.gz",
             _tsv("rail_id\texternal_id\tstudy\tproject",
                  *[f"{r}\t{pid}" for r in key_rows])
         )
@@ -62,56 +75,62 @@ def lake(tmp_path_factory):
             "s2": "2000000\t100.0\t100.0\t10000000",
             "s3": "1000000\t100.0\t100.0\t10000000",
         }
-        (pdir / f"sra.recount_qc.{pid}.MD").write_text(
+        _gz(pdir / f"sra.recount_qc.{pid}.MD.gz",
             _tsv(
                 "rail_id\texternal_id\tstudy\tstar.all_mapped_reads\t"
                 "star.average_mapped_length\tavg_len\tbc_auc.all_reads_all_bases",
                 *[f"{r}\t{qc_rows[s]}" for r, s in zip(key_rows, samples)],
             )
         )
-        (pdir / f"sra.recount_seq_qc.{pid}.MD").write_text(
+        _gz(pdir / f"sra.recount_seq_qc.{pid}.MD.gz",
             _tsv("rail_id\texternal_id\tstudy\tseq_stat", *[f"{r}\tok" for r in key_rows])
         )
-        (pdir / f"sra.recount_pred.{pid}.MD").write_text(
+        _gz(pdir / f"sra.recount_pred.{pid}.MD.gz",
             _tsv("rail_id\texternal_id\tstudy\tpred", *[f"{r}\tx" for r in key_rows])
         )
 
     # gene: shared GTF + per-project wide counts (overlapping gene sets, J2)
     gene = sra / "gene_sums"
     gene.mkdir()
-    (gene / "human.gene_sums.G029.gtf").write_text(
+    _gz(gene / "human.gene_sums.G029.gtf.gz",
         "#!genome\n"
         'chr1\tHAVANA\tgene\t1\t100\t.\t+\t.\tgene_id "g1"; gene_name "G_ONE";\n'
         'chr1\tHAVANA\tgene\t200\t300\t.\t-\t.\tgene_id "g2";\n'
     )
     g1 = gene / "P1"
     g1.mkdir()
-    (g1 / "sra.gene_sums.P1.G029.tsv").write_text(
+    _gz(g1 / "sra.gene_sums.P1.G029.gz",
         _tsv("#comment", "gene_id\ts1\ts2", "g1\t10\t100", "g2\t20\t200")
+    )
+    # the temp file of a killed fetch (ingest writes {name}.part.XXXX next to
+    # the file): no load may read it
+    (g1 / "sra.gene_sums.P1.G029.gz.part.k3x9").write_text(
+        _tsv("gene_id\ts1\ts2", "g1\t10\t100")
     )
     g2 = gene / "P2"
     g2.mkdir()
-    (g2 / "sra.gene_sums.P2.G029.tsv").write_text(
+    _gz(g2 / "sra.gene_sums.P2.G029.gz",
         _tsv("#comment", "gene_id\ts3", "g2\t7", "g3\t9")
     )
 
     # exon: composite-key counts for P1
     exon = sra / "exon_sums"
     exon.mkdir()
-    (exon / "human.exon_sums.G029.gtf").write_text(
+    _gz(exon / "human.exon_sums.G029.gtf.gz",
         'chr1\tHAVANA\texon\t1\t50\t.\t+\t.\tgene_id "g1"; exon_id "e1";\n'
     )
     e1 = exon / "P1"
     e1.mkdir()
-    (e1 / "sra.exon_sums.P1.G029.tsv").write_text(
+    _gz(e1 / "sra.exon_sums.P1.G029.gz",
         _tsv("exon_key\ts1\ts2", "chr1|11869|12227|+\t5\t6", "chr2|100|200|-\t0\t3")
     )
 
     # junctions triplet for P1 (2 samples -> MM width 2)
     jxn = sra / "junctions" / "P1"
     jxn.mkdir(parents=True)
-    (jxn / "sra.junctions.P1.all.ID.csv").write_text("rail_id\n1\n2\n")
-    (jxn / "sra.junctions.P1.all.MM.mtx").write_text(
+    _gz(jxn / "sra.junctions.P1.ALL.ID.gz", "rail_id\n1\n2\n")
+    _gz(
+        jxn / "sra.junctions.P1.ALL.MM.gz",
         textwrap.dedent(
             """\
             %%MatrixMarket matrix coordinate integer general
@@ -122,7 +141,7 @@ def lake(tmp_path_factory):
             """
         )
     )
-    (jxn / "sra.junctions.P1.all.RR.tsv").write_text(
+    _gz(jxn / "sra.junctions.P1.ALL.RR.gz",
         _tsv("chromosome\tstart\tend", "chr1\t10\t20", "chr1\t30\t40", "chr2\t5\t9")
     )
 
@@ -131,6 +150,7 @@ def lake(tmp_path_factory):
     bw.mkdir(parents=True)
     (bw / "sra.base_sums.P1_s1.ALL.bw").write_bytes(b"bw1")
     (bw / "sra.base_sums.P1_s2.ALL.bw").write_bytes(b"bw2")
+    (bw / "sra.base_sums.P1_s1.ALL.bw.part.k3x9").write_bytes(b"bw")  # a killed fetch's
     bw2 = sra / "base_sums" / "P2"
     bw2.mkdir(parents=True)
     (bw2 / "sra.base_sums.P2_s3.ALL.bw").write_bytes(b"bw3")
@@ -154,7 +174,7 @@ def project(spark, lake, catalog_df):
 
 def test_catalog_load_gz_union_remap_distinct(catalog_df):
     rows = catalog_df.collect()
-    assert len(rows) == 3  # dup removed
+    assert len(rows) == 3  # dup removed, the lake's gtex catalog not read
     assert {r.organism for r in rows} == {"human"}  # F3 remap
 
 
@@ -194,6 +214,8 @@ def test_gene_load_long_and_wide_view(spark, lake, project, tmp_path):
         assert len(got) == 6
         assert got[("g1", "s1")] == 10 and got[("g2", "s3")] == 7
         assert ("g3", "s3") in got and ("g3", "s1") not in got
+        sums = {r[0]: r[1] for r in counts.groupBy("sample_id").agg(F.sum("count")).collect()}
+        assert sums == {"s1": 30, "s2": 300, "s3": 16}  # P1's .part. leftover unread
         wide = pivot_wide(counts, "feature_id", "sample_id", "count", ["s1", "s2", "s3"])
         g2 = {r.feature_id: (r.s1, r.s2, r.s3) for r in wide.collect()}["g2"]
         assert g2 == (20, 200, 7)  # align-merge semantics in long form
@@ -265,21 +287,30 @@ def test_junction_width_mismatch_raises(spark, lake, catalog_df, project):
     )
     import pathlib
 
-    idf = pathlib.Path(lake) / "sra/junctions/P1/sra.junctions.P1.all.ID.csv"
-    original = idf.read_text()
-    idf.write_text("rail_id\n1\n")
+    idf = pathlib.Path(lake) / "sra/junctions/P1/sra.junctions.P1.ALL.ID.gz"
+    original = idf.read_bytes()
+    _gz(idf, "rail_id\n1\n")
     try:
         with pytest.raises(ValueError, match="width mismatch"):
             bad.load(Dtype.JXN)
     finally:
-        idf.write_text(original)
+        idf.write_bytes(original)
 
 
-def test_bigwig_manifest(project):
+def test_bigwig_manifest(spark, lake, project):
+    """One row per selected sample: not the .part. leftover next to P1's
+    files, and for a one-sample selection only that sample's file."""
     mf = project.load(Dtype.BW)
     p1 = mf.filter(F.col("project_id") == "P1")
     assert p1.count() == 2  # one row per sample (test_accessor.py:313)
     assert all(r.url.startswith("file://") for r in p1.collect())
+    only_s1 = Project(
+        spark, metadata=project.metadata.filter(F.col("external_id") == "s1"), lake_dir=lake,
+        dbase="sra",
+    )
+    assert [r.path for r in only_s1.load(Dtype.BW).collect()] == [
+        f"{lake}/sra/base_sums/P1/sra.base_sums.P1_s1.ALL.bw"
+    ]
 
 
 def test_scale_auc_end_to_end(project):
@@ -407,15 +438,15 @@ def test_loads_pick_the_requested_annotation_and_junction_format(spark, lake_cop
     """With a second annotation's GTF and a UNIQUE junction triplet in the
     lake, each load reads the files of its own annotation and jxn_format,
     not whichever sorts first."""
-    (lake_copy / "sra/gene_sums/human.gene_sums.G026.gtf").write_text(
+    _gz(lake_copy / "sra/gene_sums/human.gene_sums.G026.gtf.gz",
         'chr1\tHAVANA\tgene\t1\t100\t.\t+\t.\tgene_id "g26";\n'
     )
     jxn = lake_copy / "sra/junctions/P1"
-    (jxn / "sra.junctions.P1.UNIQUE.ID.csv").write_text("rail_id\n1\n2\n")
-    (jxn / "sra.junctions.P1.UNIQUE.MM.mtx").write_text(
+    _gz(jxn / "sra.junctions.P1.UNIQUE.ID.gz", "rail_id\n1\n2\n")
+    _gz(jxn / "sra.junctions.P1.UNIQUE.MM.gz",
         "%%MatrixMarket matrix coordinate integer general\n1 2 1\n1 2 8\n"
     )
-    (jxn / "sra.junctions.P1.UNIQUE.RR.tsv").write_text(
+    _gz(jxn / "sra.junctions.P1.UNIQUE.RR.gz",
         _tsv("chromosome\tstart\tend", "chr3\t1\t2")
     )
 
@@ -444,11 +475,11 @@ def test_loads_scan_each_file_kind_once_whatever_the_project_count(
     jobs at 8 projects as at 2."""
     jxn = lake_copy / "sra/junctions/P2"
     jxn.mkdir()
-    (jxn / "sra.junctions.P2.all.ID.csv").write_text("rail_id\n3\n")
-    (jxn / "sra.junctions.P2.all.MM.mtx").write_text(
+    _gz(jxn / "sra.junctions.P2.ALL.ID.gz", "rail_id\n3\n")
+    _gz(jxn / "sra.junctions.P2.ALL.MM.gz",
         "%%MatrixMarket matrix coordinate integer general\n2 1 2\n1 1 7\n2 1 9\n"
     )
-    (jxn / "sra.junctions.P2.all.RR.tsv").write_text(
+    _gz(jxn / "sra.junctions.P2.ALL.RR.gz",
         _tsv("chromosome\tstart\tend", "chr1\t10\t20", "chr2\t5\t9")
     )
     for k in range(3, 9):
@@ -456,8 +487,8 @@ def test_loads_scan_each_file_kind_once_whatever_the_project_count(
             clone = lake_copy / f"sra/{dtype}/P{k}"
             clone.mkdir()
             for f in (lake_copy / f"sra/{dtype}/P2").iterdir():
-                text = f.read_text().replace("\ts3\n", f"\ts3_{k}\n")
-                (clone / f.name.replace(".P2.", f".P{k}.")).write_text(text)
+                text = gzip.decompress(f.read_bytes()).decode().replace("\ts3\n", f"\ts3_{k}\n")
+                _gz(clone / f.name.replace(".P2.", f".P{k}."), text)
 
     def scans(df):
         return df._jdf.queryExecution().executedPlan().toString().count("FileScan csv")
@@ -482,14 +513,14 @@ def test_loads_scan_each_file_kind_once_whatever_the_project_count(
 def test_missing_tag_file_raises_naming_project(spark, lake_copy, catalog_df):
     """A project without one metadata tag file fails the load instead of
     returning that tag's columns as nulls."""
-    (lake_copy / "sra/metadata/P2/sra.recount_seq_qc.P2.MD").unlink()
+    (lake_copy / "sra/metadata/P2/sra.recount_seq_qc.P2.MD.gz").unlink()
     proj = Project(spark, metadata=catalog_df, lake_dir=str(lake_copy), dbase="sra")
     with pytest.raises(FileNotFoundError, match=r"recount_seq_qc.*\['P2'\]"):
         proj.load(Dtype.METADATA)
 
 
 def test_empty_tsv_raises_naming_file(spark, lake_copy, catalog_df):
-    empty = lake_copy / "sra/metadata/P1/sra.recount_pred.P1.MD"
+    empty = lake_copy / "sra/metadata/P1/sra.recount_pred.P1.MD.gz"
     empty.write_text("")
     proj = Project(spark, metadata=catalog_df, lake_dir=str(lake_copy), dbase="sra")
     with pytest.raises(ValueError, match=re.escape(str(empty))):
@@ -500,11 +531,9 @@ def test_truncated_gzip_fails_first_action_naming_file(spark, lake_copy, catalog
     """A gene_sums .gz cut in half: load() returns (its header is read on the
     driver from the intact start), then the first action fails with Spark's
     FAILED_READ_FILE naming the file, so no partial rows come back."""
-    tsv = lake_copy / "sra/gene_sums/P1/sra.gene_sums.P1.G029.tsv"
+    cut = lake_copy / "sra/gene_sums/P1/sra.gene_sums.P1.G029.gz"
     body = _tsv("gene_id\ts1\ts2", *[f"g{i}\t{i}\t{2 * i}" for i in range(5000)])
     data = gzip.compress(body.encode())
-    tsv.unlink()
-    cut = tsv.with_name(tsv.name + ".gz")
     cut.write_bytes(data[: len(data) // 2])
     proj = Project(
         spark, metadata=catalog_df.filter(F.col("project") == "P1"),

@@ -3,9 +3,11 @@
 from __future__ import annotations
 
 import os
+import posixpath
 
 import pytest
 
+from pyrecount_spark.session import local_frame
 from pyrecount_spark.sources.catalog import (
     Annotation,
     CatalogLocator,
@@ -14,12 +16,16 @@ from pyrecount_spark.sources.catalog import (
     discover_data_sources,
     shard2,
 )
-from pyrecount_spark.sources.ingest import (
-    build_manifest,
-    fetch_manifest,
-    land_parquet,
-    mirror_path,
-)
+from pyrecount_spark.sources.ingest import fetch_manifest, land_parquet
+
+
+def _dest(cache_dir, url):
+    return os.path.join(cache_dir, posixpath.basename(url))
+
+
+def _manifest(spark, urls, cache_dir):
+    """(url, path) manifest as ``api`` builds it: an Arrow-built local frame."""
+    return local_frame(spark, [(u, _dest(cache_dir, u)) for u in urls], ["url", "path"])
 
 
 def _locator(**kw):
@@ -77,7 +83,7 @@ def test_fetch_manifest_idempotent(spark, tmp_path):
     """S5/S6 exists-skip semantics, executor-side, with an injected fetcher."""
     cache = str(tmp_path / "cache")
     urls = [f"https://example.org/f{i}.txt" for i in range(3)]
-    manifest = build_manifest(spark, urls, cache)
+    manifest = _manifest(spark, urls, cache)
 
     def fake_fetcher(url: str, dest: str) -> None:
         with open(dest, "w") as fh:
@@ -87,13 +93,13 @@ def test_fetch_manifest_idempotent(spark, tmp_path):
     assert set(first.values()) == {"fetched"}
     second = dict((u, s) for u, _, s in fetch_manifest(manifest, fake_fetcher))
     assert set(second.values()) == {"cached"}  # idempotent re-run
-    assert open(mirror_path(cache, urls[0])).read() == urls[0]
+    assert open(_dest(cache, urls[0])).read() == urls[0]
 
 
 def test_fetch_manifest_per_file_errors(spark, tmp_path):
     """One bad URL doesn't fail the job (unlike accessor.py:327-329's
     silent None — the status row carries the error loudly)."""
-    manifest = build_manifest(spark, ["https://x/ok", "https://x/bad"], str(tmp_path))
+    manifest = _manifest(spark, ["https://x/ok", "https://x/bad"], str(tmp_path))
 
     def flaky(url: str, dest: str) -> None:
         if url.endswith("bad"):
@@ -144,8 +150,8 @@ def test_fetch_is_atomic_on_failure(spark, tmp_path):
     into place only on success."""
     cache = str(tmp_path / "atomic")
     url = "https://example.org/big.bin"
-    manifest = build_manifest(spark, [url], cache)
-    dest = mirror_path(cache, url)
+    manifest = _manifest(spark, [url], cache)
+    dest = _dest(cache, url)
 
     def dies_midway(u: str, d: str) -> None:
         with open(d, "w") as fh:
@@ -170,7 +176,7 @@ def test_fetch_manifest_df_is_distributed(spark, tmp_path):
     the data at 10^7-file scale), not through the driver."""
     from pyrecount_spark.sources.ingest import fetch_manifest_df
 
-    manifest = build_manifest(
+    manifest = _manifest(
         spark, [f"https://x/f{i}" for i in range(4)], str(tmp_path / "df")
     )
 
@@ -215,12 +221,12 @@ def test_live_http_ingest_end_to_end(spark, tmp_path):
                 f"http://127.0.0.1:{port}/sra.recount_project.MD",
                 f"http://127.0.0.1:{port}/missing.MD",  # 404 path
             ]
-            manifest = build_manifest(spark, urls, cache)
+            manifest = _manifest(spark, urls, cache)
             statuses = {u: s for u, _, s in fetch_manifest(manifest)}  # default urllib fetch
             assert statuses[urls[0]] == "fetched"
             assert statuses[urls[1]].startswith("error") and "404" in statuses[urls[1]]
 
-            fetched = mirror_path(cache, urls[0])
+            fetched = _dest(cache, urls[0])
             df = read_tsv_strings(spark, fetched)
             lake = str(tmp_path / "http_lake")
             land_parquet(df.withColumn("study", df["study"]), lake, partition_by=["study"])
@@ -238,12 +244,12 @@ def test_fetch_runs_one_arrow_stage_sized_by_manifest(spark, tmp_path, job_group
     def fake(u: str, d: str) -> None:
         open(d, "w").write(u)
 
-    one = build_manifest(spark, ["https://x/one"], str(tmp_path / "one"))
+    one = _manifest(spark, ["https://x/one"], str(tmp_path / "one"))
     statuses, jobs, tasks = job_group("test-ingest-one-url", lambda: fetch_manifest(one, fake))
     assert [s for _, _, s in statuses] == ["fetched"]
     assert (len(jobs), tasks) == (1, 1)
 
-    five = build_manifest(spark, [f"https://x/f{i}" for i in range(5)], str(tmp_path / "five"))
+    five = _manifest(spark, [f"https://x/f{i}" for i in range(5)], str(tmp_path / "five"))
     statuses, jobs, tasks = job_group("test-ingest-five-urls", lambda: fetch_manifest(five, fake))
     assert len(statuses) == 5
     assert (len(jobs), tasks) == (1, min(5, spark.sparkContext.defaultParallelism))
@@ -252,13 +258,13 @@ def test_fetch_runs_one_arrow_stage_sized_by_manifest(spark, tmp_path, job_group
 
 
 def test_manifest_is_local_relation(spark, tmp_path):
-    manifest = build_manifest(spark, ["https://x/a", "https://x/b"], str(tmp_path))
+    manifest = _manifest(spark, ["https://x/a", "https://x/b"], str(tmp_path))
     assert manifest._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
 
 
 def test_empty_manifest(spark, tmp_path):
     """An empty URL list keeps its (url, path) string schema and fetches
     nothing."""
-    manifest = build_manifest(spark, [], str(tmp_path))
+    manifest = _manifest(spark, [], str(tmp_path))
     assert manifest.columns == ["url", "path"]
     assert fetch_manifest(manifest) == []
