@@ -150,7 +150,7 @@ def lake(tmp_path_factory):
     bw.mkdir(parents=True)
     (bw / "sra.base_sums.P1_s1.ALL.bw").write_bytes(b"bw1")
     (bw / "sra.base_sums.P1_s2.ALL.bw").write_bytes(b"bw2")
-    (bw / "sra.base_sums.P1_s1.ALL.bw.part.k3x9").write_bytes(b"bw")  # a killed fetch's
+    (bw / "sra.base_sums.P1_s1.ALL.bw.part.k3x9").write_bytes(b"bw")  # a killed fetch's temp file
     bw2 = sra / "base_sums" / "P2"
     bw2.mkdir(parents=True)
     (bw2 / "sra.base_sums.P2_s3.ALL.bw").write_bytes(b"bw3")
