@@ -30,14 +30,16 @@ Differences from the reference, by design (SURVEY §1.3):
 - a failed read raises; no silent ``None``/empty fallbacks
   (accessor.py:327-335 quirks intentionally not replicated); a load raises
   ``FileNotFoundError`` naming each project and file missing from the lake;
-- ``cache`` fetches the manifest one locator builds for the whole
-  selection, then raises ``FetchError`` naming every URL that failed;
+- ``cache`` is one ``ingest.fetch_manifest`` call over the URLs one
+  locator builds for the whole selection; it raises ``FetchError`` naming
+  every URL that failed;
 - driver-sized frames (manifests) are built from Arrow as JVM local
   relations, so they start no Python worker task.
 
-Lake layout (FIXTURES.md): ``Project._lake_files`` maps each locator URL to
-``{lake}/{dbase}/{dtype}/{project}/{name}`` (the shared GTF one level up;
-catalogs at ``{lake}/{dbase}/metadata/{name}``). ``cache`` writes and the
+Lake layout (FIXTURES.md): ``_lake_path`` is the one rule for where a URL
+lands, ``{lake}/{dbase}/{dtype}/{project}/{name}`` (catalogs and the shared
+GTF have no project folder). ``Metadata._lake_files`` and
+``Project._lake_files`` pair each URL with it; ``cache`` writes and the
 loaders read exactly those paths, routed by name as the reference does, so
 no other file, such as a killed fetch's ``.part.`` temp file, is ever read.
 """
@@ -57,9 +59,9 @@ from pyrecount_spark.functions.scalars import ORGANISM_REMAP, value_remap
 from pyrecount_spark.operators import matrix as M
 from pyrecount_spark.operators.relational import multi_join
 from pyrecount_spark.session import local_frame
-from pyrecount_spark.sources.catalog import Annotation, CatalogLocator, Dtype, ProjectLocator
-from pyrecount_spark.sources.catalog import metadata_tags
-from pyrecount_spark.sources.ingest import FetchError, fetch_manifest
+from pyrecount_spark.sources.catalog import Annotation, Dtype, ProjectLocator
+from pyrecount_spark.sources.catalog import catalog_url, metadata_tags
+from pyrecount_spark.sources.ingest import fetch_manifest
 from pyrecount_spark.sources.readers import (
     id_list_length,
     input_file_part,
@@ -74,17 +76,21 @@ from pyrecount_spark.sources.readers import (
 METADATA_JOIN_KEY = ["rail_id", "external_id", "study"]  # accessor.py:470
 
 
-def _fetch_all(spark: SparkSession, rows, fetcher, num_tasks) -> list[tuple[str, str, str]]:
-    """Fetch every (url, path) row, then raise :class:`FetchError` naming
-    each URL that failed; fetched files stay, so a rerun reports them
-    "cached" and fetches only the rest."""
-    statuses = fetch_manifest(
-        local_frame(spark, rows, ["url", "path"]), fetcher=fetcher, num_tasks=num_tasks
-    )
-    errors = {url: status for url, _, status in statuses if status.startswith("error")}
-    if errors:
-        raise FetchError(errors)
-    return statuses
+def _lake_path(lake_dir: str, dbase: str, dtype: Dtype, url: str, project: str = "") -> str:
+    """The one rule for where a URL lands in the lake:
+    ``{lake}/{dbase}/{dtype}/{project}/{name}``, ``name`` being the URL's
+    file name, so the path does not depend on the root. A catalog and the
+    shared annotation GTF have no project folder."""
+    name = posixpath.basename(url)
+    return os.path.join(lake_dir, dbase, dtype.value, "" if ".gtf" in name else project, name)
+
+
+def _remap_distinct(frame: DataFrame) -> DataFrame:
+    """Distinct rows, with the reference's organism names remapped
+    (``Homo sapiens`` -> ``human``)."""
+    if "organism" in frame.columns:
+        frame = frame.withColumn("organism", value_remap(F.col("organism"), ORGANISM_REMAP))
+    return frame.distinct()
 
 
 class Metadata:
@@ -106,27 +112,23 @@ class Metadata:
     def _lake_files(self, root: str = "") -> list[tuple[str, str]]:
         """``(url, lake_path)`` of each data source's catalog: what ``cache``
         writes and ``load`` reads."""
-        loc = CatalogLocator(root=root, organism=self.organism, dbases=self.dbases)
         return [
-            (url, os.path.join(self.lake_dir, db, "metadata", posixpath.basename(url)))
-            for db, url in zip(self.dbases, loc.urls())
+            (url, _lake_path(self.lake_dir, db, Dtype.METADATA, url))
+            for db in self.dbases
+            for url in [catalog_url(root, self.organism, db)]
         ]
 
-    def cache(self, root: str, fetcher=None, num_tasks=None) -> list[tuple[str, str, str]]:
+    def cache(self, root: str, fetcher=None) -> list[tuple[str, str, str]]:
         """Reference-parity ingest (``Metadata.cache()``, accessor.py:300-313):
         synthesize the per-data-source catalog URLs and fetch the missing
         files into the lake on executors (idempotent — existing files report
         "cached"). Returns per-file (url, path, status); raises
         :class:`FetchError` if any fetch failed."""
-        return _fetch_all(self.spark, self._lake_files(root), fetcher, num_tasks)
+        return fetch_manifest(self.spark, self._lake_files(root), fetcher)
 
     def load(self) -> DataFrame:
-        out = read_tsv_strings(self.spark, [path for _, path in self._lake_files()])
-        if "organism" in out.columns:
-            out = out.withColumn(
-                "organism", value_remap(F.col("organism"), ORGANISM_REMAP)
-            )
-        return out.distinct()
+        paths = [path for _, path in self._lake_files()]
+        return _remap_distinct(read_tsv_strings(self.spark, paths))
 
 
 @dataclass
@@ -162,19 +164,16 @@ class Project:
     def cache(
         self,
         root: str,
-        dtypes: Dtype | tuple[Dtype, ...] = (Dtype.METADATA,),
+        dtypes: tuple[Dtype, ...] = (Dtype.METADATA,),
         fetcher=None,
-        num_tasks=None,
     ) -> list[tuple[str, str, str]]:
         """``Project.cache(dtypes)``: synthesize every project's URLs for
         the requested dtypes and fetch the missing files to their
         :meth:`_lake_files` paths on executors. Idempotent; returns per-file
         (url, path, status); raises :class:`FetchError` if any fetch failed."""
-        if isinstance(dtypes, Dtype):
-            dtypes = (dtypes,)
         rows = [(url, path) for dtype in dtypes for _, url, path in self._lake_files(dtype, root)]
-        rows = list(dict.fromkeys(rows))  # the shared GTF is fetched once
-        return _fetch_all(self.spark, rows, fetcher, num_tasks)
+        # dedup: the shared GTF is fetched once
+        return fetch_manifest(self.spark, list(dict.fromkeys(rows)), fetcher)
 
     # ---- loader registry (Q10, accessor.py:63-74) ----
     def load(self, dtype: Dtype):
@@ -192,16 +191,12 @@ class Project:
     # ---- the lake layout: the one map from locator URLs to lake paths ----
     def _lake_files(self, dtype: Dtype, root: str = "") -> list[tuple[str, str, str]]:
         """``(project_id, url, lake_path)`` of every ``dtype`` file of the
-        selection: ``{lake}/{dbase}/{dtype}/{project}/{name}``, with the
-        shared annotation GTF one level up. ``name`` is the URL's file name,
-        so the paths do not depend on ``root``."""
+        selection, each path given by :func:`_lake_path`."""
         loc = ProjectLocator(root, self.organism, self.dbase, self.project_ids, self.annotation,
                              self.jxn_format, self.samples_by_project)
-        folder = os.path.join(self.lake_dir, self.dbase, dtype.value)
         return [
-            (pid, url, os.path.join(folder, "" if ".gtf" in name else pid, name))
+            (pid, url, _lake_path(self.lake_dir, self.dbase, dtype, url, pid))
             for pid, url in loc.urls(dtype)
-            for name in [posixpath.basename(url)]
         ]
 
     def _lake_paths(self, dtype: Dtype) -> list[tuple[str, str]]:
@@ -237,11 +232,7 @@ class Project:
         out = multi_join(frames, on=METADATA_JOIN_KEY, how="inner").filter(
             F.col("external_id").isin(self.samples)
         )
-        if "organism" in out.columns:
-            out = out.withColumn(
-                "organism", value_remap(F.col("organism"), ORGANISM_REMAP)
-            )
-        return out.distinct().cache()
+        return _remap_distinct(out).cache()
 
     # ---- Q3: shared GTF + per-project counts -> long union ----
     def _load_counts(self, dtype: Dtype) -> tuple[DataFrame, DataFrame]:

@@ -1,10 +1,12 @@
-"""Catalog layer: data coordinates, URL synthesis, endpoint discovery.
+"""Catalog layer: data coordinates and URL synthesis.
 
-Reproduces the reference's addressing scheme (SURVEY.md §1.1, §2.1 S1-S4)
-as a pure-Python driver-side catalog whose *output* is a manifest DataFrame
-consumed by Spark ingest jobs (sources/ingest.py). Semantics sources:
+Reproduces the reference's addressing scheme (SURVEY.md §1.1, §2.1 S3-S4)
+as a pure-Python driver-side catalog whose *output* is the URL list that
+the Spark fetch (sources/ingest.py) downloads. Semantics sources:
 ``/root/reference/src/pyrecount/models.py:7-40`` (enums),
-``locator.py:7-187`` (URL synthesis), ``api.py:14-57`` (discovery).
+``locator.py:7-187`` (URL synthesis). The reference's endpoint discovery
+(``api.py:14-36``, a ``homes_index`` listing) is not reproduced: callers
+name their data sources (``api.Metadata(dbases=...)``).
 
 Nothing here touches executors: the catalog is small metadata. The 100 TB
 design splits cleanly — catalog on the driver, bytes on the cluster.
@@ -154,31 +156,8 @@ class ProjectLocator:
                 Dtype.BW: self.bigwig_urls}[dtype]()
 
 
-@dataclass
-class CatalogLocator:
-    """S4 (locator.py:167-187): one recount_project MD file per data source."""
-
-    root: str
-    organism: str
-    dbases: Sequence[str]
-
-    def urls(self) -> list[str]:
-        return [
-            posixpath.join(
-                self.root, self.organism, "data_sources", db, "metadata",
-                f"{db}.recount_project.MD.gz",
-            )
-            for db in self.dbases
-        ]
-
-
-def discover_data_sources(index_text: str) -> dict[str, str]:
-    """S1 (api.py:25-36): parse the homes_index line-per-datasource listing
-    into {basename: path}. Network fetch is the caller's concern (offline
-    harnesses pass fixture text)."""
-    out = {}
-    for line in index_text.splitlines():
-        line = line.strip()
-        if line:
-            out[posixpath.basename(line)] = line
-    return out
+def catalog_url(root: str, organism: str, dbase: str) -> str:
+    """S4 (locator.py:167-187): a data source's recount_project MD file."""
+    return posixpath.join(
+        root, organism, "data_sources", dbase, "metadata", f"{dbase}.recount_project.MD.gz"
+    )

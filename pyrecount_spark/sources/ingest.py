@@ -1,17 +1,15 @@
-"""Ingest: executor-parallel fetch of catalog URLs → partitioned Parquet lake.
+"""Ingest: executor-parallel fetch of catalog URLs into the file lake.
 
 Replaces the reference's download layer (SURVEY §2.1 S5/S6): an asyncio
 event loop with *unbounded* concurrency on one machine (accessor.py:107-120,
 the in-code TODO at :118) and a sequential ``urlretrieve`` loop
-(accessor.py:302-312). Here the manifest is an Arrow-built DataFrame and the
-fetch is one ``mapInArrow`` stage over it — concurrency is bounded by task
-slots, retries come from ``spark.task.maxFailures`` (S2's hand-rolled
-backoff, api.py:38-56, for free), and idempotence is a per-file exists
-check (accessor.py:112-113 semantics) or Parquet partition overwrite.
-
-100 TB stance: the lake is partitioned by the catalog coordinates
-(organism/dbase/project) so Catalyst prunes partitions the way the
-reference pre-filters URL lists (accessor.py:320-323 → SURVEY §4).
+(accessor.py:302-312). :func:`fetch_manifest` is the one fetch: one
+``mapInArrow`` stage, so concurrency is bounded by task slots. Each URL gets
+one attempt per call: a failed fetch is a status, not a failed task, so
+``spark.task.maxFailures`` never retries it, and the reference's backoff
+retry (api.py:38-56) is not reproduced (ROADMAP item 5). The lake keeps the
+fetched files as they are; the facade never calls :func:`land_parquet`
+(ROADMAP item 7).
 """
 
 from __future__ import annotations
@@ -19,7 +17,9 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
+
+from pyrecount_spark.session import local_frame
 
 # Fetcher signature: (url, dest_path) -> None. Injected so offline harnesses
 # and tests use file copies; production uses urllib. No aiohttp dependency.
@@ -38,29 +38,28 @@ class FetchError(OSError):
         )
 
 
-def fetch_manifest_df(
-    manifest: DataFrame,
+def fetch_manifest(
+    spark: SparkSession,
+    rows: Sequence[tuple[str, str]],
     fetcher: Fetcher | None = None,
-    num_tasks: int | None = None,
-) -> DataFrame:
-    """Fetch every missing manifest entry on executors; statuses as a DataFrame.
+) -> list[tuple[str, str, str]]:
+    """Fetch every ``(url, path)`` row whose file is missing; return
+    ``(url, path, status)`` per row.
 
-    One ``mapInArrow`` stage over the manifest: each task fetches its rows
-    and reports (url, path, status); existing files are skipped as
-    "cached" (idempotent re-run, accessor.py:112-113) and a failed fetch is
-    an ``"error: ..."`` status, not a failed job. ``num_tasks`` repartitions
-    the manifest first; otherwise a small Arrow-built manifest runs one task
-    per row up to the default parallelism. The status frame is returned
-    *distributed* — at lake scale (10⁷ files) callers persist it next to the
-    data instead of pulling it through the driver; only the convenience
-    facade (``fetch_manifest`` / ``api.Project.cache``) collects.
+    The rows become an Arrow-built local relation, so a small manifest runs
+    one task per row up to the default parallelism. An existing file is
+    "cached" (idempotent rerun, accessor.py:112-113), a new one "fetched".
+    A failed fetch does not stop the others: once every row ran,
+    :class:`FetchError` names each failed URL; the fetched files stay, so a
+    rerun fetches only the rest.
 
     Fetches are atomic: bytes land in a same-directory temp file
     (``{name}.part.XXXX``) and are ``os.replace``d into place on success, so
     an interrupted fetch can never leave a partial file that a later run
-    mistakes for "cached". A ``.part.`` file that a killed task leaves behind
-    is never loaded either: the ``api`` loaders read only the paths
-    ``cache`` fetches to.
+    mistakes for "cached". A worker killed mid-fetch never runs its cleanup,
+    so before fetching a row the task removes that destination's leftover
+    ``{name}.part.*`` files. This assumes one ``cache`` writes to a given
+    lake at a time.
 
     The executor closure is self-contained (no module-level references):
     cloudpickle ships it by value, so the job runs even on executors that
@@ -68,6 +67,7 @@ def fetch_manifest_df(
     """
 
     def fetch_batches(batches):
+        import glob as _glob
         import os as _os
         import tempfile as _tempfile
 
@@ -83,6 +83,8 @@ def fetch_manifest_df(
         def status(url: str, path: str) -> str:
             if _os.path.exists(path):
                 return "cached"
+            for stale in _glob.glob(_glob.escape(path) + ".part.*"):
+                _os.remove(stale)
             dirname = _os.path.dirname(path)
             _os.makedirs(dirname, exist_ok=True)
             fd, tmp = _tempfile.mkstemp(
@@ -106,24 +108,14 @@ def fetch_manifest_df(
                 [urls, paths, _pa.array(statuses, urls.type)], ["url", "path", "status"]
             )
 
-    manifest = manifest.select("url", "path")
-    if num_tasks:
-        manifest = manifest.repartition(num_tasks)
-    return manifest.mapInArrow(fetch_batches, "url string, path string, status string")
-
-
-def fetch_manifest(
-    manifest: DataFrame,
-    fetcher: Fetcher | None = None,
-    num_tasks: int | None = None,
-) -> list[tuple[str, str, str]]:
-    """Driver-side convenience over :func:`fetch_manifest_df` — collects the
-    status frame. Bounded by catalog size; lake-scale pipelines use the
-    DataFrame form and write statuses next to the data."""
-    return [
-        (r["url"], r["path"], r["status"])
-        for r in fetch_manifest_df(manifest, fetcher=fetcher, num_tasks=num_tasks).collect()
-    ]
+    fetched = local_frame(spark, rows, ["url", "path"]).mapInArrow(
+        fetch_batches, "url string, path string, status string"
+    )
+    statuses = [tuple(r) for r in fetched.collect()]
+    errors = {url: status for url, _, status in statuses if status.startswith("error")}
+    if errors:
+        raise FetchError(errors)
+    return statuses
 
 
 def land_parquet(

@@ -1,11 +1,13 @@
 """File readers (SURVEY.md §2.1 S7-S13), Spark-native.
 
 All readers return lazy DataFrames; gzip inputs decompress transparently
-(S13 — but .gz is non-splittable, so the ingest layer re-lands everything as
-partitioned Parquet; see sources/ingest.py).
+(S13). A .gz file is not splittable, so each one is a single task, and the
+facade reads the fetched gzip files on every load; landing them as Parquet
+is ROADMAP item 7.
 
-Header lines are read on the driver, which already globs these paths, so no
-reader starts a Spark job to learn a TSV header or a MatrixMarket dims line.
+Readers take explicit file paths (the facade's lake layout gives them) and
+read header lines on the driver, so no reader starts a Spark job to learn a
+TSV header or a MatrixMarket dims line.
 """
 
 from __future__ import annotations

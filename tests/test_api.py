@@ -428,6 +428,36 @@ def test_project_cache_gene_roundtrip(spark, lake, catalog_df, tmp_path):
     assert got[("g1", "s1")] == 10 and got[("g3", "s3")] == 9
 
 
+def test_project_cache_clears_a_killed_fetchs_temp_file(spark, catalog_df, tmp_path):
+    """A worker killed mid-fetch leaves its {name}.part.XXXX temp file; the
+    next cache of that file removes it, and only its own."""
+    gene = tmp_path / "killed_lake" / "sra" / "gene_sums"
+    (gene / "P1").mkdir(parents=True)
+    leftover = gene / "P1" / "sra.gene_sums.P1.G029.gz.part.abc"
+    leftover.write_text("gene_id\ts1\n")
+    other = gene / "human.gene_sums.G026.gtf.gz.part.xyz"  # another file's temp
+    other.write_text("")
+    proj = Project(
+        spark,
+        metadata=catalog_df.filter(F.col("project") == "P1"),
+        lake_dir=str(tmp_path / "killed_lake"),
+        dbase="sra",
+        annotation=Annotation.GENCODE_V29,
+    )
+
+    def fake_fetcher(url, dest):
+        with open(dest, "w") as fh:
+            fh.write(url)
+
+    statuses = proj.cache(
+        "https://example.org/release", dtypes=(Dtype.GENE,), fetcher=fake_fetcher
+    )
+    assert {s for _, _, s in statuses} == {"fetched"}
+    assert not leftover.exists()
+    assert other.exists()
+    assert sorted(p.name for p in (gene / "P1").iterdir()) == ["sra.gene_sums.P1.G029.gz"]
+
+
 @pytest.fixture
 def lake_copy(lake, tmp_path):
     """A per-test copy of the fixture lake that a test may damage."""

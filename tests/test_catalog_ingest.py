@@ -1,4 +1,4 @@
-"""Catalog URL synthesis, executor-parallel ingest, manifest (S1-S6, Q6)."""
+"""Catalog URL synthesis, executor-parallel ingest, manifest (S3-S6, Q6)."""
 
 from __future__ import annotations
 
@@ -7,25 +7,23 @@ import posixpath
 
 import pytest
 
-from pyrecount_spark.session import local_frame
 from pyrecount_spark.sources.catalog import (
     Annotation,
-    CatalogLocator,
     Dtype,
     ProjectLocator,
-    discover_data_sources,
+    catalog_url,
     shard2,
 )
-from pyrecount_spark.sources.ingest import fetch_manifest, land_parquet
+from pyrecount_spark.sources.ingest import FetchError, fetch_manifest, land_parquet
 
 
 def _dest(cache_dir, url):
     return os.path.join(cache_dir, posixpath.basename(url))
 
 
-def _manifest(spark, urls, cache_dir):
-    """(url, path) manifest as ``api`` builds it: an Arrow-built local frame."""
-    return local_frame(spark, [(u, _dest(cache_dir, u)) for u in urls], ["url", "path"])
+def _rows(urls, cache_dir):
+    """The (url, path) rows ``fetch_manifest`` takes."""
+    return [(u, _dest(cache_dir, u)) for u in urls]
 
 
 def _locator(**kw):
@@ -72,43 +70,53 @@ def test_junction_urls_triplet():
     assert [u.rsplit(".", 2)[-2] for u in urls] == ["ID", "MM", "RR"]
 
 
-def test_catalog_locator_and_discovery():
-    cat = CatalogLocator("https://example.org", "human", ["sra", "gtex"])
-    assert len(cat.urls()) == 2
-    srcs = discover_data_sources("data_sources/sra\ndata_sources/gtex\n\n")
-    assert srcs == {"sra": "data_sources/sra", "gtex": "data_sources/gtex"}
+def test_catalog_url_per_data_source():
+    # S4: one recount_project MD file per data source (locator.py:167-187)
+    assert catalog_url("https://example.org", "human", "gtex") == (
+        "https://example.org/human/data_sources/gtex/metadata/gtex.recount_project.MD.gz"
+    )
 
 
 def test_fetch_manifest_idempotent(spark, tmp_path):
     """S5/S6 exists-skip semantics, executor-side, with an injected fetcher."""
     cache = str(tmp_path / "cache")
     urls = [f"https://example.org/f{i}.txt" for i in range(3)]
-    manifest = _manifest(spark, urls, cache)
+    rows = _rows(urls, cache)
 
     def fake_fetcher(url: str, dest: str) -> None:
         with open(dest, "w") as fh:
             fh.write(url)
 
-    first = dict((u, s) for u, _, s in fetch_manifest(manifest, fake_fetcher))
+    first = dict((u, s) for u, _, s in fetch_manifest(spark, rows, fake_fetcher))
     assert set(first.values()) == {"fetched"}
-    second = dict((u, s) for u, _, s in fetch_manifest(manifest, fake_fetcher))
+    second = dict((u, s) for u, _, s in fetch_manifest(spark, rows, fake_fetcher))
     assert set(second.values()) == {"cached"}  # idempotent re-run
     assert open(_dest(cache, urls[0])).read() == urls[0]
 
 
 def test_fetch_manifest_per_file_errors(spark, tmp_path):
-    """One bad URL doesn't fail the job (unlike accessor.py:327-329's
-    silent None — the status row carries the error loudly)."""
-    manifest = _manifest(spark, ["https://x/ok", "https://x/bad"], str(tmp_path))
+    """One bad URL doesn't stop the others (unlike accessor.py:327-329's
+    silent None): FetchError names it with its error status, the good file
+    stays, and a rerun reports it "cached"."""
+    rows = _rows(["https://x/ok", "https://x/bad"], str(tmp_path))
 
     def flaky(url: str, dest: str) -> None:
         if url.endswith("bad"):
             raise IOError("boom")
         open(dest, "w").write("ok")
 
-    statuses = {u: s for u, _, s in fetch_manifest(manifest, flaky)}
-    assert statuses["https://x/ok"] == "fetched"
-    assert statuses["https://x/bad"].startswith("error")
+    with pytest.raises(FetchError) as err:
+        fetch_manifest(spark, rows, flaky)
+    [(failed_url, status)] = err.value.errors.items()
+    assert failed_url == "https://x/bad"
+    assert status.startswith("error") and "boom" in status
+    assert open(_dest(str(tmp_path), "https://x/ok")).read() == "ok"
+
+    def good(url: str, dest: str) -> None:
+        open(dest, "w").write("ok")
+
+    statuses = {u: s for u, _, s in fetch_manifest(spark, rows, good)}
+    assert statuses == {"https://x/ok": "cached", "https://x/bad": "fetched"}
 
 
 def test_land_parquet_partitioned(spark, tmp_path):
@@ -150,7 +158,7 @@ def test_fetch_is_atomic_on_failure(spark, tmp_path):
     into place only on success."""
     cache = str(tmp_path / "atomic")
     url = "https://example.org/big.bin"
-    manifest = _manifest(spark, [url], cache)
+    rows = _rows([url], cache)
     dest = _dest(cache, url)
 
     def dies_midway(u: str, d: str) -> None:
@@ -158,44 +166,26 @@ def test_fetch_is_atomic_on_failure(spark, tmp_path):
             fh.write("partial bytes")
         raise IOError("connection reset")
 
-    [( _, _, status )] = fetch_manifest(manifest, dies_midway)
-    assert status.startswith("error")
+    with pytest.raises(FetchError) as err:
+        fetch_manifest(spark, rows, dies_midway)
+    assert err.value.errors[url].startswith("error")
     assert not os.path.exists(dest)  # no truncated file left behind
     assert os.listdir(os.path.dirname(dest)) == []  # temp cleaned up too
 
     def good(u: str, d: str) -> None:
         open(d, "w").write("complete")
 
-    [( _, _, status2 )] = fetch_manifest(manifest, good)
+    [( _, _, status2 )] = fetch_manifest(spark, rows, good)
     assert status2 == "fetched"  # NOT 'cached': the partial never counted
     assert open(dest).read() == "complete"
-
-
-def test_fetch_manifest_df_is_distributed(spark, tmp_path):
-    """Lake-scale form: statuses come back as a DataFrame (written next to
-    the data at 10^7-file scale), not through the driver."""
-    from pyrecount_spark.sources.ingest import fetch_manifest_df
-
-    manifest = _manifest(
-        spark, [f"https://x/f{i}" for i in range(4)], str(tmp_path / "df")
-    )
-
-    def fake(u: str, d: str) -> None:
-        open(d, "w").write(u)
-
-    sdf = fetch_manifest_df(manifest, fake)
-    assert sdf.columns == ["url", "path", "status"]
-    out = str(tmp_path / "statuses")
-    sdf.write.mode("overwrite").parquet(out)  # statuses land in the lake
-    back = spark.read.parquet(out)
-    assert back.filter("status = 'fetched'").count() == 4
 
 
 def test_live_http_ingest_end_to_end(spark, tmp_path):
     """The reference's tests drive the full cache->load pipeline against the
     live recount3 service (test_accessor.py:14-353). Offline equivalent: a
     localhost http.server exercises the REAL default fetch (urllib) path
-    through fetch_manifest -> read -> land_parquet, including a 404 error row."""
+    through fetch_manifest -> read -> land_parquet, including a 404 that
+    FetchError names."""
     import http.server
     import socketserver
     import threading
@@ -221,12 +211,13 @@ def test_live_http_ingest_end_to_end(spark, tmp_path):
                 f"http://127.0.0.1:{port}/sra.recount_project.MD",
                 f"http://127.0.0.1:{port}/missing.MD",  # 404 path
             ]
-            manifest = _manifest(spark, urls, cache)
-            statuses = {u: s for u, _, s in fetch_manifest(manifest)}  # default urllib fetch
-            assert statuses[urls[0]] == "fetched"
-            assert statuses[urls[1]].startswith("error") and "404" in statuses[urls[1]]
+            with pytest.raises(FetchError) as err:
+                fetch_manifest(spark, _rows(urls, cache))  # default urllib fetch
+            [(failed_url, status)] = err.value.errors.items()
+            assert failed_url == urls[1]
+            assert status.startswith("error") and "404" in status
 
-            fetched = _dest(cache, urls[0])
+            fetched = _dest(cache, urls[0])  # the good URL's file stays
             df = read_tsv_strings(spark, fetched)
             lake = str(tmp_path / "http_lake")
             land_parquet(df.withColumn("study", df["study"]), lake, partition_by=["study"])
@@ -244,27 +235,42 @@ def test_fetch_runs_one_arrow_stage_sized_by_manifest(spark, tmp_path, job_group
     def fake(u: str, d: str) -> None:
         open(d, "w").write(u)
 
-    one = _manifest(spark, ["https://x/one"], str(tmp_path / "one"))
-    statuses, jobs, tasks = job_group("test-ingest-one-url", lambda: fetch_manifest(one, fake))
+    one = _rows(["https://x/one"], str(tmp_path / "one"))
+    statuses, jobs, tasks = job_group(
+        "test-ingest-one-url", lambda: fetch_manifest(spark, one, fake)
+    )
     assert [s for _, _, s in statuses] == ["fetched"]
     assert (len(jobs), tasks) == (1, 1)
 
-    five = _manifest(spark, [f"https://x/f{i}" for i in range(5)], str(tmp_path / "five"))
-    statuses, jobs, tasks = job_group("test-ingest-five-urls", lambda: fetch_manifest(five, fake))
+    five = _rows([f"https://x/f{i}" for i in range(5)], str(tmp_path / "five"))
+    statuses, jobs, tasks = job_group(
+        "test-ingest-five-urls", lambda: fetch_manifest(spark, five, fake)
+    )
     assert len(statuses) == 5
     assert (len(jobs), tasks) == (1, min(5, spark.sparkContext.defaultParallelism))
-    # num_tasks repartitions the manifest first; the rerun finds every file
-    assert {s for _, _, s in fetch_manifest(five, fake, num_tasks=2)} == {"cached"}
 
 
-def test_manifest_is_local_relation(spark, tmp_path):
-    manifest = _manifest(spark, ["https://x/a", "https://x/b"], str(tmp_path))
-    assert manifest._jdf.queryExecution().optimizedPlan().nodeName() == "LocalRelation"
+def test_manifest_is_local_relation(spark, tmp_path, monkeypatch):
+    """The manifest ``fetch_manifest`` fetches over is a JVM LocalRelation
+    with the (url, path) string columns, an empty one included."""
+    manifests = []
+    frame_type = type(spark.range(0))  # the session's concrete DataFrame class
+    map_in_arrow = frame_type.mapInArrow
+
+    def spy(self, *args, **kwargs):
+        plan = self._jdf.queryExecution().optimizedPlan().nodeName()
+        manifests.append((self.dtypes, plan))
+        return map_in_arrow(self, *args, **kwargs)
+
+    def fake(u: str, d: str) -> None:
+        open(d, "w").write(u)
+
+    monkeypatch.setattr(frame_type, "mapInArrow", spy)
+    fetch_manifest(spark, _rows(["https://x/a", "https://x/b"], str(tmp_path)), fake)
+    fetch_manifest(spark, [], fake)
+    assert manifests == [([("url", "string"), ("path", "string")], "LocalRelation")] * 2
 
 
-def test_empty_manifest(spark, tmp_path):
-    """An empty URL list keeps its (url, path) string schema and fetches
-    nothing."""
-    manifest = _manifest(spark, [], str(tmp_path))
-    assert manifest.columns == ["url", "path"]
-    assert fetch_manifest(manifest) == []
+def test_empty_manifest(spark):
+    """An empty URL list fetches nothing and raises nothing."""
+    assert fetch_manifest(spark, []) == []
