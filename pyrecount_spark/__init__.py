@@ -9,9 +9,8 @@ Design stance (SURVEY.md §7):
   canonical form; wide matrices are a presentation-layer pivot.
 - Sparse matrices stay COO — never densified.
 - Zero row-at-a-time Python UDFs. Python runs on executors only in the
-  ``applyInPandas`` grouped-map queries, the ``applyInPandasWithState`` /
-  ``transformWithStateInPandas`` streaming operators and the ``mapInArrow``
-  fetch.
+  ``applyInPandas`` grouped-map queries and the ``applyInPandasWithState`` /
+  ``transformWithStateInPandas`` streaming operators.
 - Small dimension sides are broadcast; big joins shuffle on explicit keys.
 """
 

@@ -31,10 +31,11 @@ Differences from the reference, by design (SURVEY §1.3):
   (accessor.py:327-335 quirks intentionally not replicated); a load raises
   ``FileNotFoundError`` naming each project and file missing from the lake;
 - ``cache`` is one ``ingest.fetch_manifest`` call over the URLs one
-  locator builds for the whole selection; it raises ``FetchError`` naming
-  every URL that failed;
-- driver-sized frames (manifests) are built from Arrow as JVM local
-  relations, so they start no Python worker task.
+  locator builds for the whole selection: a bounded driver thread pool
+  that starts no Spark job and tries each URL up to 3 times; it raises
+  ``FetchError`` naming every URL that failed;
+- driver-sized frames (the bigwig manifest) are built from Arrow as JVM
+  local relations, so they start no Python worker task.
 
 Lake layout (FIXTURES.md): ``_lake_path`` is the one rule for where a URL
 lands, ``{lake}/{dbase}/{dtype}/{project}/{name}`` (catalogs and the shared
@@ -121,7 +122,7 @@ class Metadata:
     def cache(self, root: str, fetcher=None) -> list[tuple[str, str, str]]:
         """Reference-parity ingest (``Metadata.cache()``, accessor.py:300-313):
         synthesize the per-data-source catalog URLs and fetch the missing
-        files into the lake on executors (idempotent — existing files report
+        files into the lake (idempotent — existing files report
         "cached"). Returns per-file (url, path, status); raises
         :class:`FetchError` if any fetch failed."""
         return fetch_manifest(self.spark, self._lake_files(root), fetcher)
@@ -169,11 +170,10 @@ class Project:
     ) -> list[tuple[str, str, str]]:
         """``Project.cache(dtypes)``: synthesize every project's URLs for
         the requested dtypes and fetch the missing files to their
-        :meth:`_lake_files` paths on executors. Idempotent; returns per-file
+        :meth:`_lake_files` paths. Idempotent; returns per-file
         (url, path, status); raises :class:`FetchError` if any fetch failed."""
         rows = [(url, path) for dtype in dtypes for _, url, path in self._lake_files(dtype, root)]
-        # dedup: the shared GTF is fetched once
-        return fetch_manifest(self.spark, list(dict.fromkeys(rows)), fetcher)
+        return fetch_manifest(self.spark, rows, fetcher)  # which dedups the shared GTF
 
     # ---- loader registry (Q10, accessor.py:63-74) ----
     def load(self, dtype: Dtype):

@@ -2,7 +2,7 @@
 
 Reproduces the reference's addressing scheme (SURVEY.md §1.1, §2.1 S3-S4)
 as a pure-Python driver-side catalog whose *output* is the URL list that
-the Spark fetch (sources/ingest.py) downloads. Semantics sources:
+the fetch (sources/ingest.py) downloads. Semantics sources:
 ``/root/reference/src/pyrecount/models.py:7-40`` (enums),
 ``locator.py:7-187`` (URL synthesis). The reference's endpoint discovery
 (``api.py:14-36``, a ``homes_index`` listing) is not reproduced: callers

@@ -1,29 +1,36 @@
-"""Ingest: executor-parallel fetch of catalog URLs into the file lake.
+"""Ingest: fetch catalog URLs into the file lake on a bounded driver thread pool.
 
 Replaces the reference's download layer (SURVEY §2.1 S5/S6): an asyncio
 event loop with *unbounded* concurrency on one machine (accessor.py:107-120,
 the in-code TODO at :118) and a sequential ``urlretrieve`` loop
-(accessor.py:302-312). :func:`fetch_manifest` is the one fetch: one
-``mapInArrow`` stage, so concurrency is bounded by task slots. Each URL gets
-one attempt per call: a failed fetch is a status, not a failed task, so
-``spark.task.maxFailures`` never retries it, and the reference's backoff
-retry (api.py:38-56) is not reproduced (ROADMAP item 5). The lake keeps the
-fetched files as they are; the facade never calls :func:`land_parquet`
-(ROADMAP item 7).
+(accessor.py:302-312). :func:`fetch_manifest` is the one fetch. It runs on
+the driver, which already reads every lake file's header, so the lake must be
+driver-visible anyway, and it starts no Spark job: a few dozen file copies
+are not data-parallel work. At most one thread per CPU this process may use
+fetches at a time, the count ``session.get_spark`` sizes ``local[N]`` by.
+Each URL gets up to ``ATTEMPTS`` tries with the reference's ``2**attempt``
+second backoff between them (api.py:38-56). The lake keeps the fetched files
+as they are; the facade never calls :func:`land_parquet` (ROADMAP item 7).
 """
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from time import sleep
 from typing import Sequence
+from urllib.request import urlretrieve
 
 from pyspark.sql import DataFrame, SparkSession
-
-from pyrecount_spark.session import local_frame
 
 # Fetcher signature: (url, dest_path) -> None. Injected so offline harnesses
 # and tests use file copies; production uses urllib. No aiohttp dependency.
 Fetcher = Callable[[str, str], None]
+
+ATTEMPTS = 3  # tries per URL and call (reference api.py:38-56)
 
 
 class FetchError(OSError):
@@ -38,80 +45,63 @@ class FetchError(OSError):
         )
 
 
+def _status(fetch: Fetcher, url: str, path: str) -> str:
+    """Fetch one file unless it exists; its status."""
+    if os.path.exists(path):
+        return "cached"
+    for stale in glob.glob(glob.escape(path) + ".part.*"):
+        os.remove(stale)
+    dirname = os.path.dirname(path)
+    os.makedirs(dirname, exist_ok=True)
+    for attempt in range(ATTEMPTS):
+        fd, tmp = tempfile.mkstemp(dir=dirname, prefix=os.path.basename(path) + ".part.")
+        os.close(fd)
+        try:
+            fetch(url, tmp)
+            os.replace(tmp, path)  # atomic within the same directory
+            return "fetched"
+        except Exception as e:  # noqa: BLE001 - per-file status, the others go on
+            error = f"error: {e}"
+        finally:
+            if os.path.exists(tmp):
+                os.remove(tmp)
+        if attempt + 1 < ATTEMPTS:
+            sleep(2**attempt)
+    return error
+
+
 def fetch_manifest(
     spark: SparkSession,
     rows: Sequence[tuple[str, str]],
     fetcher: Fetcher | None = None,
 ) -> list[tuple[str, str, str]]:
     """Fetch every ``(url, path)`` row whose file is missing; return
-    ``(url, path, status)`` per row.
+    ``(url, path, status)`` per distinct row. ``spark`` is unused: the fetch
+    runs on the driver and starts no Spark job.
 
-    The rows become an Arrow-built local relation, so a small manifest runs
-    one task per row up to the default parallelism. An existing file is
-    "cached" (idempotent rerun, accessor.py:112-113), a new one "fetched".
-    A failed fetch does not stop the others: once every row ran,
-    :class:`FetchError` names each failed URL; the fetched files stay, so a
-    rerun fetches only the rest.
+    Rows are fetched on a thread pool of ``min(len(rows), CPUs)`` threads,
+    so ``fetcher`` is called from several driver threads at once and must be
+    thread-safe (``urlretrieve`` and a file copy both are). An existing file
+    is "cached" (idempotent rerun, accessor.py:112-113), a new one
+    "fetched". A failed attempt is retried after 1 s, then 2 s; a URL that
+    fails all ``ATTEMPTS`` does not stop the others: once every row ran,
+    :class:`FetchError` names each failed URL with its last error; the
+    fetched files stay, so a rerun fetches only the rest.
 
-    Fetches are atomic: bytes land in a same-directory temp file
-    (``{name}.part.XXXX``) and are ``os.replace``d into place on success, so
-    an interrupted fetch can never leave a partial file that a later run
-    mistakes for "cached". A worker killed mid-fetch never runs its cleanup,
-    so before fetching a row the task removes that destination's leftover
-    ``{name}.part.*`` files. This assumes one ``cache`` writes to a given
-    lake at a time.
-
-    The executor closure is self-contained (no module-level references):
-    cloudpickle ships it by value, so the job runs even on executors that
-    don't have this package on PYTHONPATH.
+    Fetches are atomic: each attempt's bytes land in a fresh same-directory
+    temp file (``{name}.part.XXXX``) that is ``os.replace``d into place on
+    success and removed on failure, so an interrupted fetch can never leave
+    a partial file that a later run mistakes for "cached". A process killed
+    mid-fetch never runs that cleanup, so before fetching a row its
+    destination's leftover ``{name}.part.*`` files are removed. This assumes
+    one ``cache`` writes to a given lake at a time.
     """
-
-    def fetch_batches(batches):
-        import glob as _glob
-        import os as _os
-        import tempfile as _tempfile
-
-        import pyarrow as _pa
-
-        def _default(url: str, dest: str) -> None:
-            from urllib.request import urlretrieve
-
-            urlretrieve(url, dest)  # noqa: S310
-
-        fetch = fetcher or _default
-
-        def status(url: str, path: str) -> str:
-            if _os.path.exists(path):
-                return "cached"
-            for stale in _glob.glob(_glob.escape(path) + ".part.*"):
-                _os.remove(stale)
-            dirname = _os.path.dirname(path)
-            _os.makedirs(dirname, exist_ok=True)
-            fd, tmp = _tempfile.mkstemp(
-                dir=dirname, prefix=_os.path.basename(path) + ".part."
-            )
-            _os.close(fd)
-            try:
-                fetch(url, tmp)
-                _os.replace(tmp, path)  # atomic within the same directory
-                return "fetched"
-            except Exception as e:  # noqa: BLE001 - per-file status, job continues
-                return f"error: {e}"
-            finally:
-                if _os.path.exists(tmp):
-                    _os.remove(tmp)
-
-        for batch in batches:
-            urls, paths = batch.column(0), batch.column(1)
-            statuses = [status(u, p) for u, p in zip(urls.to_pylist(), paths.to_pylist())]
-            yield _pa.RecordBatch.from_arrays(
-                [urls, paths, _pa.array(statuses, urls.type)], ["url", "path", "status"]
-            )
-
-    fetched = local_frame(spark, rows, ["url", "path"]).mapInArrow(
-        fetch_batches, "url string, path string, status string"
-    )
-    statuses = [tuple(r) for r in fetched.collect()]
+    rows = list(dict.fromkeys(rows))
+    if not rows:
+        return []
+    fetch = fetcher or urlretrieve
+    with ThreadPoolExecutor(min(len(rows), len(os.sched_getaffinity(0)))) as pool:
+        statuses = list(pool.map(lambda row: (*row, _status(fetch, *row)), rows))
     errors = {url: status for url, _, status in statuses if status.startswith("error")}
     if errors:
         raise FetchError(errors)

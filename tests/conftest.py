@@ -41,3 +41,13 @@ def job_group(spark):
         return out, jobs, tasks
 
     return run
+
+
+@pytest.fixture
+def fetch_sleeps(monkeypatch):
+    """The fetch's retry backoff, recorded in seconds instead of slept."""
+    from pyrecount_spark.sources import ingest
+
+    sleeps = []
+    monkeypatch.setattr(ingest, "sleep", sleeps.append)
+    return sleeps

@@ -458,6 +458,34 @@ def test_project_cache_clears_a_killed_fetchs_temp_file(spark, catalog_df, tmp_p
     assert sorted(p.name for p in (gene / "P1").iterdir()) == ["sra.gene_sums.P1.G029.gz"]
 
 
+def test_cache_starts_no_spark_job(spark, catalog_df, tmp_path, job_group):
+    """Metadata.cache starts no Spark job, and Project.cache of every dtype
+    none once its project -> samples map is memoized: the fetch runs on
+    driver threads."""
+    root = "https://example.org/release"
+
+    def fake_fetcher(url, dest):
+        with open(dest, "w") as fh:
+            fh.write(url)
+
+    md = Metadata(spark, str(tmp_path / "md_lake"), dbases=("sra", "gtex"))
+    statuses, jobs, tasks = job_group(
+        "test-api-metadata-cache", lambda: md.cache(root, fetcher=fake_fetcher)
+    )
+    assert [s for _, _, s in statuses] == ["fetched"] * 2
+    assert (jobs, tasks) == ([], 0)
+
+    proj = Project(spark, metadata=catalog_df, lake_dir=str(tmp_path / "proj_lake"),
+                   dbase="sra", annotation=Annotation.GENCODE_V29)
+    assert proj.samples_by_project == {"P1": ["s1", "s2"], "P2": ["s3"]}
+    statuses, jobs, tasks = job_group(
+        "test-api-project-cache",
+        lambda: proj.cache(root, dtypes=tuple(Dtype), fetcher=fake_fetcher),
+    )
+    assert statuses and {s for _, _, s in statuses} == {"fetched"}
+    assert (jobs, tasks) == ([], 0)
+
+
 @pytest.fixture
 def lake_copy(lake, tmp_path):
     """A per-test copy of the fixture lake that a test may damage."""
@@ -617,7 +645,7 @@ def test_bigwig_missing_dir_raises_naming_project(spark, lake_copy, catalog_df):
         proj.load(Dtype.BW)
 
 
-def test_project_cache_raises_on_failed_fetch_then_resumes(spark, catalog_df, tmp_path):
+def test_project_cache_raises_on_failed_fetch_then_resumes(spark, catalog_df, tmp_path, fetch_sleeps):
     """Project.cache runs the whole manifest, then raises FetchError naming
     the failed URL; the files that did fetch stay, so a rerun reports them
     "cached" and fetches only the one that failed."""

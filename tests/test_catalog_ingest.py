@@ -1,4 +1,4 @@
-"""Catalog URL synthesis, executor-parallel ingest, manifest (S3-S6, Q6)."""
+"""Catalog URL synthesis, the bounded driver-pool fetch and its retry (S2-S6, Q6)."""
 
 from __future__ import annotations
 
@@ -78,7 +78,7 @@ def test_catalog_url_per_data_source():
 
 
 def test_fetch_manifest_idempotent(spark, tmp_path):
-    """S5/S6 exists-skip semantics, executor-side, with an injected fetcher."""
+    """S5/S6 exists-skip semantics with an injected fetcher."""
     cache = str(tmp_path / "cache")
     urls = [f"https://example.org/f{i}.txt" for i in range(3)]
     rows = _rows(urls, cache)
@@ -94,7 +94,7 @@ def test_fetch_manifest_idempotent(spark, tmp_path):
     assert open(_dest(cache, urls[0])).read() == urls[0]
 
 
-def test_fetch_manifest_per_file_errors(spark, tmp_path):
+def test_fetch_manifest_per_file_errors(spark, tmp_path, fetch_sleeps):
     """One bad URL doesn't stop the others (unlike accessor.py:327-329's
     silent None): FetchError names it with its error status, the good file
     stays, and a rerun reports it "cached"."""
@@ -152,7 +152,7 @@ def test_bigwig_urls_reference_nesting():
     )
 
 
-def test_fetch_is_atomic_on_failure(spark, tmp_path):
+def test_fetch_is_atomic_on_failure(spark, tmp_path, fetch_sleeps):
     """ADVICE fix: an interrupted fetch must not leave a partial file that a
     later run mistakes for 'cached' — bytes go to a temp path and are renamed
     into place only on success."""
@@ -180,7 +180,7 @@ def test_fetch_is_atomic_on_failure(spark, tmp_path):
     assert open(dest).read() == "complete"
 
 
-def test_live_http_ingest_end_to_end(spark, tmp_path):
+def test_live_http_ingest_end_to_end(spark, tmp_path, fetch_sleeps):
     """The reference's tests drive the full cache->load pipeline against the
     live recount3 service (test_accessor.py:14-353). Offline equivalent: a
     localhost http.server exercises the REAL default fetch (urllib) path
@@ -228,10 +228,9 @@ def test_live_http_ingest_end_to_end(spark, tmp_path):
             httpd.shutdown()
 
 
-def test_fetch_runs_one_arrow_stage_sized_by_manifest(spark, tmp_path, job_group):
-    """The fetch is one mapInArrow stage over an Arrow-built manifest: a
-    1-URL manifest runs one job of one task, a 5-URL manifest one task per
-    URL up to the default parallelism (no Python re-serialization stages)."""
+def test_fetch_starts_no_spark_job(spark, tmp_path, job_group):
+    """The fetch runs on driver threads: a 1-URL and a 5-URL manifest each
+    start no Spark job and no task."""
     def fake(u: str, d: str) -> None:
         open(d, "w").write(u)
 
@@ -240,35 +239,86 @@ def test_fetch_runs_one_arrow_stage_sized_by_manifest(spark, tmp_path, job_group
         "test-ingest-one-url", lambda: fetch_manifest(spark, one, fake)
     )
     assert [s for _, _, s in statuses] == ["fetched"]
-    assert (len(jobs), tasks) == (1, 1)
+    assert (jobs, tasks) == ([], 0)
 
     five = _rows([f"https://x/f{i}" for i in range(5)], str(tmp_path / "five"))
     statuses, jobs, tasks = job_group(
         "test-ingest-five-urls", lambda: fetch_manifest(spark, five, fake)
     )
-    assert len(statuses) == 5
-    assert (len(jobs), tasks) == (1, min(5, spark.sparkContext.defaultParallelism))
+    assert [s for _, _, s in statuses] == ["fetched"] * 5
+    assert (jobs, tasks) == ([], 0)
 
 
-def test_manifest_is_local_relation(spark, tmp_path, monkeypatch):
-    """The manifest ``fetch_manifest`` fetches over is a JVM LocalRelation
-    with the (url, path) string columns, an empty one included."""
-    manifests = []
-    frame_type = type(spark.range(0))  # the session's concrete DataFrame class
-    map_in_arrow = frame_type.mapInArrow
+@pytest.mark.parametrize("per_cpu", [0.5, 2])
+def test_fetch_concurrency_reaches_and_keeps_the_cpu_bound(spark, tmp_path, fetch_sleeps, per_cpu):
+    """At most min(rows, CPUs) fetches are in flight, and that many are: a
+    barrier of that size only trips when every one of them is waiting in
+    it, and a broken barrier fails the fetch."""
+    import threading
 
-    def spy(self, *args, **kwargs):
-        plan = self._jdf.queryExecution().optimizedPlan().nodeName()
-        manifests.append((self.dtypes, plan))
-        return map_in_arrow(self, *args, **kwargs)
+    cpus = len(os.sched_getaffinity(0))
+    n = max(1, int(cpus * per_cpu))
+    bound = min(n, cpus)
+    barrier = threading.Barrier(bound, timeout=30)
+    lock = threading.Lock()
+    in_flight, peak = 0, 0
 
-    def fake(u: str, d: str) -> None:
-        open(d, "w").write(u)
+    def counting(u: str, d: str) -> None:
+        nonlocal in_flight, peak
+        with lock:
+            in_flight += 1
+            peak = max(peak, in_flight)
+        try:
+            barrier.wait()
+            open(d, "w").write(u)
+        finally:
+            with lock:
+                in_flight -= 1
 
-    monkeypatch.setattr(frame_type, "mapInArrow", spy)
-    fetch_manifest(spark, _rows(["https://x/a", "https://x/b"], str(tmp_path)), fake)
-    fetch_manifest(spark, [], fake)
-    assert manifests == [([("url", "string"), ("path", "string")], "LocalRelation")] * 2
+    rows = _rows([f"https://x/f{i}" for i in range(n)], str(tmp_path))
+    statuses = fetch_manifest(spark, rows, counting)
+    assert [s for _, _, s in statuses] == ["fetched"] * n
+    assert peak == bound
+    assert fetch_sleeps == []
+
+
+def test_fetch_retries_with_backoff_then_succeeds(spark, tmp_path, fetch_sleeps):
+    """A fetcher that fails twice then succeeds reports "fetched" after 3
+    calls, sleeping 1 s then 2 s (reference api.py:38-56); each failed
+    attempt's temp file is gone."""
+    url = "https://x/flaky"
+    calls = []
+
+    def twice(u: str, d: str) -> None:
+        calls.append(d)
+        open(d, "w").write("partial" if len(calls) < 3 else "complete")
+        if len(calls) < 3:
+            raise IOError(f"transient {len(calls)}")
+
+    [(_, dest, status)] = fetch_manifest(spark, _rows([url], str(tmp_path)), twice)
+    assert status == "fetched"
+    assert len(calls) == 3 and len(set(calls)) == 3  # a fresh temp file each try
+    assert fetch_sleeps == [1, 2]
+    assert os.listdir(tmp_path) == ["flaky"]
+    assert open(dest).read() == "complete"
+
+
+def test_fetch_gives_up_after_three_attempts(spark, tmp_path, fetch_sleeps):
+    """A fetcher that always fails is called exactly 3 times; FetchError
+    names the URL with the last attempt's error and no temp file stays."""
+    url = "https://x/down"
+    calls = []
+
+    def down(u: str, d: str) -> None:
+        calls.append(u)
+        raise IOError(f"503 attempt {len(calls)}")
+
+    with pytest.raises(FetchError) as err:
+        fetch_manifest(spark, _rows([url], str(tmp_path)), down)
+    assert calls == [url] * 3
+    assert fetch_sleeps == [1, 2]
+    assert err.value.errors == {url: "error: 503 attempt 3"}
+    assert os.listdir(tmp_path) == []
 
 
 def test_empty_manifest(spark):
